@@ -29,7 +29,7 @@ import scala.jdk.CollectionConverters._
   * STATE partitions are deliberately NOT auto-derived: a streaming
   * query's state partition count is baked into its checkpoint at first
   * start, so a data-proportional default would silently break resume.
-  * Gates pin `spark.graft.statePartitions` (8) for determinism;
+  * Gates pin 8 state partitions (`streaming.Gates.StatePartitions`);
   * `statePartitions(estimatedKeys)` below is the deploy-time calculator
   * for NEW queries, and resizing an existing one goes through the q240
   * statestore-reader migration.
@@ -115,27 +115,31 @@ object Tuning {
     else df.repartition(cores, key)
   }
 
-  /** Session-level checkpoint-I/O defaults for the driver mains (Bench /
-    * Verify / BenchOne) — the same two Spark-4.1 costs the streaming-gate
-    * chokepoint (`Extensions.withStatePartitions`) already disables, applied
-    * at the session so the `statestore`-SOURCE reads that run OUTSIDE a gate
-    * body (q229-q241 state introspection, TWS bootstrap snapshot reads)
-    * resolve the same manager: with the session default left on, every such
-    * read went through ChecksumCheckpointFileManager — one extra existence
-    * probe + WARN per state file opened, and a per-manager thread pool. The
-    * checksum side is scale-independent (state-file integrity is already
-    * covered by RocksDB block checksums; on an object store the paired
-    * checksum object doubles PUTs/GETs); the FileSystem-based manager is
-    * local-FS/HDFS-correct and set here because the driver surfaces only
-    * ever checkpoint to local temp dirs — a production job checkpointing to
-    * an object store keeps Spark's default manager. Re-enable checksums
-    * with SPARK_GRAFT_CHECKPOINT_CHECKSUM=1 (same switch the gate honors). */
-  def applyCheckpointIoDefaults(s: org.apache.spark.sql.SparkSession): Unit = {
-    if (!sys.env.get("SPARK_GRAFT_CHECKPOINT_CHECKSUM").contains("1"))
-      s.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-    s.conf.set("spark.sql.streaming.checkpointFileManagerClass",
-      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
-  }
+  /** Checkpoint-I/O conf for local-FS checkpoints, set at session level
+    * by the driver mains (Bench / Verify / BenchOne) and per query start
+    * by [[graft.streaming.Gates]]. Two Spark-4.1 costs, measured by
+    * thread-sampling the gate runs (q216 4.6→3.7 s, q222 6.8→5.3 s,
+    * q228 5.8→4.9 s, q235 7.4→6.7 s):
+    *  1. fileChecksum (new in 4.1, default on) writes and reads a paired
+    *     checksum object for every checkpoint file, doubling file count and
+    *     round-trips at any scale. State-file integrity is already covered
+    *     by RocksDB's block checksums. Re-enable with
+    *     SPARK_GRAFT_CHECKPOINT_CHECKSUM=1.
+    *  2. The default FileContext-based manager on a file: scheme forks a
+    *     subprocess per atomic rename. The FileSystem-based manager renames
+    *     in the JVM; its caveat (rename is not atomic on some object
+    *     stores) does not apply to local FS or HDFS, so a production job
+    *     checkpointing to an object store keeps Spark's default.
+    * At session level this also covers the `statestore`-source reads that
+    * run outside a gate (q229-q241 introspection, TWS snapshot reads). */
+  private[graft] val checkpointIoConf: Seq[(String, String)] =
+    (if (sys.env.get("SPARK_GRAFT_CHECKPOINT_CHECKSUM").contains("1")) Nil
+     else Seq("spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")) :+
+      ("spark.sql.streaming.checkpointFileManagerClass" ->
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
+
+  def applyCheckpointIoDefaults(s: org.apache.spark.sql.SparkSession): Unit =
+    checkpointIoConf.foreach { case (k, v) => s.conf.set(k, v) }
 
   /** Deploy-time state partition calculator for a NEW streaming query:
     * RocksDB opens one native store per state partition per micro-batch

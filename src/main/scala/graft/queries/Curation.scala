@@ -865,17 +865,11 @@ object Curation {
           .write.mode("overwrite").parquet(dir)
     }
     val schema = Tables.documents(s, d).schema
-    Extensions.withStatePartitions(s) {
-      val src = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(dir)
-      val q = bpeTokenCountsOn(src)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      Extensions.awaitBounded(q, name)
-    }
-    bpeVocabRank(s.table(name))
+    bpeVocabRank(graft.streaming.Gates.run(s, name,
+        graft.streaming.Gates.Memory("complete")) {
+      bpeTokenCountsOn(
+        s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dir))
+    }.rows)
   }
 
   lazy val bpeEncodeVocabSql: String = s"""

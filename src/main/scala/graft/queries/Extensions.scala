@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, Multimodal, Similarity}
+import graft.streaming.Gates
 
 /** Training-data pipeline extension inventory: dedup, similarity search,
   * text analysis, multimodal plumbing — over the documents/embeddings
@@ -359,191 +360,10 @@ object Extensions {
           .write.mode("overwrite").parquet(dir)
     }
     val schema = Tables.embeddings(s, d).schema
-    withStatePartitions(s) {
-      val src = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(dir)
-      val q = embeddingAuditOn(src)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      awaitBounded(q, name)
-    }
-    detachMemorySink(s, name)
-  }
-
-  /** Copy a memory-sink table into a plain local DataFrame and DROP the
-    * named temp view, so repeated gate runs in one session don't
-    * accumulate unbounded in-memory result tables (each run registers a
-    * fresh counter-suffixed sink). Sink tables here are report-sized
-    * (audit rows, count matrices), so the copy is a metadata-scale
-    * collect. */
-  /** Bounded replacement for bare `awaitTermination()`: a non-terminating
-    * gate must fail ITS OWN row loudly, never hold the whole artifact
-    * chain (correctness run, bench, sbt test) hostage to one bad plan.
-    * AvailableNow gates at gate SF finish in seconds; the default ceiling
-    * is a ~20× safety margin over the heaviest gate (q234 medians ~20 s at
-    * sf0.1) AND survives the documented 1.2–2× host-window swing plus a
-    * larger SF — a healthy slow run must never read as "did not
-    * terminate" (round-13 ADVICE). Overridable per environment via
-    * `SPARK_GRAFT_GATE_TIMEOUT_MS` for deployments running gates at
-    * production SF. `awaitTermination(ms)` rethrows a failed query's
-    * exception and returns false on timeout; `stop()` in finally tears
-    * down the spinning execution either way. */
-  private[graft] val defaultGateTimeoutMs: Long =
-    sys.env.get("SPARK_GRAFT_GATE_TIMEOUT_MS").map(_.toLong).getOrElse(420000L)
-
-  private[graft] def awaitBounded(
-      q: org.apache.spark.sql.streaming.StreamingQuery,
-      name: String, timeoutMs: Long = defaultGateTimeoutMs): Unit =
-    try require(q.awaitTermination(timeoutMs),
-      s"streaming gate '$name' did not terminate within $timeoutMs ms")
-    finally q.stop()
-
-  /** Serializes every session-global SQL-conf override the streaming-gate
-    * wrappers perform (round-13 ADVICE, medium): without it a query running
-    * concurrently in the same SparkSession silently picks up the reduced
-    * partition count or the RocksDB provider, and two overlapping wrappers
-    * restore each other's stale values, leaking the override permanently.
-    * The lock covers set → body → restore, so the conf mutation is scoped
-    * to exactly one gate at a time. Lock ordering: gates that also take
-    * `streamReplayLock`/`transReplayLock` always do so BEFORE entering a
-    * wrapper (or around the whole wrapper), never the reverse — no cycle. */
-  private val stateConfLock = new Object
-
-  /** Run `body` with the RocksDB state-store provider (transformWithState
-    * rejects the default HDFS provider) and a REDUCED shuffle-partition
-    * count for the stateful stage: each micro-batch opens one RocksDB
-    * instance per state partition, so at gate SF the session default of 32
-    * instances is pure fixed overhead (native store open/commit/close ×32
-    * per batch dominates the gate's whole cost), while results are
-    * partition-count-invariant. Production sizes state partitions to the
-    * keyspace; the gates size them to the fixture (see
-    * [[defaultStatePartitions]]). Both confs are restored after; the
-    * set/restore pair runs under [[stateConfLock]]. */
-  private[graft] def withRocksDbTws[T](s: SparkSession,
-                                       partitions: Int = defaultStatePartitions)
-                                      (body: => T): T =
-    stateConfLock.synchronized {
-      val providerKey = "spark.sql.streaming.stateStore.providerClass"
-      // changelog checkpointing: commit the per-batch CHANGELOG instead of
-      // uploading a full RocksDB snapshot every micro-batch (snapshots
-      // still happen, asynchronously, every N batches) — the recommended
-      // production setting for RocksDB state, and measured here to trim
-      // the per-batch commit share of the TWS gate floors
-      val changelogKey =
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-      // numTotalStateRows bookkeeping costs one RocksDB GET per put/merge/
-      // delete (RocksDB.scala gates the lookup on trackTotalNumberOfRows)
-      // — thread samples of the q235 bulk-load stage put RocksDB.get at
-      // 26% of stateful-task CPU, most of it under put/remove/clear
-      // metric paths. The Spark docs recommend disabling it for
-      // write-heavy state; it changes ONLY the numTotalStateRows metric,
-      // never results. Production deployments that watch that metric can
-      // re-enable it per query.
-      val trackRowsKey =
-        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
-      val priorP = s.conf.getOption(providerKey)
-      val priorC = s.conf.getOption(changelogKey)
-      val priorT = s.conf.getOption(trackRowsKey)
-      s.conf.set(providerKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      s.conf.set(changelogKey, "true")
-      s.conf.set(trackRowsKey, "false")
-      try withStatePartitions(s, partitions)(body)
-      finally {
-        priorP match {
-          case Some(v) => s.conf.set(providerKey, v)
-          case None    => s.conf.unset(providerKey)
-        }
-        priorC match {
-          case Some(v) => s.conf.set(changelogKey, v)
-          case None    => s.conf.unset(changelogKey)
-        }
-        priorT match {
-          case Some(v) => s.conf.set(trackRowsKey, v)
-          case None    => s.conf.unset(trackRowsKey)
-        }
-      }
-    }
-
-  /** Stateful-stage partition sizing for the gates. 8 fits the gate-SF
-    * fixtures (measured: at gate SF the per-partition store open/commit
-    * cost dominates, results are partition-count-invariant — round-13
-    * calibration). Production jobs must NOT inherit this number: size
-    * state partitions to the keyspace (rule of thumb: live keys ×
-    * per-key state ÷ target store size per partition, rounded to the
-    * executor-core multiple), and set it via
-    * `spark.graft.statePartitions` — the gates read the override so a
-    * deployment can re-run them at its own sizing without a rebuild. */
-  private[graft] def defaultStatePartitions: Int =
-    sys.props.get("spark.graft.statePartitions")
-      .orElse(sys.env.get("SPARK_GRAFT_STATE_PARTITIONS"))
-      .map(_.toInt).getOrElse(8)
-
-  /** Run `body` (a streaming-gate execution) with a reduced
-    * shuffle-partition count: a stateful micro-batch commits one state
-    * store (delta files, snapshot maintenance — or a whole RocksDB
-    * instance) PER partition, so at gate SF the session default of 32 is
-    * fixed overhead with no data underneath; results are
-    * partition-count-invariant. Production sizes state partitions to the
-    * keyspace ([[defaultStatePartitions]]). Restored after; set/restore
-    * runs under [[stateConfLock]] so concurrent queries never observe or
-    * clobber the override. */
-  private[graft] def withStatePartitions[T](s: SparkSession,
-                                            partitions: Int = defaultStatePartitions)
-                                           (body: => T): T =
-    stateConfLock.synchronized {
-      val partKey = "spark.sql.shuffle.partitions"
-      // Two Spark-4.1 checkpoint-I/O costs, measured by thread-sampling the
-      // gate runs (r17 session; A/B medians q216 4.6→3.7, q222 6.8→5.3,
-      // q228 5.8→4.9, q235 7.4→6.7 s):
-      //  1. fileChecksum (NEW in 4.1, default on) writes + reads a paired
-      //     ".crc" checksum object for EVERY checkpoint file — offsets,
-      //     commits, state deltas — doubling checkpoint file count and
-      //     round-trips at ANY scale (worse on object stores, where each
-      //     extra object is a PUT). Integrity of state files is already
-      //     covered by RocksDB's own block checksums and the sst
-      //     fingerprinting; deployments that want engine-level checksums
-      //     re-enable via SPARK_GRAFT_CHECKPOINT_CHECKSUM=1.
-      //  2. The default FileContext-based checkpoint manager on a file:
-      //     scheme forks a SUBPROCESS per atomic rename (Hadoop RawLocalFs
-      //     shells out to `readlink`/`stat`) — one fork per offset/commit/
-      //     delta file per micro-batch. The FileSystem-based manager does a
-      //     JVM-native rename; its documented caveat (rename is not atomic
-      //     on some object stores) does not apply to local FS or HDFS.
-      //     Gates' checkpoints are always local-FS temp dirs, so this is
-      //     set HERE (the gate chokepoint), not globally: a production job
-      //     with an object-store checkpoint keeps Spark's default manager.
-      val sumKey = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-      val mgrKey = "spark.sql.streaming.checkpointFileManagerClass"
-      val keepChecksum = sys.env.get("SPARK_GRAFT_CHECKPOINT_CHECKSUM").contains("1")
-      val priorN = s.conf.getOption(partKey)
-      val priorS = s.conf.getOption(sumKey)
-      val priorM = s.conf.getOption(mgrKey)
-      s.conf.set(partKey, partitions.toString)
-      if (!keepChecksum) s.conf.set(sumKey, "false")
-      s.conf.set(mgrKey,
-        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
-      try body
-      finally {
-        def restore(key: String, prior: Option[String]): Unit = prior match {
-          case Some(v) => s.conf.set(key, v)
-          case None    => s.conf.unset(key)
-        }
-        restore(partKey, priorN)
-        restore(sumKey, priorS)
-        restore(mgrKey, priorM)
-      }
-    }
-
-  private[queries] def detachMemorySink(s: SparkSession, name: String): DataFrame = {
-    val t = s.table(name)
-    val out = s.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        java.util.Arrays.asList(t.collect(): _*)), t.schema)
-    s.catalog.dropTempView(name)
-    out
+    Gates.run(s, name, Gates.Memory("complete")) {
+      embeddingAuditOn(
+        s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dir))
+    }.rows
   }
 
   /** q210: keyed-state TRANSITION EXTRACTION under streaming execution —
@@ -565,6 +385,19 @@ object Extensions {
   private def transitionsReplayDir(d: String): String =
     indexCacheDir("graft-transitions-replay", d, "events", "tslices4v1")
 
+  private val replayCols = Seq("user_id", "ts", "event_id", "event_type").map(col)
+
+  /** An events replay directory as a stream, two files per trigger. */
+  private def eventsStream(s: SparkSession, d: String, dir: String): DataFrame =
+    s.readStream.schema(Tables.events(s, d).select(replayCols: _*).schema)
+      .option("maxFilesPerTrigger", 2).parquet(dir)
+
+  /** The time-sliced events replay (built on first use) as a stream. */
+  private def transitionsStream(s: SparkSession, d: String): DataFrame = {
+    ensureTransitionsReplay(s, d)
+    eventsStream(s, d, transitionsReplayDir(d))
+  }
+
   /** Build (once per events fingerprint) the 4-file time-sliced events
     * replay — shared by q210 and q223. */
   private def ensureTransitionsReplay(s: SparkSession, d: String): Unit = {
@@ -572,8 +405,7 @@ object Extensions {
     val dir = transitionsReplayDir(d)
     transReplayLock.synchronized {
       if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-        val ev = Tables.events(s, d)
-          .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
+        val ev = Tables.events(s, d).select(replayCols: _*)
         // persisted: the global ntile sort runs ONCE, not once per slice
         val sliced = ev.withColumn("slice",
           ntile(4).over(Window.orderBy(col("ts"), col("event_id"))))
@@ -592,37 +424,25 @@ object Extensions {
   }
 
   def transitionsStreamingGate(s: SparkSession, d: String): DataFrame = {
-    ensureTransitionsReplay(s, d)
-    val dir = transitionsReplayDir(d)
+    // two slices per trigger: the carry law needs ≥ 2 micro-batches
+    // (TransitionsSpec pins the boundary sharply at 1-file batches);
+    // each extra batch costs a full state-store commit cycle across
+    // BOTH stateful operators, so the gate runs the minimum that
+    // still crosses a batch boundary
+    val src = transitionsStream(s, d)
     val name = s"graft_trans_gate_${transGateRuns.incrementAndGet()}"
     import s.implicits._
-    val src = s.readStream
-      .schema(Tables.events(s, d)
-        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-        .schema)
-      // two slices per trigger: the carry law needs ≥ 2 micro-batches
-      // (TransitionsSpec pins the boundary sharply at 1-file batches);
-      // each extra batch costs a full state-store commit cycle across
-      // BOTH stateful operators, so the gate runs the minimum that
-      // still crosses a batch boundary
-      .option("maxFilesPerTrigger", 2).parquet(dir)
-    val pairs = graft.streaming.Transitions.transitionPairs(
-      src.as[graft.streaming.Transitions.Ev],
-      idleHorizon = None) // bounded replay: see Transitions scaladoc
-    // a streaming AGGREGATION chained after the append-mode state
-    // operator: the pair stream never leaves the executors — the sink
-    // holds the 25-cell count matrix, not events-sized rows (and the
-    // gate covers stateful-operator chaining, fMGWS → agg, for free)
-    val counts = pairs.groupBy(col("prev_type"), col("next_type"))
-      .agg(count(lit(1)).as("n"))
-    withStatePartitions(s) {
-      val q = counts.writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      awaitBounded(q, name)
-    }
-    detachMemorySink(s, name)
+    Gates.run(s, name, Gates.Memory("complete")) {
+      val pairs = graft.streaming.Transitions.transitionPairs(
+        src.as[graft.streaming.Transitions.Ev],
+        idleHorizon = None) // bounded replay: see Transitions scaladoc
+      // a streaming AGGREGATION chained after the append-mode state
+      // operator: the pair stream never leaves the executors — the sink
+      // holds the 25-cell count matrix, not events-sized rows (and the
+      // gate covers stateful-operator chaining, fMGWS → agg, for free)
+      pairs.groupBy(col("prev_type"), col("next_type"))
+        .agg(count(lit(1)).as("n"))
+    }.rows
       .withColumn("p", col("n").cast("double") /
         sum(col("n")).over(Window.partitionBy(col("prev_type"))).cast("double"))
   }
@@ -639,26 +459,15 @@ object Extensions {
   private val twsGateRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
   def transitionsTwsGate(s: SparkSession, d: String): DataFrame = {
-    ensureTransitionsReplay(s, d)
+    val src = transitionsStream(s, d)
     val name = s"graft_tws_gate_${twsGateRuns.incrementAndGet()}"
     import s.implicits._
-    withRocksDbTws(s) {
-      val src = s.readStream
-        .schema(Tables.events(s, d)
-          .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-          .schema)
-        .option("maxFilesPerTrigger", 2).parquet(transitionsReplayDir(d))
-      val pairs = graft.streaming.TransitionsTws.transitionPairs(
+    Gates.run(s, name, Gates.Memory("complete"), tws = true) {
+      graft.streaming.TransitionsTws.transitionPairs(
         src.as[graft.streaming.Transitions.Ev])
-      val counts = pairs.groupBy(col("prev_type"), col("next_type"))
+        .groupBy(col("prev_type"), col("next_type"))
         .agg(count(lit(1)).as("n"))
-      val q = counts.writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      awaitBounded(q, name)
-    }
-    detachMemorySink(s, name)
+    }.rows
       .withColumn("p", col("n").cast("double") /
         sum(col("n")).over(Window.partitionBy(col("prev_type"))).cast("double"))
   }
@@ -675,26 +484,15 @@ object Extensions {
   private val distinctTwsRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
   def distinctTwsGate(s: SparkSession, d: String): DataFrame = {
-    ensureTransitionsReplay(s, d)
+    val src = transitionsStream(s, d)
     val name = s"graft_distinct_tws_${distinctTwsRuns.incrementAndGet()}"
     import s.implicits._
-    withRocksDbTws(s) {
-      val src = s.readStream
-        .schema(Tables.events(s, d)
-          .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-          .schema)
-        .option("maxFilesPerTrigger", 2).parquet(transitionsReplayDir(d))
-      val first = graft.streaming.DistinctTws.firstOccurrences(
+    Gates.run(s, name, Gates.Memory("complete"), tws = true) {
+      graft.streaming.DistinctTws.firstOccurrences(
         src.as[graft.streaming.Transitions.Ev])
-      val counts = first.groupBy(col("event_type"))
+        .groupBy(col("event_type"))
         .agg(count(lit(1)).as("distinct_users"))
-      val q = counts.writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      awaitBounded(q, name)
-    }
-    detachMemorySink(s, name)
+    }.rows
   }
 
   /** Oracle: the batch distinct count — every later duplicate suppressed,
@@ -711,25 +509,15 @@ object Extensions {
 
   private def ensureDistinctTwsCheckpoint(s: SparkSession, d: String): String =
     distinctCkCache.computeIfAbsent(d, { _ =>
-      ensureTransitionsReplay(s, d)
+      val src = transitionsStream(s, d)
       import s.implicits._
       val work = java.nio.file.Files
         .createTempDirectory("graft-mapstate").toString
-      val ck = s"$work/ck"; val out = s"$work/out"
-      withRocksDbTws(s) {
-        val src = s.readStream
-          .schema(Tables.events(s, d)
-            .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-            .schema)
-          .option("maxFilesPerTrigger", 2).parquet(transitionsReplayDir(d))
-        val first = graft.streaming.DistinctTws.firstOccurrences(
+      val ck = s"$work/ck"
+      Gates.run(s, "distinct_tws_ingest", Gates.Parquet(s"$work/out", ck),
+          tws = true) {
+        graft.streaming.DistinctTws.firstOccurrences(
           src.as[graft.streaming.Transitions.Ev])
-        val q = first.toDF().writeStream.format("parquet")
-          .option("path", out).option("checkpointLocation", ck)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        awaitBounded(q, "distinct_tws_ingest")
       }
       ck
     })
@@ -798,25 +586,15 @@ object Extensions {
         Files.writeString(Paths.get(dir, "_SUCCESS"), "")
       }
     }
+    val src = eventsStream(s, d, dir)
     val name = s"graft_dedup_gate_${dedupGateRuns.incrementAndGet()}"
-    val src = s.readStream
-      .schema(Tables.events(s, d)
-        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-        .schema)
-      .option("maxFilesPerTrigger", 2).parquet(dir)
-    val deduped = src
-      .withWatermark("ts", "3650 days") // past the replay span: exact dedup
-      .dropDuplicatesWithinWatermark("event_id")
-    val counts = deduped.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("event_id")).as("sum_event_id"))
-    withStatePartitions(s) {
-      val q = counts.writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      awaitBounded(q, name)
-    }
-    detachMemorySink(s, name)
+    Gates.run(s, name, Gates.Memory("complete")) {
+      src
+        .withWatermark("ts", "3650 days") // past the replay span: exact dedup
+        .dropDuplicatesWithinWatermark("event_id")
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"), sum(col("event_id")).as("sum_event_id"))
+    }.rows
   }
 
   /** Oracle: the single-copy aggregate — correct IFF the stream dropped
@@ -881,27 +659,19 @@ object Extensions {
   }
 
   def streamingUpsertSink(s: SparkSession, d: String): DataFrame = {
-    ensureTransitionsReplay(s, d)
+    val src = transitionsStream(s, d)
     val root = java.nio.file.Files
       .createTempDirectory("graft-upsert-log").toString + "/log"
-    val src = s.readStream
-      .schema(Tables.events(s, d)
-        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-        .schema)
-      .option("maxFilesPerTrigger", 2).parquet(transitionsReplayDir(d))
     val seen = new java.util.concurrent.atomic.AtomicInteger(0)
     // restart-stable owner token: in a real deployment this derives from
     // the checkpoint location / query id; the gate's log root plays that
     // role (fresh per invocation, shared across the query's own replays)
     val owner = "upsert_" + Integer.toHexString(root.hashCode)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+    Gates.run(s, s"graft_upsert_${upsertGateRuns.incrementAndGet()}",
+      Gates.ForeachBatch { (batch, id) =>
         upsertBatch(batch, id, root, owner)
         seen.incrementAndGet(): Unit
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    awaitBounded(q, "streaming_upsert_sink")
+      })(src)
     graft.operators.Versioned.readAt(s, root, "user_id", seen.get() - 1)
   }
 
@@ -934,7 +704,7 @@ object Extensions {
   private val crashGateRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
   def crashInjectedUpsert(s: SparkSession, d: String): DataFrame = {
-    ensureTransitionsReplay(s, d)
+    val src = transitionsStream(s, d)
     val work = java.nio.file.Files
       .createTempDirectory("graft-crash-upsert").toString
     val root = s"$work/log"
@@ -945,40 +715,20 @@ object Extensions {
     val skips = new java.util.concurrent.atomic.AtomicInteger(0)
     val maxId = new java.util.concurrent.atomic.AtomicLong(-1L)
     val name = s"graft_crash_upsert_${crashGateRuns.incrementAndGet()}"
-    def run(): Unit = {
-      val src = s.readStream
-        .schema(Tables.events(s, d)
-          .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-          .schema)
-        .option("maxFilesPerTrigger", 2).parquet(transitionsReplayDir(d))
-      val q = src.writeStream
-        .option("checkpointLocation", ck)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          if (upsertBatch(batch, id, root, owner)) commits.incrementAndGet()
-          else skips.incrementAndGet()
-          maxId.updateAndGet(m => math.max(m, id))
-          // the injection: batch 1's data is COMMITTED (slot v=1 exists,
-          // owner-marked) but the batch fails before Spark records it —
-          // the restart MUST replay batch 1 and the fence MUST absorb it
-          if (id == 1L && injected.compareAndSet(0, 1))
-            throw new RuntimeException(
-              "graft-injected crash after sink commit, before offset commit")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      awaitBounded(q, name)
-    }
-    def injectedError(t: Throwable): Boolean =
-      t != null && (Option(t.getMessage).exists(_.contains("graft-injected"))
-        || injectedError(t.getCause))
-    var firstRunDied = false
-    // only the INJECTED failure is absorbed — any other first-run error
-    // (a real bug) propagates and fails the gate loudly
-    try run()
-    catch { case e: Throwable if injectedError(e) => firstRunDied = true }
-    require(firstRunDied,
-      "first run was expected to die on the injected crash, but survived")
+    val sink = Gates.ForeachBatch({ (batch, id) =>
+      if (upsertBatch(batch, id, root, owner)) commits.incrementAndGet()
+      else skips.incrementAndGet()
+      maxId.updateAndGet(m => math.max(m, id))
+      // the injection: batch 1's data is COMMITTED (slot v=1 exists,
+      // owner-marked) but the batch fails before Spark records it —
+      // the restart MUST replay batch 1 and the fence MUST absorb it
+      if (id == 1L && injected.compareAndSet(0, 1))
+        throw new RuntimeException(
+          s"${Gates.InjectedMarker} crash after sink commit, before offset commit")
+      ()
+    }, checkpoint = Some(ck))
+    def run(): Unit = Gates.run(s, name, sink)(src)
+    Gates.expectInjectedCrash("crash")(run())
     run() // restart from the same checkpoint: batch 1 replays, fence skips
     require(injected.get() == 1,
       s"injection fired ${injected.get()} times, expected exactly 1")
@@ -1032,10 +782,6 @@ object Extensions {
     * (id div 60)·60 arithmetic is off by a phase. */
   private val LateBaseSec = 1699999980L
 
-  private[graft] def probeLateReplay(s: SparkSession, d: String): String = {
-    ensureLateReplay(s, d); lateReplayDir(d)
-  }
-
   private def lateReplayDir(d: String): String =
     indexCacheDir("graft-late-replay", d, "events", "late3k_v3")
 
@@ -1080,49 +826,37 @@ object Extensions {
   def lateDataAccounting(s: SparkSession, d: String): DataFrame = {
     ensureLateReplay(s, d)
     val name = s"graft_late_${lateGateRuns.incrementAndGet()}"
-    val src = s.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("event_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("ts",
-          org.apache.spark.sql.types.TimestampType))))
+    val agg = s.readStream.schema("event_id LONG, ts TIMESTAMP")
       .option("maxFilesPerTrigger", 1).parquet(lateReplayDir(d))
-    val agg = src
       .withWatermark("ts", "100 seconds")
       .groupBy(window(col("ts"), "60 seconds"))
       .agg(count(lit(1)).as("n"), sum(col("event_id")).as("sum_id"))
       .select(lit("window").as("kind"),
         (unix_timestamp(col("window.start")) - LateBaseSec).as("k"),
         col("n"), col("sum_id"))
-    withStatePartitions(s) {
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      awaitBounded(q, name)
-      // the engine's own metric — which, for an aggregation, counts the
-      // rows REACHING the stateful operator, i.e. post-shuffle PARTIAL
-      // AGGREGATES: one dropped row per (late window × batch), not per
-      // input row (probe-verified: 200 rewound input rows in 2 windows
-      // → numRowsDroppedByWatermark = 2)
-      val droppedGroups = q.recentProgress
-        .flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
-      val inputRows = q.recentProgress.map(_.numInputRows).sum
-      val wins = detachMemorySink(s, name)
-      // raw-row lateness loss: everything the source delivered that no
-      // emitted window accounts for, minus the by-construction-unclosed
-      // sentinel — the quantity a 100 TB operator actually reconciles
-      val emittedN = wins.agg(coalesce(sum(col("n")), lit(0L)))
-        .head().getLong(0)
-      val droppedRows = inputRows - 1L - emittedN
-      val extra = wins.sparkSession.range(1).select(
-        lit("dropped_groups").as("kind"), lit(-1L).as("k"),
-        lit(droppedGroups).as("n"), lit(0L).as("sum_id"))
-        .unionByName(wins.sparkSession.range(1).select(
-          lit("dropped_rows").as("kind"), lit(-2L).as("k"),
-          lit(droppedRows).as("n"), lit(0L).as("sum_id")))
-      wins.unionByName(extra)
-    }
+    val ran = Gates.run(s, name, Gates.Memory("append"))(agg)
+    // the engine's own metric — which, for an aggregation, counts the
+    // rows REACHING the stateful operator, i.e. post-shuffle PARTIAL
+    // AGGREGATES: one dropped row per (late window × batch), not per
+    // input row (probe-verified: 200 rewound input rows in 2 windows
+    // → numRowsDroppedByWatermark = 2)
+    val droppedGroups = ran.progress
+      .flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
+    val inputRows = ran.progress.map(_.numInputRows).sum
+    val wins = ran.rows
+    // raw-row lateness loss: everything the source delivered that no
+    // emitted window accounts for, minus the by-construction-unclosed
+    // sentinel — the quantity a 100 TB operator actually reconciles
+    val emittedN = wins.agg(coalesce(sum(col("n")), lit(0L)))
+      .head().getLong(0)
+    val droppedRows = inputRows - 1L - emittedN
+    val extra = s.range(1).select(
+      lit("dropped_groups").as("kind"), lit(-1L).as("k"),
+      lit(droppedGroups).as("n"), lit(0L).as("sum_id"))
+      .unionByName(s.range(1).select(
+        lit("dropped_rows").as("kind"), lit(-2L).as("k"),
+        lit(droppedRows).as("n"), lit(0L).as("sum_id")))
+    wins.unionByName(extra)
   }
 
   /** q244: SESSION-OPERATOR LATE-DATA ACCOUNTING — q243's ledger on the
@@ -1184,7 +918,7 @@ object Extensions {
     import spark.implicits._
     ensureSessLateReplay(s, d)
     val name = s"graft_sess_late_${sessLateGateRuns.incrementAndGet()}"
-    withRocksDbTws(s) {
+    val ran = Gates.run(s, name, Gates.Memory("append"), tws = true) {
       val src = s.readStream
         .schema("id LONG, ts TIMESTAMP")
         .option("maxFilesPerTrigger", 1).parquet(sessLateReplayDir(d))
@@ -1194,29 +928,24 @@ object Extensions {
           Some(graft.streaming.Purchase(inv, 1, "1/2/2024 7:15",
             id.toDouble, "c" + inv, "ES")), None)
       }
-      val sessions = graft.streaming.SessionizerTws.sessionizeEventTime(
+      graft.streaming.SessionizerTws.sessionizeEventTime(
         events, gapMs = 10000L, watermarkDelay = "100 seconds")
-      val q = sessions.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      awaitBounded(q, name)
-      val dropped = q.recentProgress
-        .flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
-      val out = detachMemorySink(s, name)
-        .select(col("invoiceNo").as("invoice_no"), col("status"),
-          col("avgUnitPrice").as("avg_price"),
-          col("minUnitPrice").as("min_price"),
-          col("maxUnitPrice").as("max_price"),
-          col("numberItems").as("number_items"),
-          col("lineCount").cast("long").as("line_count"))
-      out.unionByName(out.sparkSession.range(1).select(
-        lit("__dropped").as("invoice_no"), lit("meta").as("status"),
-        lit(0.0d).as("avg_price"), lit(0.0d).as("min_price"),
-        lit(0.0d).as("max_price"),
-        lit(dropped.toDouble).as("number_items"),
-        lit(0L).as("line_count")))
     }
+    val dropped = ran.progress
+      .flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
+    val out = ran.rows
+      .select(col("invoiceNo").as("invoice_no"), col("status"),
+        col("avgUnitPrice").as("avg_price"),
+        col("minUnitPrice").as("min_price"),
+        col("maxUnitPrice").as("max_price"),
+        col("numberItems").as("number_items"),
+        col("lineCount").cast("long").as("line_count"))
+    out.unionByName(s.range(1).select(
+      lit("__dropped").as("invoice_no"), lit("meta").as("status"),
+      lit(0.0d).as("avg_price"), lit(0.0d).as("min_price"),
+      lit(0.0d).as("max_price"),
+      lit(dropped.toDouble).as("number_items"),
+      lit(0L).as("line_count")))
   }
 
   /** Closed-form twin of the session emissions plus the dropped-LINE
@@ -1274,27 +1003,15 @@ object Extensions {
   private val enrichGateRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
   def streamStaticEnrichGate(s: SparkSession, d: String): DataFrame = {
-    ensureTransitionsReplay(s, d)
+    val src = transitionsStream(s, d)
     val name = s"graft_enrich_gate_${enrichGateRuns.incrementAndGet()}"
-    val src = s.readStream
-      .schema(Tables.events(s, d)
-        .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-        .schema)
-      .option("maxFilesPerTrigger", 2).parquet(transitionsReplayDir(d))
     val dim = Tables.customer(s, d)
       .select(col("c_custkey"), col("c_mktsegment"))
-    val enriched = src.join(broadcast(dim),
-      src("user_id") + lit(1L) === dim("c_custkey"))
-      .groupBy(col("c_mktsegment"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("event_id")).as("sum_event_id"))
-    withStatePartitions(s) {
-      val q = enriched.writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      awaitBounded(q, name)
-    }
-    detachMemorySink(s, name)
+    Gates.run(s, name, Gates.Memory("complete")) {
+      src.join(broadcast(dim), src("user_id") + lit(1L) === dim("c_custkey"))
+        .groupBy(col("c_mktsegment"), col("event_type"))
+        .agg(count(lit(1)).as("n"), sum(col("event_id")).as("sum_event_id"))
+    }.rows
   }
 
   val streamStaticEnrichSql: String = """
@@ -1399,14 +1116,31 @@ object Extensions {
     * partition), shuffles bytes ∝ groups·k. */
   def topkNativeAgg(s: SparkSession, d: String): DataFrame = {
     graft.GraftExtensions.register(s)
-    Tables.customer(s, d).createOrReplaceTempView("graft_cust_v")
-    s.sql("""
+    sqlOver(s, "cust" -> Tables.customer(s, d))("""
       SELECT c_nationkey, CAST(pos + 1 AS BIGINT) AS rnk,
              t.key AS acctbal, t.payload AS top_custkey
       FROM (SELECT c_nationkey,
               graft_topk(c_acctbal, c_custkey, 3) AS top
-            FROM graft_cust_v GROUP BY c_nationkey)
+            FROM {cust} GROUP BY c_nationkey)
       LATERAL VIEW posexplode(top) x AS pos, t""")
+  }
+
+  private val sqlViewRuns = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** `s.sql(text)` with each `{name}` in `text` bound to its frame through
+    * a temp view private to this call and dropped once the text is
+    * analyzed: concurrent callers never share a view, and none outlives
+    * the call. */
+  private[queries] def sqlOver(s: SparkSession, views: (String, DataFrame)*)
+                              (text: String): DataFrame = {
+    val run = sqlViewRuns.incrementAndGet()
+    val named = views.map { case (k, df) =>
+      val v = s"graft_${k}_v$run"
+      df.createTempView(v)
+      k -> v
+    }
+    try s.sql(named.foldLeft(text) { case (t, (k, v)) => t.replace(s"{$k}", v) })
+    finally named.foreach { case (_, v) => s.catalog.dropTempView(v) }
   }
 
   val topkNativeAggSql: String = """
@@ -1457,13 +1191,11 @@ object Extensions {
     * cross-engine. */
   def sqlSurface(s: SparkSession, d: String): DataFrame = {
     graft.GraftExtensions.register(s) // createOrReplaceTempFunction: idempotent
-    Tables.documents(s, d).createOrReplaceTempView("graft_docs_v")
-    Tables.embeddings(s, d).createOrReplaceTempView("graft_emb_v")
-    s.sql("""
+    sqlOver(s, "docs" -> Tables.documents(s, d), "emb" -> Tables.embeddings(s, d))("""
       SELECT d.doc_id, graft_fingerprint(d.text, 64) AS fp,
              graft_dot(CAST(e.embedding AS ARRAY<DOUBLE>),
                        CAST(e.embedding AS ARRAY<DOUBLE>)) AS sq_norm
-      FROM graft_docs_v d JOIN graft_emb_v e ON d.doc_id = e.vec_id""")
+      FROM {docs} d JOIN {emb} e ON d.doc_id = e.vec_id""")
   }
 
   val sqlSurfaceSql: String = s"""
@@ -2973,17 +2705,11 @@ object Extensions {
       writeSingleParquet(ev.filter(col("event_type") === "click")
         .drop("event_type"), cDir, "clicks.parquet")
       val schema = ev.drop("event_type").schema
-      withStatePartitions(s) {
-        val p = s.readStream.schema(schema).parquet(pDir)
-        val c = s.readStream.schema(schema).parquet(cDir)
-        val joined = graft.streaming.StreamJoin.attributionPairs(
-          p, c, lookback = "24 hours", delay = "30 days")
-        val q = joined.writeStream.format("parquet")
-          .option("path", out).option("checkpointLocation", ck)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        awaitBounded(q, "join_state_ingest")
+      Gates.run(s, "join_state_ingest", Gates.Parquet(out, ck)) {
+        graft.streaming.StreamJoin.attributionPairs(
+          s.readStream.schema(schema).parquet(pDir),
+          s.readStream.schema(schema).parquet(cDir),
+          lookback = "24 hours", delay = "30 days")
       }
       ck
     })

@@ -5,8 +5,10 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 import graft.{QueryDef, Tables}
-import graft.ml.{Anomaly, ReferenceArtifacts}
-import graft.streaming.{PurchaseCsv, Sessionizer, TimedLineEvent}
+import graft.ml.{Anomaly, PinnedKmeansModel}
+import graft.streaming.{Gates, InvoiceResult, PurchaseCsv, Sessionizer,
+  SessionizerTws, TimedLineEvent}
+import org.apache.spark.sql.Dataset
 
 /** End-to-end STREAM-SEMANTICS oracle: manufacture raw purchase-line CSV
   * from lineitem⋈orders (integer prices so the string round-trip is exact,
@@ -110,6 +112,61 @@ object PipelineReplay {
 
   private val SentinelInvoice = "FLUSHWM"
 
+  /** Session gap and watermark delay of every replay gate's sessionizer. */
+  private val GapMs = 40000L
+  private val WatermarkDelay = "30 seconds"
+
+  private val rawSchema =
+    org.apache.spark.sql.Encoders.product[TimedRawLine].schema
+
+  /** Route raw wire lines to event-time stream elements, keeping each
+    * line's ingest timestamp (quirk Q4 drops included). */
+  private def timedEvents(raw: DataFrame): Dataset[TimedLineEvent] = {
+    import raw.sparkSession.implicits._
+    raw.as[TimedRawLine].flatMap { r =>
+      PurchaseCsv.route(r.value).map(ev =>
+        TimedLineEvent(ev.invoiceNo, r.event_ts, ev.purchase, ev.errorReason))
+    }
+  }
+
+  /** The replay files under `dir` (optionally only those matching `glob`)
+    * as a routed event stream, `filesPerTrigger` files per micro-batch. */
+  private def replayEvents(s: SparkSession, dir: String, filesPerTrigger: Int,
+                           glob: Option[String] = None): Dataset[TimedLineEvent] = {
+    val r = s.readStream.schema(rawSchema)
+      .option("maxFilesPerTrigger", filesPerTrigger)
+    timedEvents(glob.fold(r)(r.option("pathGlobFilter", _)).parquet(dir))
+  }
+
+  /** Cold-start sessionization on the fMGWS or the TWS state machine. */
+  private def sessionize(events: Dataset[TimedLineEvent],
+                         tws: Boolean): Dataset[InvoiceResult] =
+    if (tws) SessionizerTws.sessionizeEventTime(events, GapMs, WatermarkDelay)
+    else Sessionizer.sessionizeEventTime(events, GapMs, WatermarkDelay)(
+      events.sparkSession)
+
+  /** Slices 3–6: what a bootstrapped job streams on top of its snapshot. */
+  private val Bootstrapped = Some("slice0[3-6]*.parquet")
+
+  /** Slices 4–6: what a migrated job streams on top of its initial state. */
+  private val PostMigration = Some("slice0[4-6]*.parquet")
+
+  /** Rows in the post-migration slices: the migration gates' no-replay
+    * fence compares the streamed input against this. */
+  private def postMigrationRows(s: SparkSession, dir: String): Long =
+    s.read.schema(rawSchema).option("pathGlobFilter", PostMigration.get)
+      .parquet(dir).count()
+
+  /** Copy `slices` of the fixture into `srcDir`, keeping their mtimes. */
+  private def stage(fixture: String, srcDir: String, slices: Seq[Int]): Unit = {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    Files.createDirectories(Paths.get(srcDir))
+    slices.flatMap(sliceFiles).foreach { n =>
+      Files.copy(Paths.get(fixture, n), Paths.get(srcDir, n),
+        StandardCopyOption.COPY_ATTRIBUTES)
+    }
+  }
+
   private val streamGateRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
   private val streamReplayLock = new Object
@@ -169,9 +226,23 @@ object PipelineReplay {
     *    polynomial after the stateful operator — the q210 chaining
     *    discipline), against the committed reference centers + threshold.
     */
-  def pipelineStreamingGate(s: SparkSession, d: String): DataFrame = {
-    implicit val spark: SparkSession = s
-    import spark.implicits._
+  def pipelineStreamingGate(s: SparkSession, d: String): DataFrame =
+    pipelineGate(s, d, tws = false)
+
+  /** q216 and q228: the whole pipeline over the six replay files in one
+    * StreamExecution, on either state machine. */
+  private def pipelineGate(s: SparkSession, d: String, tws: Boolean): DataFrame = {
+    val events = replayEvents(s, ensurePipelineReplay(s, d), 2 * SliceParts)
+    val prefix = if (tws) "graft_pipe_tws" else "graft_pipe_gate"
+    Gates.run(s, s"${prefix}_${streamGateRuns.incrementAndGet()}",
+        Gates.Memory("append"), tws = tws) {
+      scoreSessions(sessionize(events, tws))
+    }.rows
+  }
+
+  /** Build (once per lineitem fingerprint) the six-slice replay fixture
+    * the q216 family streams; returns its directory. */
+  private[graft] def ensurePipelineReplay(s: SparkSession, d: String): String = {
     val dir = pipelineReplayDir(d)
     streamReplayLock.synchronized {
       if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
@@ -204,9 +275,9 @@ object PipelineReplay {
           // and is filtered out of the gate output
           Seq(5, 6).foreach { i =>
             Extensions.writeSingleParquet(
-              Seq(TimedRawLine(
+              s.createDataFrame(Seq(TimedRawLine(
                 new java.sql.Timestamp(ReplayBaseMs + (i - 4) * 86400000L),
-                s"$SentinelInvoice,0,ITEM,1,7/19/2011 12:19,100,cWM,ES")).toDF(),
+                s"$SentinelInvoice,0,ITEM,1,7/19/2011 12:19,100,cWM,ES"))),
               dir, f"slice$i%02d.parquet", mtime = Some(base + i * 1000L))
           }
           java.nio.file.Files.writeString(
@@ -214,24 +285,7 @@ object PipelineReplay {
         } finally sliced.unpersist()
       }
     }
-    val name = s"graft_pipe_gate_${streamGateRuns.incrementAndGet()}"
-    Extensions.withStatePartitions(s) {
-      val src = s.readStream
-        .schema(org.apache.spark.sql.Encoders.product[TimedRawLine].schema)
-        .option("maxFilesPerTrigger", 2 * SliceParts).parquet(dir)
-      val events = src.as[TimedRawLine].flatMap { raw =>
-        PurchaseCsv.route(raw.value).map(ev =>
-          TimedLineEvent(ev.invoiceNo, raw.event_ts, ev.purchase, ev.errorReason))
-      }
-      val scored = scoreSessions(s, Sessionizer.sessionizeEventTime(
-        events, gapMs = 40000L, watermarkDelay = "30 seconds"))
-      val q = scored.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      Extensions.awaitBounded(q, name)
-      Extensions.detachMemorySink(s, name)
-    }
+    dir
   }
 
   /** q43's oracle extended with the q44 scoring block: time_hour derives
@@ -240,7 +294,6 @@ object PipelineReplay {
     * and score/is_anomaly replay the identical squared-distance fold
     * against the committed reference centers + threshold. */
   val pipelineStreamingSql: String = {
-    val root = ReferenceArtifacts.DefaultRoot
     val sq = Anomaly.featureCols.zipWithIndex
       .map { case (f, i) => s"(b.$f - c[${i + 1}]) * (b.$f - c[${i + 1}])" }
       .mkString(" + ")
@@ -268,24 +321,18 @@ object PipelineReplay {
         CASE WHEN bool_or(l_linenumber = 7) THEN 0 ELSE count(*) END AS line_count
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       GROUP BY l_orderkey),
-    ctr AS (SELECT point."values" AS c
-            FROM read_parquet('$root/clustering/data/*.parquet')),
+    ctr AS (${PinnedKmeansModel.centersSql}),
     sc AS (SELECT b.invoice_no, min($sq) AS score
            FROM base b CROSS JOIN ctr WHERE b.status = 'valid'
            GROUP BY b.invoice_no),
-    t AS (SELECT th FROM read_csv('$root/threshold', header=false,
-                                  columns={'th': 'DOUBLE'}))
+    t AS (${PinnedKmeansModel.thresholdSql})
     SELECT b.*, sc.score, sc.score > t.th AS is_anomaly
     FROM base b LEFT JOIN sc USING (invoice_no) CROSS JOIN t"""
   }
 
   /** The q216 projection + scoring chain over a sessionized stream —
     * shared by the single-run gate and the restart gate. */
-  private def scoreSessions(s: SparkSession,
-      sessions: org.apache.spark.sql.Dataset[
-        graft.streaming.InvoiceResult]): DataFrame = {
-    val centers = ReferenceArtifacts.kmeansCenters(s)
-    val thresh = ReferenceArtifacts.kmeansThreshold()
+  private def scoreSessions(sessions: Dataset[InvoiceResult]): DataFrame = {
     val valid = col("status") === "valid"
     sessions.toDF()
       .filter(col("invoiceNo") =!= SentinelInvoice)
@@ -301,8 +348,9 @@ object PipelineReplay {
         // error rows: normalize to the batch fold's 0 (see q216 ledger)
         when(valid, col("lineCount").cast("long")).otherwise(lit(0L))
           .as("line_count"))
-      .withColumn("score", when(valid, Anomaly.minSqdist(centers)))
-      .withColumn("is_anomaly", when(valid, col("score") > lit(thresh)))
+      .withColumn("score", when(valid, Anomaly.minSqdist(PinnedKmeansModel.centers)))
+      .withColumn("is_anomaly",
+        when(valid, col("score") > lit(PinnedKmeansModel.threshold)))
   }
 
   /** q222: CHECKPOINT RECOVERY of the whole pipeline — the exactly-once
@@ -320,43 +368,16 @@ object PipelineReplay {
     * gate re-executes the recovery every run (that is the thing being
     * gated), only the input fixture is cached. */
   def pipelineRestartGate(s: SparkSession, d: String): DataFrame = {
-    implicit val spark: SparkSession = s
-    import spark.implicits._
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val fixture = pipelineReplayDir(d)
-    streamReplayLock.synchronized {
-      if (!new java.io.File(s"$fixture/_SUCCESS").exists()) {
-        // build via the q216 gate's fixture path
-        pipelineStreamingGate(s, d)
+    val fixture = ensurePipelineReplay(s, d)
+    val work = java.nio.file.Files.createTempDirectory("graft-restart").toString
+    val srcDir = s"$work/src"; val out = s"$work/out"
+    def runOnce(): Unit =
+      Gates.run(s, "pipeline_recovery", Gates.Parquet(out, s"$work/ck")) {
+        scoreSessions(sessionize(replayEvents(s, srcDir, SliceParts), tws = false))
       }
-    }
-    val work = Files.createTempDirectory("graft-restart").toString
-    val srcDir = s"$work/src"; val ck = s"$work/ck"; val out = s"$work/out"
-    Files.createDirectories(Paths.get(srcDir))
-    def stage(slices: Seq[Int]): Unit = slices.flatMap(sliceFiles).foreach { n =>
-      Files.copy(Paths.get(fixture, n), Paths.get(srcDir, n),
-        StandardCopyOption.COPY_ATTRIBUTES)
-    }
-    def runOnce(): Unit = Extensions.withStatePartitions(s) {
-      val src = s.readStream
-        .schema(org.apache.spark.sql.Encoders.product[TimedRawLine].schema)
-        .option("maxFilesPerTrigger", SliceParts).parquet(srcDir)
-      val events = src.as[TimedRawLine].flatMap { raw =>
-        PurchaseCsv.route(raw.value).map(ev =>
-          TimedLineEvent(ev.invoiceNo, raw.event_ts, ev.purchase, ev.errorReason))
-      }
-      val scored = scoreSessions(s, Sessionizer.sessionizeEventTime(
-        events, gapMs = 40000L, watermarkDelay = "30 seconds"))
-      val q = scored.writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      Extensions.awaitBounded(q, "pipeline_recovery")
-    }
-    stage(Seq(1, 2, 3))
+    stage(fixture, srcDir, Seq(1, 2, 3))
     runOnce() // sessions accumulate in the store; nothing emits
-    stage(Seq(4, 5, 6))
+    stage(fixture, srcDir, Seq(4, 5, 6))
     runOnce() // a NEW execution recovers the store and completes them
     s.read.parquet(out)
   }
@@ -399,17 +420,11 @@ object PipelineReplay {
     implicit val spark: SparkSession = s
     import spark.implicits._
     val dir = initSnapshotDir(d)
+    val fixture = ensurePipelineReplay(s, d)
     streamReplayLock.synchronized {
       if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-        val fixture = pipelineReplayDir(d)
-        if (!new java.io.File(s"$fixture/_SUCCESS").exists())
-          pipelineStreamingGate(s, d)
-        val rows = s.read
-          .parquet((sliceFiles(1) ++ sliceFiles(2)).map(n => s"$fixture/$n"): _*)
-          .as[TimedRawLine].flatMap { raw =>
-            PurchaseCsv.route(raw.value).map(ev =>
-              TimedLineEvent(ev.invoiceNo, raw.event_ts, ev.purchase, ev.errorReason))
-          }
+        val rows = timedEvents(s.read
+          .parquet((sliceFiles(1) ++ sliceFiles(2)).map(n => s"$fixture/$n"): _*))
           .groupByKey(_.invoiceNo)
           .mapGroups(foldInitialState _)
           .map { case (inv, st) =>
@@ -440,14 +455,7 @@ object PipelineReplay {
   def pipelineBootstrapGate(s: SparkSession, d: String): DataFrame = {
     implicit val spark: SparkSession = s
     import spark.implicits._
-    val dir = pipelineReplayDir(d)
-    streamReplayLock.synchronized {
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) pipelineStreamingGate(s, d)
-    }
-    def toEvents(df: DataFrame) = df.as[TimedRawLine].flatMap { raw =>
-      PurchaseCsv.route(raw.value).map(ev =>
-        TimedLineEvent(ev.invoiceNo, raw.event_ts, ev.purchase, ev.errorReason))
-    }
+    val dir = ensurePipelineReplay(s, d)
     val snap = ensureInitSnapshot(s, d)
     val init = s.read.parquet(s"$snap/snapshot.parquet")
       .select(col("invoiceNo"), col("lines"), col("errorReason"),
@@ -458,22 +466,14 @@ object PipelineReplay {
       }
       .groupByKey(_._1)
       .mapValues(_._2)
-    val src = s.readStream
-      .schema(org.apache.spark.sql.Encoders.product[TimedRawLine].schema)
-      .option("pathGlobFilter", "slice0[3-6]*.parquet")
-      .option("maxFilesPerTrigger", 2 * SliceParts).parquet(dir)
+    val events = replayEvents(s, dir, 2 * SliceParts, Bootstrapped)
     val name = s"graft_pipe_boot_${streamGateRuns.incrementAndGet()}"
-    Extensions.withStatePartitions(s) {
-      val scored = scoreSessions(s, Sessionizer.sessionizeEventTimeWithInit(
-        toEvents(src), init, gapMs = 40000L, watermarkDelay = "30 seconds"))
-      val q = scored.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      Extensions.awaitBounded(q, name)
-      Extensions.detachMemorySink(s, name)
-    }
+    Gates.run(s, name, Gates.Memory("append")) {
+      scoreSessions(Sessionizer.sessionizeEventTimeWithInit(
+        events, init, GapMs, WatermarkDelay))
+    }.rows
   }
+
 
   /** q228: the WHOLE q216 pipeline with the sessionizer swapped onto
     * `transformWithState` ([[graft.streaming.SessionizerTws]] — composed
@@ -484,33 +484,8 @@ object PipelineReplay {
     * (this). TimeMode.EventTime keeps AvailableNow terminating
     * (shouldRunAnotherBatch fires only on watermark advance — the
     * round-12 q225 lesson, inverted). */
-  def pipelineTwsGate(s: SparkSession, d: String): DataFrame = {
-    implicit val spark: SparkSession = s
-    import spark.implicits._
-    val dir = pipelineReplayDir(d)
-    streamReplayLock.synchronized {
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) pipelineStreamingGate(s, d)
-    }
-    Extensions.withRocksDbTws(s) {
-      val name = s"graft_pipe_tws_${streamGateRuns.incrementAndGet()}"
-      val src = s.readStream
-        .schema(org.apache.spark.sql.Encoders.product[TimedRawLine].schema)
-        .option("maxFilesPerTrigger", 2 * SliceParts).parquet(dir)
-      val events = src.as[TimedRawLine].flatMap { raw =>
-        PurchaseCsv.route(raw.value).map(ev =>
-          TimedLineEvent(ev.invoiceNo, raw.event_ts, ev.purchase, ev.errorReason))
-      }
-      val scored = scoreSessions(s,
-        graft.streaming.SessionizerTws.sessionizeEventTime(
-          events, gapMs = 40000L, watermarkDelay = "30 seconds"))
-      val q = scored.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      Extensions.awaitBounded(q, name)
-      Extensions.detachMemorySink(s, name)
-    }
-  }
+  def pipelineTwsGate(s: SparkSession, d: String): DataFrame =
+    pipelineGate(s, d, tws = true)
 
   /** q229: STATE-STORE INTROSPECTION — the checkpointed state read back as
     * a TABLE via Spark's `statestore` data source (the operational surface
@@ -534,40 +509,25 @@ object PipelineReplay {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private def ensureStateCheckpoint(s: SparkSession, d: String): String =
-    stateCkCache.computeIfAbsent(d, { _ =>
-      implicit val spark: SparkSession = s
-      import spark.implicits._
-      import java.nio.file.{Files, Paths, StandardCopyOption}
-      val fixture = pipelineReplayDir(d)
-      streamReplayLock.synchronized {
-        if (!new java.io.File(s"$fixture/_SUCCESS").exists())
-          pipelineStreamingGate(s, d)
+    ingestCheckpoint(stateCkCache, s, d, tws = false)
+
+  /** The 3-slice ingest behind the state readers: slices 1–3 at one slice
+    * per trigger, stopped with every session still open, its checkpoint
+    * retained. Cached per (state API, SF) in `cache`. */
+  private def ingestCheckpoint(
+      cache: java.util.concurrent.ConcurrentHashMap[String, String],
+      s: SparkSession, d: String, tws: Boolean): String =
+    cache.computeIfAbsent(d, { _ =>
+      val fixture = ensurePipelineReplay(s, d)
+      val work = java.nio.file.Files.createTempDirectory(
+        if (tws) "graft-twsstate" else "graft-stateread").toString
+      stage(fixture, s"$work/src", Seq(1, 2, 3))
+      val events = replayEvents(s, s"$work/src", SliceParts)
+      Gates.run(s, if (tws) "tws_state_ingest" else "state_introspect_ingest",
+          Gates.Parquet(s"$work/out", s"$work/ck"), tws = tws) {
+        scoreSessions(sessionize(events, tws))
       }
-      val work = Files.createTempDirectory("graft-stateread").toString
-      val srcDir = s"$work/src"; val ck = s"$work/ck"; val out = s"$work/out"
-      Files.createDirectories(Paths.get(srcDir))
-      Seq(1, 2, 3).flatMap(sliceFiles).foreach { n =>
-        Files.copy(Paths.get(fixture, n), Paths.get(srcDir, n),
-          StandardCopyOption.COPY_ATTRIBUTES)
-      }
-      Extensions.withStatePartitions(s) {
-        val src = s.readStream
-          .schema(org.apache.spark.sql.Encoders.product[TimedRawLine].schema)
-          .option("maxFilesPerTrigger", SliceParts).parquet(srcDir)
-        val events = src.as[TimedRawLine].flatMap { raw =>
-          PurchaseCsv.route(raw.value).map(ev =>
-            TimedLineEvent(ev.invoiceNo, raw.event_ts, ev.purchase, ev.errorReason))
-        }
-        val scored = scoreSessions(s, Sessionizer.sessionizeEventTime(
-          events, gapMs = 40000L, watermarkDelay = "30 seconds"))
-        val q = scored.writeStream.format("parquet")
-          .option("path", out).option("checkpointLocation", ck)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        Extensions.awaitBounded(q, "state_introspect_ingest")
-      }
-      ck
+      s"$work/ck"
     })
 
   def stateIntrospectGate(s: SparkSession, d: String): DataFrame = {
@@ -610,42 +570,7 @@ object PipelineReplay {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private def ensureTwsStateCheckpoint(s: SparkSession, d: String): String =
-    twsCkCache.computeIfAbsent(d, { _ =>
-      implicit val spark: SparkSession = s
-      import spark.implicits._
-      import java.nio.file.{Files, Paths, StandardCopyOption}
-      val fixture = pipelineReplayDir(d)
-      streamReplayLock.synchronized {
-        if (!new java.io.File(s"$fixture/_SUCCESS").exists())
-          pipelineStreamingGate(s, d)
-      }
-      val work = Files.createTempDirectory("graft-twsstate").toString
-      val srcDir = s"$work/src"; val ck = s"$work/ck"; val out = s"$work/out"
-      Files.createDirectories(Paths.get(srcDir))
-      Seq(1, 2, 3).flatMap(sliceFiles).foreach { n =>
-        Files.copy(Paths.get(fixture, n), Paths.get(srcDir, n),
-          StandardCopyOption.COPY_ATTRIBUTES)
-      }
-      Extensions.withRocksDbTws(s) {
-        val src = s.readStream
-          .schema(org.apache.spark.sql.Encoders.product[TimedRawLine].schema)
-          .option("maxFilesPerTrigger", SliceParts).parquet(srcDir)
-        val events = src.as[TimedRawLine].flatMap { raw =>
-          PurchaseCsv.route(raw.value).map(ev =>
-            TimedLineEvent(ev.invoiceNo, raw.event_ts, ev.purchase, ev.errorReason))
-        }
-        val scored = scoreSessions(s,
-          graft.streaming.SessionizerTws.sessionizeEventTime(
-            events, gapMs = 40000L, watermarkDelay = "30 seconds"))
-        val q = scored.writeStream.format("parquet")
-          .option("path", out).option("checkpointLocation", ck)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        Extensions.awaitBounded(q, "tws_state_ingest")
-      }
-      ck
-    })
+    ingestCheckpoint(twsCkCache, s, d, tws = true)
 
   /** q232: q229's introspection against the OTHER state API — the q228
     * TWS sessionizer's checkpoint read back per NAMED STATE VARIABLE
@@ -762,41 +687,23 @@ object PipelineReplay {
     * (TWS from cold), this closes the bootstrap matrix: both state APIs,
     * both start modes, one truth. */
   def pipelineTwsBootstrapGate(s: SparkSession, d: String): DataFrame = {
-    implicit val spark: SparkSession = s
-    import spark.implicits._
-    val dir = pipelineReplayDir(d)
-    streamReplayLock.synchronized {
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) pipelineStreamingGate(s, d)
-    }
-    def toEvents(df: DataFrame) = df.as[TimedRawLine].flatMap { raw =>
-      PurchaseCsv.route(raw.value).map(ev =>
-        TimedLineEvent(ev.invoiceNo, raw.event_ts, ev.purchase, ev.errorReason))
-    }
+    import s.implicits._
+    val dir = ensurePipelineReplay(s, d)
+    // snapshot rides as the FLAT packed form: the engine constructs the
+    // initial-state deserializer per key, so the value type's encoder
+    // tree size is a per-key cost (see SessionizerTws.packInit)
+    val snap = ensureInitSnapshot(s, d)
+    val init = s.read.parquet(s"$snap/snapshot.parquet")
+      .select(col("invoiceNo"), col("packed"))
+      .as[(String, Array[Byte])]
+      .groupByKey(_._1)
+      .mapValues(_._2)
+    val events = replayEvents(s, dir, 2 * SliceParts, Bootstrapped)
     val name = s"graft_pipe_twsboot_${streamGateRuns.incrementAndGet()}"
-    Extensions.withRocksDbTws(s) {
-      // snapshot rides as the FLAT packed form: the engine constructs the
-      // initial-state deserializer per key, so the value type's encoder
-      // tree size is a per-key cost (see SessionizerTws.packInit)
-      val snap = ensureInitSnapshot(s, d)
-      val init = s.read.parquet(s"$snap/snapshot.parquet")
-        .select(col("invoiceNo"), col("packed"))
-        .as[(String, Array[Byte])]
-        .groupByKey(_._1)
-        .mapValues(_._2)
-      val src = s.readStream
-        .schema(org.apache.spark.sql.Encoders.product[TimedRawLine].schema)
-        .option("pathGlobFilter", "slice0[3-6]*.parquet")
-        .option("maxFilesPerTrigger", 2 * SliceParts).parquet(dir)
-      val scored = scoreSessions(s,
-        graft.streaming.SessionizerTws.sessionizeEventTimeWithInit(
-          toEvents(src), init, gapMs = 40000L, watermarkDelay = "30 seconds"))
-      val q = scored.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      Extensions.awaitBounded(q, name)
-      Extensions.detachMemorySink(s, name)
-    }
+    Gates.run(s, name, Gates.Memory("append"), tws = true) {
+      scoreSessions(SessionizerTws.sessionizeEventTimeWithInit(
+        events, init, GapMs, WatermarkDelay))
+    }.rows
   }
 
   /** q235: LIVE STATE-API MIGRATION — the operational payoff the
@@ -818,7 +725,7 @@ object PipelineReplay {
     * checkpoint read + bulk load (O(live sessions)), never as a source
     * replay (O(history)). */
   def stateMigrationGate(s: SparkSession, d: String): DataFrame =
-    stateMigrationAt(s, d, Extensions.defaultStatePartitions)
+    stateMigrationAt(s, d, Gates.StatePartitions)
 
   /** q240: STATE REPARTITIONING — the same migration run into a job at
     * a DIFFERENT state partition count (16, vs the 8 the source
@@ -896,80 +803,59 @@ object PipelineReplay {
         (inv, graft.streaming.EventSessionState(ls.getOrElse(Nil), err, maxMs))
       }
       .groupByKey(_._1).mapValues(_._2)
-    val rawSchema = org.apache.spark.sql.Encoders.product[TimedRawLine].schema
-    val expectedStreamed = s.read.schema(rawSchema)
-      .option("pathGlobFilter", "slice0[4-6]*.parquet").parquet(dir).count()
-    def toEvents(df: DataFrame) = df.as[TimedRawLine].flatMap { raw =>
-      PurchaseCsv.route(raw.value).map(ev =>
-        TimedLineEvent(ev.invoiceNo, raw.event_ts, ev.purchase, ev.errorReason))
-    }
+    val expectedStreamed = postMigrationRows(s, dir)
+    val events = replayEvents(s, dir, SliceParts + 1, PostMigration)
     val name = s"graft_pipe_unmigrate_${streamGateRuns.incrementAndGet()}"
-    Extensions.withStatePartitions(s) {
-      val src = s.readStream.schema(rawSchema)
-        .option("pathGlobFilter", "slice0[4-6]*.parquet")
-        .option("maxFilesPerTrigger", SliceParts + 1).parquet(dir)
-      val scored = scoreSessions(s, Sessionizer.sessionizeEventTimeWithInit(
-        toEvents(src), init, gapMs = 40000L, watermarkDelay = "30 seconds"))
-      val q = scored.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      Extensions.awaitBounded(q, name)
-      val streamed = q.recentProgress.map(_.numInputRows).sum
-      require(streamed == expectedStreamed,
-        s"reverse migration re-read source history: streamed $streamed rows, " +
-          s"expected exactly the post-migration slices ($expectedStreamed)")
-      Extensions.detachMemorySink(s, name)
+    val ran = Gates.run(s, name, Gates.Memory("append")) {
+      scoreSessions(Sessionizer.sessionizeEventTimeWithInit(
+        events, init, GapMs, WatermarkDelay))
     }
+    val streamed = ran.progress.map(_.numInputRows).sum
+    require(streamed == expectedStreamed,
+      s"reverse migration re-read source history: streamed $streamed rows, " +
+        s"expected exactly the post-migration slices ($expectedStreamed)")
+    ran.rows
   }
 
-  private def stateMigrationAt(s: SparkSession, d: String,
-                               partitions: Int): DataFrame = {
-    implicit val spark: SparkSession = s
-    import spark.implicits._
-    val dir = pipelineReplayDir(d)
-    val ck = ensureStateCheckpoint(s, d) // live fMGWS checkpoint, slices 1–3 open
-    val snap = s.read.format("statestore").option("path", ck).load()
+  /** A live fMGWS checkpoint's state as the TWS sessionizer's initial
+    * state: each open session read back as a row and packed into the TWS
+    * snapshot encoding (q235, q240, q245). */
+  private def migratedInit(s: SparkSession, ck: String)
+      : org.apache.spark.sql.KeyValueGroupedDataset[String, Array[Byte]] = {
+    import s.implicits._
+    s.read.format("statestore").option("path", ck).load()
       .select(col("key.value"),
         col("value.groupState.lines"),
         col("value.groupState.errorReason"),
         col("value.groupState.maxEventMs"))
       .as[(String, List[graft.streaming.Purchase], Option[String], Long)]
-    val init = snap
       .map { case (inv, ls, err, maxMs) =>
-        (inv, graft.streaming.SessionizerTws.packInit(
+        (inv, SessionizerTws.packInit(
           graft.streaming.EventSessionState(ls, err, maxMs)))
       }
       .groupByKey(_._1).mapValues(_._2)
-    val rawSchema = org.apache.spark.sql.Encoders.product[TimedRawLine].schema
-    val expectedStreamed = s.read.schema(rawSchema)
-      .option("pathGlobFilter", "slice0[4-6]*.parquet").parquet(dir).count()
-    def toEvents(df: DataFrame) = df.as[TimedRawLine].flatMap { raw =>
-      PurchaseCsv.route(raw.value).map(ev =>
-        TimedLineEvent(ev.invoiceNo, raw.event_ts, ev.purchase, ev.errorReason))
-    }
+  }
+
+  private def stateMigrationAt(s: SparkSession, d: String,
+                               partitions: Int): DataFrame = {
+    val dir = pipelineReplayDir(d)
+    // live fMGWS checkpoint, slices 1–3 open
+    val init = migratedInit(s, ensureStateCheckpoint(s, d))
+    val expectedStreamed = postMigrationRows(s, dir)
+    // one slice (+ a sentinel) per trigger: the gated property is the
+    // migration (checkpoint → initial state, zero re-read), not the batch
+    // count — q222/q229 already price the one-file-per-trigger shape
+    val events = replayEvents(s, dir, SliceParts + 1, PostMigration)
     val name = s"graft_pipe_migrate_${streamGateRuns.incrementAndGet()}"
-    Extensions.withRocksDbTws(s, partitions) {
-      // one slice (+ a sentinel) per trigger: the gated property is the migration (checkpoint →
-      // initial state, zero re-read), not the batch count — q222/q229
-      // already price the one-file-per-trigger shape
-      val src = s.readStream.schema(rawSchema)
-        .option("pathGlobFilter", "slice0[4-6]*.parquet")
-        .option("maxFilesPerTrigger", SliceParts + 1).parquet(dir)
-      val scored = scoreSessions(s,
-        graft.streaming.SessionizerTws.sessionizeEventTimeWithInit(
-          toEvents(src), init, gapMs = 40000L, watermarkDelay = "30 seconds"))
-      val q = scored.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      Extensions.awaitBounded(q, name)
-      val streamed = q.recentProgress.map(_.numInputRows).sum
-      require(streamed == expectedStreamed,
-        s"state migration re-read source history: streamed $streamed rows, " +
-          s"expected exactly the post-migration slices ($expectedStreamed)")
-      Extensions.detachMemorySink(s, name)
+    val ran = Gates.run(s, name, Gates.Memory("append"), tws = true, partitions) {
+      scoreSessions(SessionizerTws.sessionizeEventTimeWithInit(
+        events, init, GapMs, WatermarkDelay))
     }
+    val streamed = ran.progress.map(_.numInputRows).sum
+    require(streamed == expectedStreamed,
+      s"state migration re-read source history: streamed $streamed rows, " +
+        s"expected exactly the post-migration slices ($expectedStreamed)")
+    ran.rows
   }
 
   /** q245: MID-MIGRATION CRASH INJECTION — the failure q242 could not
@@ -1007,81 +893,39 @@ object PipelineReplay {
   private val migrationCrashRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
   def stateMigrationCrashGate(s: SparkSession, d: String): DataFrame = {
-    implicit val spark: SparkSession = s
-    import spark.implicits._
     val dir = pipelineReplayDir(d)
-    val ck0 = ensureStateCheckpoint(s, d) // live fMGWS checkpoint, slices 1–3 open
+    // live fMGWS checkpoint, slices 1–3 open
+    val init = migratedInit(s, ensureStateCheckpoint(s, d))
     val work = java.nio.file.Files
       .createTempDirectory("graft-migrate-crash").toString
     val ck = s"$work/ck"
-    val rawSchema = org.apache.spark.sql.Encoders.product[TimedRawLine].schema
-    val expectedStreamed = s.read.schema(rawSchema)
-      .option("pathGlobFilter", "slice0[4-6]*.parquet").parquet(dir).count()
-    def toEvents(df: DataFrame) = df.as[TimedRawLine].flatMap { raw =>
-      PurchaseCsv.route(raw.value).map(ev =>
-        TimedLineEvent(ev.invoiceNo, raw.event_ts, ev.purchase, ev.errorReason))
-    }
+    val expectedStreamed = postMigrationRows(s, dir)
+    val scored = scoreSessions(SessionizerTws.sessionizeEventTimeWithInit(
+      replayEvents(s, dir, SliceParts + 1, PostMigration), init,
+      GapMs, WatermarkDelay))
     val injected = new java.util.concurrent.atomic.AtomicInteger(0)
     val replayOverwrites = new java.util.concurrent.atomic.AtomicInteger(0)
     val slots = new java.util.concurrent.ConcurrentHashMap[
       java.lang.Long, Array[org.apache.spark.sql.Row]]()
-    var outSchema: org.apache.spark.sql.types.StructType = null
     val name = s"graft_migrate_crash_${migrationCrashRuns.incrementAndGet()}"
+    val sink = Gates.ForeachBatch({ (batch, id) =>
+      // collect() executes the micro-batch: when it returns, every
+      // state partition has committed — for batch 0, that commit IS
+      // the initial-state bulk load
+      val rows = batch.collect()
+      if (slots.put(Long.box(id), rows) != null) replayOverwrites.incrementAndGet()
+      // the injection: bulk-loaded state is on disk, the commit-log
+      // entry for batch 0 is not — the exact mid-migration window
+      if (id == 0L && injected.compareAndSet(0, 1))
+        throw new RuntimeException(
+          s"${Gates.InjectedMarker} crash after initial-state bulk load, " +
+            "before batch-0 commit-log write")
+      ()
+    }, checkpoint = Some(ck))
+    def run(): Long = Gates.run(s, name, sink, tws = true)(scored)
+      .progress.map(_.numInputRows).sum
 
-    def run(): Long = Extensions.withRocksDbTws(s) {
-      val snap = s.read.format("statestore").option("path", ck0).load()
-        .select(col("key.value"),
-          col("value.groupState.lines"),
-          col("value.groupState.errorReason"),
-          col("value.groupState.maxEventMs"))
-        .as[(String, List[graft.streaming.Purchase], Option[String], Long)]
-      val init = snap
-        .map { case (inv, ls, err, maxMs) =>
-          (inv, graft.streaming.SessionizerTws.packInit(
-            graft.streaming.EventSessionState(ls, err, maxMs)))
-        }
-        .groupByKey(_._1).mapValues(_._2)
-      val src = s.readStream.schema(rawSchema)
-        .option("pathGlobFilter", "slice0[4-6]*.parquet")
-        .option("maxFilesPerTrigger", SliceParts + 1).parquet(dir)
-      val scored = scoreSessions(s,
-        graft.streaming.SessionizerTws.sessionizeEventTimeWithInit(
-          toEvents(src), init, gapMs = 40000L, watermarkDelay = "30 seconds"))
-      outSchema = scored.schema
-      val q = scored.writeStream
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          // collect() executes the micro-batch: when it returns, every
-          // state partition has committed — for batch 0, that commit IS
-          // the initial-state bulk load
-          val rows = batch.collect()
-          if (slots.put(Long.box(id), rows) != null) replayOverwrites.incrementAndGet()
-          // the injection: bulk-loaded state is on disk, the commit-log
-          // entry for batch 0 is not — the exact mid-migration window
-          if (id == 0L && injected.compareAndSet(0, 1))
-            throw new RuntimeException(
-              "graft-injected crash after initial-state bulk load, " +
-                "before batch-0 commit-log write")
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      Extensions.awaitBounded(q, name)
-      q.recentProgress.map(_.numInputRows).sum
-    }
-
-    def injectedError(t: Throwable): Boolean =
-      t != null && (Option(t.getMessage).exists(_.contains("graft-injected"))
-        || injectedError(t.getCause))
-    // only the INJECTED failure is absorbed — any other first-run error
-    // (a real bug in the bulk-load path) propagates and fails the gate
-    var firstRunDied = false
-    try run()
-    catch { case e: Throwable if injectedError(e) => firstRunDied = true }
-    require(firstRunDied,
-      "first run was expected to die on the injected mid-migration crash, " +
-        "but survived")
+    Gates.expectInjectedCrash("mid-migration crash")(run())
     // fence 2: the bulk load really committed before the crash — version-1
     // state files (RocksDB changelog/snapshot) exist under the crashed
     // checkpoint even though its commit log holds no batch
@@ -1110,9 +954,7 @@ object PipelineReplay {
         s"$streamedRestart rows, expected exactly the post-migration " +
         s"slices ($expectedStreamed)")
     val all = slots.values().asScala.flatMap(_.toSeq).toSeq
-    s.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        java.util.Arrays.asList(all: _*)), outSchema)
+    s.createDataFrame(java.util.Arrays.asList(all: _*), scored.schema)
   }
 
   /** q237: TIMER introspection — the `statestore` source's
@@ -1134,7 +976,7 @@ object PipelineReplay {
       .option("path", ck).option("readRegisteredTimers", true).load()
       .select(
         col("key.value").as("invoice_no"),
-        ((col("expiration_timestamp_ms") - lit(40000L) - lit(ReplayBaseMs))
+        ((col("expiration_timestamp_ms") - lit(GapMs) - lit(ReplayBaseMs))
           / lit(SliceStepMs) + lit(1)).cast("long").as("expiry_slice"))
   }
 

@@ -3,18 +3,20 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.QueryDef
-import graft.ml.{Anomaly, ReferenceArtifacts}
+import graft.ml.{Anomaly, PinnedKmeansModel, ReferenceArtifacts}
 
 /** Reference-artifact scoring parity: score the fixture invoice features
   * against the reference's COMMITTED trained models (centers parquet +
   * threshold scalars) and emit the same anomaly verdicts the original
   * pipeline would (realtime/InvoicePipeline.scala:340-354).
   *
-  * The DuckDB oracles read the SAME artifact files via read_parquet /
-  * read_csv — nothing is re-derived and nothing is hardcoded except the
-  * bisecting tree's 5-node topology (asserted equal to the artifact in
-  * ReferenceParitySpec). Both engines compute the identical squared-distance
-  * polynomial in the identical fold order, so scores hash-match bit-for-bit.
+  * The KMeans model is pinned ([[PinnedKmeansModel]], asserted equal to
+  * the artifacts in ReferenceParitySpec) and both engines score against
+  * the same literals. The bisecting tree is not recorded in the repo: its
+  * oracle reads the artifact files via read_parquet / read_csv, and
+  * hardcodes only the tree's 5-node topology. Both engines compute the
+  * identical squared-distance polynomial in the identical fold order, so
+  * scores hash-match bit-for-bit.
   */
 object ReferenceQueries {
 
@@ -22,14 +24,11 @@ object ReferenceQueries {
 
   /** KMeans parity: predict = global nearest center, score = sqdist to it,
     * verdict = score > committed threshold (KMeansClusterInvoices.scala:72-76). */
-  def referenceScoringKmeans(s: SparkSession, d: String): DataFrame = {
-    val centers = ReferenceArtifacts.kmeansCenters(s, root)
-    val thresh = ReferenceArtifacts.kmeansThreshold(root)
+  def referenceScoringKmeans(s: SparkSession, d: String): DataFrame =
     Relational.validFeatures(s, d)
-      .withColumn("score", Anomaly.minSqdist(centers))
-      .withColumn("is_anomaly", col("score") > lit(thresh))
+      .withColumn("score", Anomaly.minSqdist(PinnedKmeansModel.centers))
+      .withColumn("is_anomaly", col("score") > lit(PinnedKmeansModel.threshold))
       .select("invoice_no", "score", "is_anomaly")
-  }
 
   /** The five squared-diff terms in featureCols order — must mirror
     * Anomaly.sqdistTo exactly (same term order, same left-to-right adds). */
@@ -39,13 +38,11 @@ object ReferenceQueries {
       .mkString(" + ")
 
   val referenceScoringKmeansSql: String = s"""
-    WITH ctr AS (SELECT point."values" AS c
-                 FROM read_parquet('$root/clustering/data/*.parquet')),
+    WITH ctr AS (${PinnedKmeansModel.centersSql}),
     f AS (${Relational.validFeaturesSql.replace("\n", " ")}),
     d AS (SELECT f.invoice_no, ${sqSql("c")} AS sq FROM f CROSS JOIN ctr),
     s AS (SELECT invoice_no, min(sq) AS score FROM d GROUP BY invoice_no),
-    t AS (SELECT th FROM read_csv('$root/threshold', header=false,
-                                  columns={'th': 'DOUBLE'}))
+    t AS (${PinnedKmeansModel.thresholdSql})
     SELECT invoice_no, score, score > th AS is_anomaly FROM s CROSS JOIN t"""
 
   /** Bisecting parity: predict = TREE DESCENT through the committed cluster

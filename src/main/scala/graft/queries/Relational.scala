@@ -466,16 +466,14 @@ object Relational {
     * RelationalSpec pins the decorrelated plan (no nested-loop, no
     * cartesian). Ties (two orders sharing the customer max) are kept by
     * both engines — set semantics, no arbitrary pick. */
-  def correlatedMaxOrder(s: SparkSession, d: String): DataFrame = {
-    Tables.orders(s, d).createOrReplaceTempView("graft_orders_v")
-    s.sql("""
+  def correlatedMaxOrder(s: SparkSession, d: String): DataFrame =
+    Extensions.sqlOver(s, "orders" -> Tables.orders(s, d))("""
       SELECT o_orderkey, o_custkey,
              CAST(floor(o_totalprice * 1e2) AS BIGINT) AS cents
-      FROM graft_orders_v o
+      FROM {orders} o
       WHERE o_totalprice = (SELECT max(o2.o_totalprice)
-                            FROM graft_orders_v o2
+                            FROM {orders} o2
                             WHERE o2.o_custkey = o.o_custkey)""")
-  }
 
   val correlatedMaxOrderSql: String = """
     SELECT o_orderkey, o_custkey,

@@ -2,18 +2,17 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-14 verdict #3: the stateConfLock discipline serializes
-  * session-conf mutation, but no test ran registry queries CONCURRENTLY
-  * in one SparkSession — which is how a production cluster actually runs
-  * a mixed workload. This spec executes a deliberately hostile mix —
+/** Registry queries run CONCURRENTLY in one SparkSession — how a
+  * production cluster runs a mixed workload. A deliberately hostile mix —
   * batch joins, a sliding window, the cached ML fit, a native streaming
-  * dedup (shuffle-partition override), the fMGWS and TWS pipelines
-  * (RocksDB provider override), the late-data gate (progress-metric
-  * read-back) — in 8 parallel threads against the SHARED test session,
-  * and asserts every result is bit-identical to its serial twin. Any
-  * cross-contamination (leaked partition count, leaked state-store
-  * provider, temp-view collision, fixture race) diverges a result or
-  * throws, and fails the spec by name. */
+  * dedup (state-partition conf), the fMGWS and TWS pipelines (RocksDB
+  * provider conf), the late-data gate (progress read-back) — runs in 8
+  * parallel threads against the SHARED test session, and every result
+  * must be bit-identical to its serial twin. Gates set their conf on the
+  * shared session only around `start()` (streaming.Gates), so the runs
+  * themselves overlap freely. Any cross-contamination (leaked partition
+  * count, leaked state-store provider, temp-view collision, fixture race)
+  * diverges a result or throws, and fails the spec by name. */
 class ConcurrentGatesSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
@@ -23,9 +22,9 @@ class ConcurrentGatesSpec extends AnyFunSuite {
     "q05_cancel_sliding",         // sliding window
     "q17_kmeans_anomalies",       // live fit behind the keyed cache
     "q71_dedup_keep_best",        // wide shuffle agg
-    "q226_streaming_dedup_native",// streaming, withStatePartitions override
+    "q226_streaming_dedup_native",// streaming, state-partition conf
     "q216_pipeline_streaming",    // fMGWS pipeline replay
-    "q228_pipeline_tws",          // TWS pipeline, withRocksDbTws override
+    "q228_pipeline_tws",          // TWS pipeline, RocksDB provider conf
     "q243_late_data_accounting")  // watermark ledger, progress read-back
 
   /** Deterministic normalized row multiset: every cell stringified

@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ml.Anomaly
 import graft.operators.Dedup
 import graft.functions.TextFunctions
+import graft.streaming.Gates
 
 /** Guards for the DRIVER's verification harness and the preconditions the
   * oracles silently rely on — each test here pins a failure class that has
@@ -15,18 +16,84 @@ class GateHygieneSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
+  /** One registry pass: each query's output schema (or the error it
+    * threw), and whatever it left behind on the caller's session — a
+    * `graft_*` temp view, an active stream, or a gate conf key whose value
+    * changed. Gates run their streams inside the query function. */
+  private lazy val sweep: Seq[GateHygieneSpec.Swept] = {
+    import GateHygieneSpec.Swept
+    def graftViews: Set[String] = spark.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name).filter(_.startsWith("graft_")).toSet
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val viewsBefore = graftViews
+      val confBefore = Gates.confKeys.map(k => k -> spark.conf.getOption(k))
+      val schema =
+        try Right(fn(spark, sf).schema)
+        catch { case scala.util.control.NonFatal(e) => Left(e) }
+      val leftovers = (graftViews -- viewsBefore).toSeq.sorted.map(v => s"temp view $v") ++
+        spark.streams.active.map(q => s"active stream ${q.name}") ++
+        confBefore.collect { case (k, v) if spark.conf.getOption(k) != v =>
+          s"conf $k = ${spark.conf.getOption(k)}, was $v" }
+      Swept(name, schema, leftovers)
+    }
+  }
+
   test("no registry query emits array/map/struct output columns " +
     "(driver comparator sorts rows with pandas; nested cells crash it)") {
-    val offending = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val schema = fn(spark, sf).schema
-      schema.fields.collect {
+    val offending = sweep.flatMap { w =>
+      w.schema.fold(e => throw e, _.fields.toSeq).collect {
         case f if f.dataType.isInstanceOf[ArrayType] ||
                   f.dataType.isInstanceOf[MapType] ||
-                  f.dataType.isInstanceOf[StructType] => s"$name.${f.name}"
+                  f.dataType.isInstanceOf[StructType] => s"${w.name}.${f.name}"
       }
     }
     assert(offending.isEmpty,
       s"driver-unsortable columns in registry output: ${offending.mkString(", ")}")
+  }
+
+  test("every registry gate leaves the caller's session as it found it: " +
+    "no graft_ temp view, no active stream, every gate conf key restored") {
+    val dirty = sweep.filter(_.leftovers.nonEmpty)
+      .map(w => s"${w.name}: ${w.leftovers.mkString("; ")}")
+    assert(dirty.isEmpty, s"gates left state behind:\n${dirty.mkString("\n")}")
+  }
+
+  test("gate conf is captured at start(): the caller's conf is restored " +
+    "while the query runs, and the query keeps the gate's state partitions") {
+    import spark.implicits._
+    val key = "spark.sql.shuffle.partitions"
+    val callerValue = spark.conf.get(key)
+    val dir = java.nio.file.Files.createTempDirectory("gate-conf").toString
+    val base = System.currentTimeMillis() - 60000L
+    (0 until 2).foreach { i =>
+      graft.queries.Extensions.writeSingleParquet((i * 10 until i * 10 + 20).toDF("k"),
+        dir, s"f$i.parquet", mtime = Some(base + i * 1000L))
+    }
+    // 16 is the q240 resize path
+    Seq(Gates.StatePartitions, 16).foreach { parts =>
+      assert(callerValue != parts.toString, "the caller's value must differ")
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val ran = Gates.run(spark, s"gate_conf_capture_$parts",
+          Gates.ForeachBatch { (batch, _) =>
+            // read on the stream's thread while the query runs; wait out
+            // only the start() window, which a run-long lock never ends
+            val deadline = System.currentTimeMillis() + 30000L
+            while (spark.conf.get(key) != callerValue &&
+              System.currentTimeMillis() < deadline) Thread.sleep(10L)
+            seen.add(spark.conf.get(key))
+            batch.collect(): Unit
+          }, partitions = parts) {
+        spark.readStream.schema("k INT").option("maxFilesPerTrigger", 1)
+          .parquet(dir).dropDuplicates("k")
+      }
+      assert(seen.size === 2)
+      assert(seen.toArray.forall(_ == callerValue),
+        s"caller's $key read ${seen} while the gate ran, expected $callerValue")
+      val partsSeen = ran.progress.flatMap(_.stateOperators.map(_.numShufflePartitions))
+      assert(partsSeen.nonEmpty && partsSeen.forall(_ == parts),
+        s"state partitions ${partsSeen.toSeq}, expected $parts: the query " +
+          "no longer keeps the conf it was started under")
+    }
   }
 
   test("every registry query has an oracle — zero rows-only rows") {
@@ -231,4 +298,9 @@ class GateHygieneSpec extends AnyFunSuite {
       assert(inBand === 0L, s"$d has $inBand pairs in the ambiguous band")
     }
   }
+}
+
+object GateHygieneSpec {
+  final case class Swept(name: String, schema: Either[Throwable, StructType],
+                         leftovers: Seq[String])
 }

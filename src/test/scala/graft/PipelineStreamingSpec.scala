@@ -28,8 +28,8 @@ class PipelineStreamingSpec extends AnyFunSuite {
     val lines = PipelineReplay.manufacturedLines(spark, sf)
       .select("value").as[String]
     val events = lines.flatMap(graft.streaming.PurchaseCsv.route _)
-    val centers = graft.ml.ReferenceArtifacts.kmeansCenters(spark)
-    val thresh = graft.ml.ReferenceArtifacts.kmeansThreshold()
+    val centers = graft.ml.PinnedKmeansModel.centers
+    val thresh = graft.ml.PinnedKmeansModel.threshold
     val valid = col("status") === "valid"
     graft.streaming.Sessionizer.sessionizeBatch(events).toDF()
       .select(
@@ -100,7 +100,7 @@ class PipelineStreamingSpec extends AnyFunSuite {
   }
 
   test("scored columns: anomalies exist and are exactly score > threshold") {
-    val thresh = graft.ml.ReferenceArtifacts.kmeansThreshold()
+    val thresh = graft.ml.PinnedKmeansModel.threshold
     val bad = streamOut.filter(col("status") === "valid" &&
       col("is_anomaly") =!= (col("score") > lit(thresh)))
     assert(bad.count() === 0)

@@ -140,6 +140,16 @@ class ReferenceParitySpec extends AnyFunSuite {
     assert(tree.values.forall(_.center.length === 5))
   }
 
+  test("pinned KMeans model equals the committed artifacts exactly") {
+    val root = graft.ml.ReferenceArtifacts.DefaultRoot
+    assume(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$root/threshold")))
+    val spark = SparkTestSession.spark
+    assert(graft.ml.ReferenceArtifacts.kmeansCenters(spark, root) ===
+      graft.ml.PinnedKmeansModel.centers)
+    assert(graft.ml.ReferenceArtifacts.kmeansThreshold(root) ===
+      graft.ml.PinnedKmeansModel.threshold)
+  }
+
   test("sweep covers the reference's k=1..20 range including the k=1 edge") {
     val spark = SparkTestSession.spark
     import spark.implicits._

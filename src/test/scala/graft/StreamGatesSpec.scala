@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.{Extensions, PipelineReplay}
+import graft.streaming.Gates
 
 /** First-execution coverage for the round-12 gates that landed with none
   * (round-12 verdict #3: q223/q224/q226/q227 had "no driver row, no
@@ -39,7 +40,7 @@ class StreamGatesSpec extends AnyFunSuite {
     val q = in.toDS().writeStream.format("memory")
       .queryName("hang_guard_probe").outputMode("append").start()
     val e = intercept[IllegalArgumentException] {
-      Extensions.awaitBounded(q, "hang_guard_probe", timeoutMs = 2000L)
+      Gates.awaitBounded(q, "hang_guard_probe", timeoutMs = 2000L)
     }
     assert(e.getMessage.contains("did not terminate"))
     assert(!q.isActive, "awaitBounded must stop the query it timed out on")
@@ -232,21 +233,19 @@ class StreamGatesSpec extends AnyFunSuite {
       val sink: (org.apache.spark.sql.DataFrame, Long) => Unit = (b, _) =>
         b.select("topic", "value").collect()
           .foreach(r => rows.add((r.getString(0), r.getString(1))))
-      def body(): Unit = {
-        val q = InvoicePipeline.runUnified(input.toDS(), models, sink, ck,
-          sessionTimeout = "2 seconds",
-          trigger = org.apache.spark.sql.streaming.Trigger
-            .ProcessingTime("500 milliseconds"),
-          relationalParse = false, tws = tws)
-        try {
-          input.addData(lines)
-          // 32 expected emissions (30 valid→kmeans, 1 error, 1 cancel)
-          val deadline = System.currentTimeMillis() + 60000
-          while (rows.size() < 32 && System.currentTimeMillis() < deadline)
-            Thread.sleep(200)
-        } finally q.stop()
-      }
-      if (tws) Extensions.withRocksDbTws(spark)(body()) else body()
+      def start() = InvoicePipeline.runUnified(input.toDS(), models, sink, ck,
+        sessionTimeout = "2 seconds",
+        trigger = org.apache.spark.sql.streaming.Trigger
+          .ProcessingTime("500 milliseconds"),
+        relationalParse = false, tws = tws)
+      val q = if (tws) Gates.start(spark, tws = true)(start()) else start()
+      try {
+        input.addData(lines)
+        // 32 expected emissions (30 valid→kmeans, 1 error, 1 cancel)
+        val deadline = System.currentTimeMillis() + 60000
+        while (rows.size() < 32 && System.currentTimeMillis() < deadline)
+          Thread.sleep(200)
+      } finally q.stop()
       import scala.jdk.CollectionConverters._
       rows.asScala.toSeq.sorted
     }

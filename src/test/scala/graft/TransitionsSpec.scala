@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.streaming.Transitions
+import graft.streaming.{Gates, Transitions}
 
 /** q210's operator laws: keyed-state transition extraction must equal the
   * batch lag window, including across micro-batch boundaries and at
@@ -25,14 +25,11 @@ class TransitionsSpec extends AnyFunSuite {
       graft.queries.Extensions.writeSingleParquet(
         evs.toDS().toDF(), dir, s"f$i.parquet", mtime = Some(base + i * 1000L))
     }
-    val name = "trans_spec_gate"
     val src = spark.readStream.schema(f1.toDS().schema)
       .option("maxFilesPerTrigger", 1).parquet(dir)
-    val q = Transitions.transitionPairs(src.as[Ev], idleHorizon = None)
-      .writeStream.format("memory").queryName(name).outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    graft.queries.Extensions.awaitBounded(q, name)
-    val got = spark.table(name).collect()
+    val got = Gates.run(spark, "trans_spec_gate", Gates.Memory("append")) {
+      Transitions.transitionPairs(src.as[Ev], idleHorizon = None)
+    }.rows.collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2))).sorted.toSeq
     // (view -> click) and (signup -> view for user 2) ONLY exist if state
     // carried the last file-1 event into the file-2 batch
@@ -133,75 +130,58 @@ class TransitionsSpec extends AnyFunSuite {
     // processAllAvailable-based coordination is unreliable; AvailableNow
     // terminates deterministically (the q225 gate runs the same way)
     import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val f1 = Seq(Ev(1L, ts(10), 100L, "signup"), Ev(1L, ts(20), 101L, "view"),
-        Ev(2L, ts(15), 102L, "signup"))
-      val f2 = Seq(Ev(1L, ts(30), 103L, "click"), Ev(2L, ts(40), 104L, "view"))
-      val dir = java.nio.file.Files.createTempDirectory("tws").toString
-      val base = System.currentTimeMillis() - 60000L
-      Seq(f1, f2).zipWithIndex.foreach { case (evs, i) =>
-        graft.queries.Extensions.writeSingleParquet(
-          evs.toDS().toDF(), dir, s"f$i.parquet", mtime = Some(base + i * 1000L))
-      }
-      val name = "tws_spec_gate"
-      val src = spark.readStream.schema(f1.toDS().schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir)
-      val q = graft.streaming.TransitionsTws.transitionPairs(src.as[Ev])
-        .writeStream.format("memory").queryName(name).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      graft.queries.Extensions.awaitBounded(q, name)
-      val got = spark.table(name).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).sorted.toSeq
-      // the exact multiset the GroupState version produces on this feed
-      // (cross-batch carry included)
-      assert(got === Seq((1L, "signup", "view"), (1L, "view", "click"),
-        (2L, "signup", "view")))
-      spark.catalog.dropTempView(name)
-    } finally prior match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None    => spark.conf.unset(providerKey)
+    val f1 = Seq(Ev(1L, ts(10), 100L, "signup"), Ev(1L, ts(20), 101L, "view"),
+      Ev(2L, ts(15), 102L, "signup"))
+    val f2 = Seq(Ev(1L, ts(30), 103L, "click"), Ev(2L, ts(40), 104L, "view"))
+    val dir = java.nio.file.Files.createTempDirectory("tws").toString
+    val base = System.currentTimeMillis() - 60000L
+    Seq(f1, f2).zipWithIndex.foreach { case (evs, i) =>
+      graft.queries.Extensions.writeSingleParquet(
+        evs.toDS().toDF(), dir, s"f$i.parquet", mtime = Some(base + i * 1000L))
     }
+    val src = spark.readStream.schema(f1.toDS().schema)
+      .option("maxFilesPerTrigger", 1).parquet(dir)
+    val got = Gates.run(spark, "tws_spec_gate", Gates.Memory("append"), tws = true) {
+      graft.streaming.TransitionsTws.transitionPairs(src.as[Ev])
+    }.rows.collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).sorted.toSeq
+    // the exact multiset the GroupState version produces on this feed
+    // (cross-batch carry included)
+    assert(got === Seq((1L, "signup", "view"), (1L, "view", "click"),
+      (2L, "signup", "view")))
   }
 
   test("q225 TTL: a carry older than the state TTL is evicted across a restart; " +
     "a generous TTL keeps it") {
     import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // two AvailableNow executions sharing a checkpoint (the q222
-      // restart pattern) put REAL wall-clock between the carry's write
-      // and its read; TTL state is an expiration timestamp, so it
-      // expires across restarts exactly like within one run
-      def run(ttlMs: Long, sleepMs: Long, tag: String): Seq[(Long, String, String)] = {
-        val work = java.nio.file.Files.createTempDirectory("twsttl").toString
-        val srcDir = s"$work/src"
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
-        val base = System.currentTimeMillis() - 60000L
-        def stage(n: String, evs: Seq[Ev], m: Long): Unit =
-          graft.queries.Extensions.writeSingleParquet(
-            evs.toDS().toDF(), srcDir, n, mtime = Some(m))
-        def exec(qn: String): Unit = {
-          val src = spark.readStream
-            .schema(Seq.empty[Ev].toDS().schema).parquet(srcDir)
-          // A real TTL forces TimeMode.ProcessingTime, where
-          // shouldRunAnotherBatch is unconditionally true — under
-          // Trigger.AvailableNow the query NEVER terminates, and
-          // processAllAvailable never returns either (isCurrentBatch-
-          // Constructed stays true, so noNewData is never signalled;
-          // round-12/13 finding). Trigger.Once runs EXACTLY one batch and
-          // terminates regardless — the only deterministic harness for a
-          // processing-time-mode operator.
-          // FILE sink, not memory: the memory sink refuses to resume from
-          // an existing checkpoint ("does not support recovering"), and the
-          // restart IS the point of this harness
-          val q = graft.streaming.TransitionsTws.transitionPairs(src.as[Ev],
+    // two AvailableNow executions sharing a checkpoint (the q222
+    // restart pattern) put REAL wall-clock between the carry's write
+    // and its read; TTL state is an expiration timestamp, so it
+    // expires across restarts exactly like within one run
+    def run(ttlMs: Long, sleepMs: Long, tag: String): Seq[(Long, String, String)] = {
+      val work = java.nio.file.Files.createTempDirectory("twsttl").toString
+      val srcDir = s"$work/src"
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
+      val base = System.currentTimeMillis() - 60000L
+      def stage(n: String, evs: Seq[Ev], m: Long): Unit =
+        graft.queries.Extensions.writeSingleParquet(
+          evs.toDS().toDF(), srcDir, n, mtime = Some(m))
+      def exec(qn: String): Unit = {
+        val src = spark.readStream
+          .schema(Seq.empty[Ev].toDS().schema).parquet(srcDir)
+        // A real TTL forces TimeMode.ProcessingTime, where
+        // shouldRunAnotherBatch is unconditionally true — under
+        // Trigger.AvailableNow the query NEVER terminates, and
+        // processAllAvailable never returns either (isCurrentBatch-
+        // Constructed stays true, so noNewData is never signalled;
+        // round-12/13 finding). Trigger.Once runs EXACTLY one batch and
+        // terminates regardless — the only deterministic harness for a
+        // processing-time-mode operator.
+        // FILE sink, not memory: the memory sink refuses to resume from
+        // an existing checkpoint ("does not support recovering"), and the
+        // restart IS the point of this harness
+        val q = Gates.start(spark, tws = true) {
+          graft.streaming.TransitionsTws.transitionPairs(src.as[Ev],
               ttl = org.apache.spark.sql.streaming.TTLConfig(
                 java.time.Duration.ofMillis(ttlMs)))
             .writeStream.format("parquet").outputMode("append")
@@ -209,28 +189,25 @@ class TransitionsSpec extends AnyFunSuite {
             .option("checkpointLocation", s"$work/ck")
             .trigger(org.apache.spark.sql.streaming.Trigger.Once())
             .start()
-          graft.queries.Extensions.awaitBounded(q, qn)
         }
-        stage("f0.parquet", Seq(Ev(1L, ts(10), 100L, "signup")), base)
-        exec(s"tws_ttl_${tag}_r1")
-        Thread.sleep(sleepMs)
-        stage("f1.parquet", Seq(Ev(1L, ts(20), 101L, "view")), base + 1000L)
-        exec(s"tws_ttl_${tag}_r2")
-        spark.read
-          .schema(org.apache.spark.sql.Encoders.product[Transitions.Pair].schema)
-          .parquet(s"$work/out").collect()
-          .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
+        Gates.awaitBounded(q, qn)
       }
-      // control first: generous TTL keeps the carry — proves the harness
-      // would SEE a pair if eviction failed
-      assert(run(ttlMs = 600000L, sleepMs = 10L, tag = "keep") ===
-        Seq((1L, "signup", "view")))
-      // tight TTL + longer wait: the carried signup must be gone
-      assert(run(ttlMs = 300L, sleepMs = 1500L, tag = "drop") === Seq.empty,
-        "TTL-expired carry must not pair")
-    } finally prior match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None    => spark.conf.unset(providerKey)
+      stage("f0.parquet", Seq(Ev(1L, ts(10), 100L, "signup")), base)
+      exec(s"tws_ttl_${tag}_r1")
+      Thread.sleep(sleepMs)
+      stage("f1.parquet", Seq(Ev(1L, ts(20), 101L, "view")), base + 1000L)
+      exec(s"tws_ttl_${tag}_r2")
+      spark.read
+        .schema(org.apache.spark.sql.Encoders.product[Transitions.Pair].schema)
+        .parquet(s"$work/out").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
     }
+    // control first: generous TTL keeps the carry — proves the harness
+    // would SEE a pair if eviction failed
+    assert(run(ttlMs = 600000L, sleepMs = 10L, tag = "keep") ===
+      Seq((1L, "signup", "view")))
+    // tight TTL + longer wait: the carried signup must be gone
+    assert(run(ttlMs = 300L, sleepMs = 1500L, tag = "drop") === Seq.empty,
+      "TTL-expired carry must not pair")
   }
 }

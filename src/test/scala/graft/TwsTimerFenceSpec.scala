@@ -1,8 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.queries.Extensions
-import graft.streaming.{Purchase, SessionizerTws, TimedLineEvent}
+import graft.streaming.{Gates, Purchase, SessionizerTws, TimedLineEvent}
 
 /** Round-14 verdict #6: promote the timer point-delete discipline from
   * prose (THROUGHPUT.md's 1.7× overload-drain win) to a fenced
@@ -36,63 +35,63 @@ class TwsTimerFenceSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    Extensions.withRocksDbTws(spark) {
-      val input = MemoryStream[TimedLineEvent]
-      // 10 s gap, 600 s watermark delay: the watermark stays far below
-      // the working timestamps until the sentinel, so deadlines are
-      // purely maxEventMs + gap and the zero-op re-touch is exact
-      val out = SessionizerTws.sessionizeEventTime(
-        input.toDS(), gapMs = 10000L, watermarkDelay = "600 seconds")
-      val name = "tws_timer_fence"
-      val q = out.writeStream.format("memory").queryName(name)
+    val input = MemoryStream[TimedLineEvent]
+    // 10 s gap, 600 s watermark delay: the watermark stays far below
+    // the working timestamps until the sentinel, so deadlines are
+    // purely maxEventMs + gap and the zero-op re-touch is exact
+    val out = SessionizerTws.sessionizeEventTime(
+      input.toDS(), gapMs = 10000L, watermarkDelay = "600 seconds")
+    val name = "tws_timer_fence"
+    val q = Gates.start(spark, tws = true) {
+      out.writeStream.format("memory").queryName(name)
         .outputMode("append").start()
-      try {
-        // batch 1: 10 fresh keys → 10 first-arms, 0 deletes
-        input.addData((1 to 10).map(i => ev(s"K$i", 0L)))
-        q.processAllAvailable()
-        // batch 2: SAME keys, SAME event time → same deadline → the
-        // re-touch must be store-op-free (0 registered, 0 deleted)
-        input.addData((1 to 10).map(i => ev(s"K$i", 0L)))
-        q.processAllAvailable()
-        // batch 3: same 10 keys 5 s later (10 point deletes + 10
-        // re-arms) plus 5 fresh keys (5 first-arms)
-        input.addData((1 to 10).map(i => ev(s"K$i", 5L)) ++
-          (11 to 15).map(i => ev(s"K$i", 5L)))
-        q.processAllAvailable()
-        // batch 4: far-future sentinel → watermark passes all 15 live
-        // deadlines → 15 expirations (the sentinel's own timer stays)
-        input.addData(Seq(ev("SENTINEL", 1000000L)))
-        q.processAllAvailable()
-        // the expiry batch is watermark-triggered and may run just after
-        // processAllAvailable returns — wait on the emission count
-        val deadline = System.currentTimeMillis() + 60000L
-        while (spark.table(name).count() < 15 &&
-          System.currentTimeMillis() < deadline) Thread.sleep(200L)
-        assert(spark.table(name).count() === 15)
+    }
+    try {
+      // batch 1: 10 fresh keys → 10 first-arms, 0 deletes
+      input.addData((1 to 10).map(i => ev(s"K$i", 0L)))
+      q.processAllAvailable()
+      // batch 2: SAME keys, SAME event time → same deadline → the
+      // re-touch must be store-op-free (0 registered, 0 deleted)
+      input.addData((1 to 10).map(i => ev(s"K$i", 0L)))
+      q.processAllAvailable()
+      // batch 3: same 10 keys 5 s later (10 point deletes + 10
+      // re-arms) plus 5 fresh keys (5 first-arms)
+      input.addData((1 to 10).map(i => ev(s"K$i", 5L)) ++
+        (11 to 15).map(i => ev(s"K$i", 5L)))
+      q.processAllAvailable()
+      // batch 4: far-future sentinel → watermark passes all 15 live
+      // deadlines → 15 expirations (the sentinel's own timer stays)
+      input.addData(Seq(ev("SENTINEL", 1000000L)))
+      q.processAllAvailable()
+      // the expiry batch is watermark-triggered and may run just after
+      // processAllAvailable returns — wait on the emission count
+      val deadline = System.currentTimeMillis() + 60000L
+      while (spark.table(name).count() < 15 &&
+        System.currentTimeMillis() < deadline) Thread.sleep(200L)
+      assert(spark.table(name).count() === 15)
 
-        def msum(key: String): Long = q.recentProgress.flatMap(_.stateOperators
-          .map(o => Option(o.customMetrics.get(key)).map(_.longValue)
-            .getOrElse(0L))).sum
-        val registered = msum("numRegisteredTimers")
-        val deleted = msum("numDeletedTimers")
-        val expired = msum("numExpiredTimers")
-        // first-arms 10 + 5 + 1 (sentinel) + re-arms 10 = 26; deletes =
-        // 10 point deletes + 15 ENGINE auto-deletes of fired timers
-        // (measured: expiry removes the timer row and counts it) = 25.
-        // An unconditional delete+re-arm regression inflates both by the
-        // 10 zero-op re-touches (36/35); a leak-the-old-timer regression
-        // reads 26/15 and double-fires K1..K10
-        assert(registered === 26L,
-          s"numRegisteredTimers = $registered, point-delete profile expects 26")
-        assert(deleted === 25L,
-          s"numDeletedTimers = $deleted, point-delete profile expects 25 " +
-            "(10 point deletes + 15 expiry auto-deletes)")
-        assert(expired === 15L,
-          s"numExpiredTimers = $expired, expected the 15 live sessions")
-      } finally {
-        q.stop()
-        spark.catalog.dropTempView(name)
-      }
+      def msum(key: String): Long = q.recentProgress.flatMap(_.stateOperators
+        .map(o => Option(o.customMetrics.get(key)).map(_.longValue)
+          .getOrElse(0L))).sum
+      val registered = msum("numRegisteredTimers")
+      val deleted = msum("numDeletedTimers")
+      val expired = msum("numExpiredTimers")
+      // first-arms 10 + 5 + 1 (sentinel) + re-arms 10 = 26; deletes =
+      // 10 point deletes + 15 ENGINE auto-deletes of fired timers
+      // (measured: expiry removes the timer row and counts it) = 25.
+      // An unconditional delete+re-arm regression inflates both by the
+      // 10 zero-op re-touches (36/35); a leak-the-old-timer regression
+      // reads 26/15 and double-fires K1..K10
+      assert(registered === 26L,
+        s"numRegisteredTimers = $registered, point-delete profile expects 26")
+      assert(deleted === 25L,
+        s"numDeletedTimers = $deleted, point-delete profile expects 25 " +
+          "(10 point deletes + 15 expiry auto-deletes)")
+      assert(expired === 15L,
+        s"numExpiredTimers = $expired, expected the 15 live sessions")
+    } finally {
+      q.stop()
+      spark.catalog.dropTempView(name)
     }
   }
 
@@ -107,61 +106,61 @@ class TwsTimerFenceSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    Extensions.withRocksDbTws(spark) {
-      val initSnap = (1 to 10).map { i =>
-        (s"K$i", SessionizerTws.packInit(graft.streaming.EventSessionState(
-          List(Purchase(s"K$i", 1, "1/2/2024 7:15", 1.0, "c", "ES")),
-          None, BaseMs)))
-      }
-      val init = spark.createDataset(initSnap).groupByKey(_._1).mapValues(_._2)
-      val input = MemoryStream[TimedLineEvent]
-      val out = SessionizerTws.sessionizeEventTimeWithInit(
-        input.toDS(), init, gapMs = 10000L, watermarkDelay = "600 seconds")
-      val name = "tws_bootstrap_fence"
-      val q = out.writeStream.format("memory").queryName(name)
+    val initSnap = (1 to 10).map { i =>
+      (s"K$i", SessionizerTws.packInit(graft.streaming.EventSessionState(
+        List(Purchase(s"K$i", 1, "1/2/2024 7:15", 1.0, "c", "ES")),
+        None, BaseMs)))
+    }
+    val init = spark.createDataset(initSnap).groupByKey(_._1).mapValues(_._2)
+    val input = MemoryStream[TimedLineEvent]
+    val out = SessionizerTws.sessionizeEventTimeWithInit(
+      input.toDS(), init, gapMs = 10000L, watermarkDelay = "600 seconds")
+    val name = "tws_bootstrap_fence"
+    val q = Gates.start(spark, tws = true) {
+      out.writeStream.format("memory").queryName(name)
         .outputMode("append").start()
-      try {
-        // batch 0: ONE fresh key alongside the 10-key bulk load → 10 init
-        // arms + 1 first-arm, ZERO deletes (a delete here would mean the
-        // bulk load double-arms or scans)
-        input.addData(Seq(ev("W0", 0L)))
-        q.processAllAvailable()
-        // batch 1: touch HALF the bootstrapped keys 5 s later (5 point
-        // deletes + 5 re-arms — migrated state behaves exactly like
-        // organically-built state) + 3 fresh keys
-        input.addData((1 to 5).map(i => ev(s"K$i", 5L)) ++
-          (1 to 3).map(i => ev(s"F$i", 5L)))
-        q.processAllAvailable()
-        // sentinel: watermark passes all 14 live deadlines
-        input.addData(Seq(ev("SENTINEL", 1000000L)))
-        q.processAllAvailable()
-        val deadline = System.currentTimeMillis() + 60000L
-        while (spark.table(name).count() < 14 &&
-          System.currentTimeMillis() < deadline) Thread.sleep(200L)
-        assert(spark.table(name).count() === 14)
+    }
+    try {
+      // batch 0: ONE fresh key alongside the 10-key bulk load → 10 init
+      // arms + 1 first-arm, ZERO deletes (a delete here would mean the
+      // bulk load double-arms or scans)
+      input.addData(Seq(ev("W0", 0L)))
+      q.processAllAvailable()
+      // batch 1: touch HALF the bootstrapped keys 5 s later (5 point
+      // deletes + 5 re-arms — migrated state behaves exactly like
+      // organically-built state) + 3 fresh keys
+      input.addData((1 to 5).map(i => ev(s"K$i", 5L)) ++
+        (1 to 3).map(i => ev(s"F$i", 5L)))
+      q.processAllAvailable()
+      // sentinel: watermark passes all 14 live deadlines
+      input.addData(Seq(ev("SENTINEL", 1000000L)))
+      q.processAllAvailable()
+      val deadline = System.currentTimeMillis() + 60000L
+      while (spark.table(name).count() < 14 &&
+        System.currentTimeMillis() < deadline) Thread.sleep(200L)
+      assert(spark.table(name).count() === 14)
 
-        def msum(key: String): Long = q.recentProgress.flatMap(_.stateOperators
-          .map(o => Option(o.customMetrics.get(key)).map(_.longValue)
-            .getOrElse(0L))).sum
-        val registered = msum("numRegisteredTimers")
-        val deleted = msum("numDeletedTimers")
-        val expired = msum("numExpiredTimers")
-        // arms: 10 bootstrap + 1 (W0) + 5 re-arms + 3 (F*) + 1 (sentinel)
-        // = 20; deletes: 5 point deletes + 14 expiry auto-deletes = 19.
-        // A bulk load that re-arms per line (not per key) or double-arms
-        // inflates `registered`; one that forgets to arm reads 20-10=10
-        // and the 5 untouched K keys never emit (count < 14 above)
-        assert(registered === 20L,
-          s"numRegisteredTimers = $registered, bootstrap profile expects 20")
-        assert(deleted === 19L,
-          s"numDeletedTimers = $deleted, bootstrap profile expects 19 " +
-            "(5 point deletes + 14 expiry auto-deletes)")
-        assert(expired === 14L,
-          s"numExpiredTimers = $expired, expected the 14 live sessions")
-      } finally {
-        q.stop()
-        spark.catalog.dropTempView(name)
-      }
+      def msum(key: String): Long = q.recentProgress.flatMap(_.stateOperators
+        .map(o => Option(o.customMetrics.get(key)).map(_.longValue)
+          .getOrElse(0L))).sum
+      val registered = msum("numRegisteredTimers")
+      val deleted = msum("numDeletedTimers")
+      val expired = msum("numExpiredTimers")
+      // arms: 10 bootstrap + 1 (W0) + 5 re-arms + 3 (F*) + 1 (sentinel)
+      // = 20; deletes: 5 point deletes + 14 expiry auto-deletes = 19.
+      // A bulk load that re-arms per line (not per key) or double-arms
+      // inflates `registered`; one that forgets to arm reads 20-10=10
+      // and the 5 untouched K keys never emit (count < 14 above)
+      assert(registered === 20L,
+        s"numRegisteredTimers = $registered, bootstrap profile expects 20")
+      assert(deleted === 19L,
+        s"numDeletedTimers = $deleted, bootstrap profile expects 19 " +
+          "(5 point deletes + 14 expiry auto-deletes)")
+      assert(expired === 14L,
+        s"numExpiredTimers = $expired, expected the 14 live sessions")
+    } finally {
+      q.stop()
+      spark.catalog.dropTempView(name)
     }
   }
 
