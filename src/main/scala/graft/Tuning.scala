@@ -29,10 +29,9 @@ import scala.jdk.CollectionConverters._
   * STATE partitions are deliberately NOT auto-derived: a streaming
   * query's state partition count is baked into its checkpoint at first
   * start, so a data-proportional default would silently break resume.
-  * Gates pin 8 state partitions (`streaming.Gates.StatePartitions`);
-  * `statePartitions(estimatedKeys)` below is the deploy-time calculator
-  * for NEW queries, and resizing an existing one goes through the q240
-  * statestore-reader migration.
+  * Gates pin 8 state partitions (`streaming.Gates.StatePartitions`), and
+  * resizing an existing query goes through the q240 statestore-reader
+  * migration.
   */
 object Tuning {
   val DefaultTargetBytesPerPartition: Long = 8L << 20
@@ -116,8 +115,8 @@ object Tuning {
   }
 
   /** Checkpoint-I/O conf for local-FS checkpoints, set at session level
-    * by the driver mains (Bench / Verify / BenchOne) and per query start
-    * by [[graft.streaming.Gates]]. Two Spark-4.1 costs, measured by
+    * by [[Sessions]] for every main and per query start by
+    * [[graft.streaming.Gates]]. Two Spark-4.1 costs, measured by
     * thread-sampling the gate runs (q216 4.6→3.7 s, q222 6.8→5.3 s,
     * q228 5.8→4.9 s, q235 7.4→6.7 s):
     *  1. fileChecksum (new in 4.1, default on) writes and reads a paired
@@ -140,16 +139,4 @@ object Tuning {
 
   def applyCheckpointIoDefaults(s: org.apache.spark.sql.SparkSession): Unit =
     checkpointIoConf.foreach { case (k, v) => s.conf.set(k, v) }
-
-  /** Deploy-time state partition calculator for a NEW streaming query:
-    * RocksDB opens one native store per state partition per micro-batch
-    * (fixed per-batch cost), so size to keyspace — ~2M live keys per
-    * partition keeps each store in the low hundreds of MB — floored at
-    * the core count so every core drains state in parallel. */
-  def statePartitions(estimatedKeys: Long, cores: Int,
-                      targetKeysPerPartition: Long = 2L * 1000 * 1000): Int = {
-    val byKeys = ((estimatedKeys + targetKeysPerPartition - 1)
-      / targetKeysPerPartition).toInt
-    math.max(cores, byKeys)
-  }
 }

@@ -80,13 +80,6 @@ object InvoiceOps {
       count(lit(1)).as("line_count"),
       min(col("customer_id")).as("customer_id"))
 
-  /** P3: validity filter — customer present, date present, not a cancellation. */
-  def validInvoices(featurized: DataFrame): DataFrame =
-    featurized.filter(
-      col("customer_id").isNotNull && length(col("customer_id")) > 0 &&
-      col("last_date").isNotNull &&
-      !col("invoice_no").startsWith("C"))
-
   /** P5: cancellation predicate. */
   def isCancellation(invoiceNo: Column): Column = invoiceNo.startsWith("C")
 
@@ -115,7 +108,7 @@ object InvoiceOps {
     * runs over lineitem alone:
     *  - every aggregation buffer is mutable (decimal/double/long), so the
     *    plan is a HashAggregate with map-side partial aggregation, where
-    *    featurize(purchaseLines) carried min/max STRING buffers
+    *    featurize over the line-level join carried min/max STRING buffers
     *    (customer_id, last_date) and fell back to SortAggregate — sorting
     *    every line row on both sides of the exchange;
     *  - the exchange carries one partial row per invoice, not one row per
@@ -124,7 +117,7 @@ object InvoiceOps {
     *    matching order row supplies customer/hour/date/status directly
     *    (featurize's min/max over them folded a per-group CONSTANT).
     * Columns and values are bit-identical to
-    * featurize(purchaseLines(...)) — same per-row expressions, Exact
+    * featurize over lineitem ⋈ orders lines — same per-row expressions, Exact
     * decimal sums are order-free, and the fold-to-constant equalities
     * hold because the join key is unique on the order side. The lineitem
     * scan is spread first (Tuning.spreadNarrowScan): at gate SFs the
@@ -154,24 +147,6 @@ object InvoiceOps {
         date_format(o("o_orderdate"), "yyyy-MM-dd HH:mm:ss").as("last_date"),
         col("line_count"),
         o("o_custkey").cast("string").as("customer_id"),
-        o("o_orderstatus").as("order_status"))
-  }
-
-  /** Purchase-line-shaped view over the testdata. The join shuffles both
-    * sides on the order key — at 100 TB lineitem and orders would be
-    * co-bucketed on orderkey making this shuffle-free; here AQE picks the
-    * strategy. */
-  def purchaseLines(spark: SparkSession, sfDir: String): DataFrame = {
-    val li = graft.Tables.lineitem(spark, sfDir)
-    val o  = graft.Tables.orders(spark, sfDir)
-    li.join(o, li("l_orderkey") === o("o_orderkey"))
-      .select(
-        li("l_orderkey").cast("string").as("invoice_no"),
-        li("l_quantity").as("quantity"),
-        (li("l_extendedprice") / li("l_quantity")).as("unit_price"),
-        o("o_custkey").cast("string").as("customer_id"),
-        hour(o("o_orderdate")).cast("double").as("invoice_hour"),
-        date_format(o("o_orderdate"), "yyyy-MM-dd HH:mm:ss").as("invoice_date_str"),
         o("o_orderstatus").as("order_status"))
   }
 }

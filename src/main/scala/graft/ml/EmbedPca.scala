@@ -39,10 +39,6 @@ object EmbedPca {
   private def vecD: Column =
     transform(col("embedding"), x => x.cast("double"))
 
-  /** Session-independent layout for a reproducible fit. */
-  def canonicalLayout(emb: DataFrame): DataFrame =
-    emb.repartition(8, col("vec_id")).sortWithinPartitions("vec_id")
-
   /** Covariance-eigendecomposition fit; returns the k components as rows
     * of length d (component j = result(j)). */
   def fit(emb: DataFrame, kDims: Int = k): Seq[Seq[Double]] = {
@@ -53,7 +49,7 @@ object EmbedPca {
   }
 
   /** Committed q132 constants (fit at sf0.01, canonical layout) —
-    * regenerate with `runMain graft.ml.PinPcaMain`; GateHygieneSpec
+    * regenerate with `runMain graft.ml.PinMain pca`; GateHygieneSpec
     * refits and asserts exact equality. */
   val pinnedComponents: Seq[Seq[Double]] = PinnedPcaComponents.values
 

@@ -1,11 +1,11 @@
 package graft.ml
 
 /** The q167 encoder's committed BPE merge table (deterministic
-  * 24-merge fit on /root/testdata/sf0.01 documents) -- GENERATED by
-  * `runMain graft.ml.PinBpeMain`; do not hand-edit. BpeSpec
-  * retrains and asserts exact equality. */
+  * 24-merge fit on sf0.01 documents): (a, b) in rank order, the rank-r
+  * merge rewrites adjacent (a, b) to a+b. BpeSpec retrains and asserts
+  * exact equality.
+  * GENERATED by `runMain graft.ml.PinMain bpe`; do not hand-edit. */
 private[graft] object PinnedBpeMerges {
-  /** (a, b) in rank order: rank-r merge rewrites adjacent (a, b) to a+b. */
   val values: Seq[(String, String)] = Seq(
     ("e", "r"),
     ("i", "n"),

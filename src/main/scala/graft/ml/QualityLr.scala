@@ -76,14 +76,9 @@ object QualityLr {
         col("punct_ratio"), col("digit_ratio")))
   }
 
-  /** Session-independent layout for a reproducible fit (the PinCentersMain
-    * discipline): hash-partition on the unique doc_id, sort within. */
-  def canonicalLayout(feats: DataFrame): DataFrame =
-    feats.repartition(8, col("doc_id")).sortWithinPartitions("doc_id")
-
   /** Seed-pinned logistic fit on the canonical layout. L-BFGS over
     * treeAggregate is deterministic given identical partition contents and
-    * order — which canonicalLayout pins. */
+    * order — which [[canonicalLayout]] on doc_id pins. */
   def train(feats: DataFrame, maxIter: Int = 50, regParam: Double = 0.0)
       : (Seq[Double], Double) = {
     val assembled = new VectorAssembler()
@@ -97,7 +92,7 @@ object QualityLr {
   }
 
   /** Committed q130 constants (fit at sf0.01, canonical layout) —
-    * regenerate with `runMain graft.ml.PinLrMain` after any change to the
+    * regenerate with `runMain graft.ml.PinMain lr` after any change to the
     * feature pipeline or teacher thresholds; GateHygieneSpec fails first
     * if they drift. The punct/digit coefficients are exactly 0.0 because
     * the synthetic corpus contains no punctuation or digits (both features

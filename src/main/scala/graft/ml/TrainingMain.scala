@@ -1,7 +1,5 @@
 package graft.ml
 
-import org.apache.spark.sql.SparkSession
-
 /** Offline training entry point — the reference's
   * KMeansClusterInvoices.main / BisectingKMeansClusterInvoices.main +
   * start_training.sh analog (SURVEY.md §3.1), Spark-4 style:
@@ -22,15 +20,7 @@ object TrainingMain {
     val topK = if (args.length > 5) args(5).toInt else 2000
     val bisecting = algo == "bisecting"
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-training")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(Some(sfDir))
 
     // featurize + validity filter (A1 + P3), cached across the sweep (M6)
     val feats = graft.queries.Relational.validFeatures(spark, sfDir).cache()

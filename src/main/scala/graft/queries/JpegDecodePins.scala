@@ -6,7 +6,7 @@ package graft.queries
   * [[graft.queries.Extensions.imageDecodePins]] / PinnedPqCodebooks:
   * regenerated from the live codec and asserted bit-equal by
   * ExtensionsSpec every test run; regenerate with
-  * `sbt "runMain graft.tools.GenJpegPins"` if the spec flags drift. */
+  * `sbt "runMain graft.ml.PinMain jpeg"` if the spec flags drift. */
 object JpegDecodePins {
   val pins: Seq[(Long, String, Int, Int, Int, Int, Long)] = Seq(
     (0L, "jpeg", 16, 8, 1, 0, 6932938L), (0L, "jpeg", 16, 8, 1, 1, 7270128L),

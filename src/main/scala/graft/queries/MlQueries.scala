@@ -155,8 +155,8 @@ object MlQueries {
       // session-layout-independent (k-means|| init samples per partition),
       // and the fit sheds ~25% scheduler overhead vs 32 tiny partitions
       // (FitProbe: 1.57 s → 1.20 s at sf0.1)
-      val feats = graft.ml.PinCentersMain.canonicalLayout(
-        Relational.validFeatures(s, d)).cache()
+      val feats = graft.ml.canonicalLayout(
+        Relational.validFeatures(s, d), "invoice_no").cache()
       try {
         val m = Anomaly.trainKMeans(feats, k = 4, seed = 42L, maxIter = 10)
         (m.clusterCenters.toSeq.map(_.toArray.toSeq),
@@ -173,8 +173,8 @@ object MlQueries {
   def bisectingAnomalies(s: SparkSession, d: String): DataFrame = {
     val (ctrs, sizes) = cachedFit[(Seq[Seq[Double]], Seq[Long])](
       s"bisecting:k=3:seed=42:iter=5:v2:$d") {
-      val feats = graft.ml.PinCentersMain.canonicalLayout(
-        Relational.validFeatures(s, d)).cache()
+      val feats = graft.ml.canonicalLayout(
+        Relational.validFeatures(s, d), "invoice_no").cache()
       try {
         val m = Anomaly.trainBisecting(feats, k = 3, seed = 42L, maxIter = 5)
         (m.clusterCenters.toSeq.map(_.toArray.toSeq),
@@ -188,8 +188,8 @@ object MlQueries {
   val bisectingAnomaliesSql: String = fitContractSql(500)
 
   /** Seed-pinned centers of the q17-style fit (KMeans k=4, seed=42,
-    * maxIter=10 on validFeatures at sf0.01, canonical data layout — see
-    * PinCentersMain) — regenerate with `runMain graft.ml.PinCentersMain`.
+    * maxIter=10 on validFeatures at sf0.01, canonical data layout) —
+    * regenerate with `runMain graft.ml.PinMain centers`.
     * GateHygieneSpec asserts a fresh fit still produces exactly these, so
     * q51 below oracles the reference's ENTIRE post-fit pipeline (score →
     * top-k threshold → anomaly filter) with the fit itself held fixed;
@@ -225,7 +225,7 @@ object MlQueries {
 
   /** The bisecting twin of [[pinnedCenters]] (BisectingKMeans k=3, seed=42,
     * maxIter=5 — q19's parameters — on the canonical layout at sf0.01);
-    * regenerate with `runMain graft.ml.PinCentersMain <sf> 3 5 bisecting`.
+    * regenerate with `runMain graft.ml.PinMain centers`.
     * GateHygieneSpec re-derives both. */
   val pinnedBisectingCenters: Seq[Seq[Double]] = Seq(
     Seq(2517.2525916585373, 1033.8445785284382, 4656.173336788221, 0.0, 104.07505360972122),
@@ -269,8 +269,8 @@ object MlQueries {
     * assert without running MLlib. */
   def kmeansElbow(s: SparkSession, d: String): DataFrame = {
     val rows = cachedFit[Seq[(Int, Double, Boolean)]](s"elbow:ks=2-6:seed=42:iter=5:$d") {
-      val feats = graft.ml.PinCentersMain.canonicalLayout(
-        Relational.validFeatures(s, d))
+      val feats = graft.ml.canonicalLayout(
+        Relational.validFeatures(s, d), "invoice_no")
       val results = Anomaly.sweep(feats, ks = 2 to 6, seed = 42L, maxIter = 5)
       val sel = Anomaly.elbowSelection(results.map(_._2))
       results.zipWithIndex.map { case ((k, cost, _), i) => (k, cost, i == sel) }
@@ -334,8 +334,8 @@ object MlQueries {
     * corpus stays hash-oracled with the fit pinned (q130). */
   private def qualityLrFit(s: SparkSession, d: String): (Seq[Double], Double) =
     cachedFit[(Seq[Double], Double)](s"qlr:iter=50:reg=0:$d") {
-      val feats = graft.ml.QualityLr.canonicalLayout(
-        graft.ml.QualityLr.features(graft.Tables.documents(s, d))).cache()
+      val feats = graft.ml.canonicalLayout(
+        graft.ml.QualityLr.features(graft.Tables.documents(s, d)), "doc_id").cache()
       try graft.ml.QualityLr.train(feats) finally feats.unpersist()
     }
 
@@ -417,7 +417,7 @@ object MlQueries {
     * pinned (q132). */
   private def pcaLiveComponents(s: SparkSession, d: String): Seq[Seq[Double]] =
     cachedFit[Seq[Seq[Double]]](s"pca:k=${graft.ml.EmbedPca.k}:$d") {
-      val emb = graft.ml.EmbedPca.canonicalLayout(graft.Tables.embeddings(s, d)).cache()
+      val emb = graft.ml.canonicalLayout(graft.Tables.embeddings(s, d), "vec_id").cache()
       try graft.ml.EmbedPca.fit(emb) finally emb.unpersist()
     }
 

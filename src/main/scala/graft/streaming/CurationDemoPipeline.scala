@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Hll, Maintenance}
 
 /** Runnable end-to-end demo of the round-6 streaming operator families —
-  * the curation-side sibling of [[DemoPipeline]] (which demos the invoice
+  * the curation-side sibling of [[ServeMain]] (which demos the invoice
   * path). Three concurrent structured-streaming queries consume simulator
   * replays ([[Simulator.replayToDir]] → file source, the same no-broker
-  * stand-in as DemoPipeline):
+  * stand-in as ServeMain):
   *
   *  1. native `session_window` gap sessionization
   *     ([[SessionWindows.userSessions]], the q87 twin) over an event
@@ -27,16 +27,7 @@ object CurationDemoPipeline {
     val workDir = args.headOption.getOrElse("/tmp/graft-curation-demo")
     val runSeconds = if (args.length > 1) args(1).toInt else 15
 
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-curation-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    implicit val spark: SparkSession = graft.Sessions.local(rocksDb = true)
     import spark.implicits._
 
     val evDir = s"$workDir/events-in"

@@ -22,9 +22,8 @@ object Gates {
   /** State partitions for a gate's fresh checkpoint. Each stateful
     * micro-batch commits one state store per partition, so at gate scale
     * the session default is fixed overhead with no data underneath;
-    * results are partition-count-invariant. Production sizes state to the
-    * keyspace ([[graft.Tuning.statePartitions]]); q240 passes 16 to
-    * exercise a resize. */
+    * results are partition-count-invariant. q240 passes 16 to exercise a
+    * resize. */
   val StatePartitions = 8
 
   /** Where a gate's output goes. */
@@ -48,8 +47,7 @@ object Gates {
     * put/merge/delete (26% of stateful-task CPU in the q235 bulk load) and
     * feeds only the numTotalStateRows metric, never results. */
   private val rocksDbConf: Seq[(String, String)] = Seq(
-    "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.providerClass" -> graft.Sessions.RocksDbProvider,
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
     "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows" -> "false")
 

@@ -3,37 +3,35 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
-/** Serving entry point — the reference's start_pipeline.sh analog: load the
-  * artifacts produced by graft.ml.TrainingMain (S4 model + S3 threshold),
-  * then run the streaming pipeline over a line source.
+/** Serving demo — the reference's start_pipeline.sh + simulator analog
+  * (SURVEY.md §7 step 4): load a model, run the streaming pipeline over a
+  * file source, replay purchase lines into it and fan results out to four
+  * parquet sink directories.
   *
-  * Usage: runMain graft.streaming.ServeMain <modelDir> <workDir>
-  *        [sessionTimeout] [runSeconds]
-  * where <modelDir> contains model/ and threshold from TrainingMain.
+  * With `modelDir` it scores against the artifacts of graft.ml.TrainingMain
+  * (`model/` and `threshold`); without, against the reference's pinned
+  * KMeans model ([[graft.ml.PinnedKmeansModel]]).
+  *
+  * Usage: runMain graft.streaming.ServeMain <workDir> [modelDir]
   */
 object ServeMain {
   def main(args: Array[String]): Unit = {
-    val modelDir = args(0)
-    val workDir = args(1)
-    val sessionTimeout = if (args.length > 2) args(2) else "2 seconds"
-    val runSeconds = if (args.length > 3) args(3).toInt else 15
+    val workDir = args.headOption.getOrElse("/tmp/graft-serve")
+    val modelDir = args.lift(1)
+    val runSeconds = 15
 
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-serve")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    implicit val spark: SparkSession = graft.Sessions.local(rocksDb = true)
 
-    // S4 + S3: load the trained centers and threshold once on the driver;
-    // they ship to executors as plan literals (the broadcast-variable analog)
-    val model = org.apache.spark.ml.clustering.KMeansModel.load(s"$modelDir/model")
-    val centers = model.clusterCenters.toSeq.map(_.toArray.toSeq)
-    val threshold = graft.ml.Anomaly.loadThreshold(s"$modelDir/threshold")
+    // S4 + S3: load the centers and threshold once on the driver; they
+    // ship to executors as plan literals (the broadcast-variable analog)
+    val (centers, threshold) = modelDir match {
+      case Some(dir) =>
+        val model = org.apache.spark.ml.clustering.KMeansModel.load(s"$dir/model")
+        (model.clusterCenters.toSeq.map(_.toArray.toSeq),
+          graft.ml.Anomaly.loadThreshold(s"$dir/threshold"))
+      case None =>
+        (graft.ml.PinnedKmeansModel.centers, graft.ml.PinnedKmeansModel.threshold)
+    }
     println(s"SERVE loaded k=${centers.size} centers, threshold=$threshold")
 
     val models = InvoicePipeline.Models(centers, threshold, centers, threshold * 2)
@@ -52,17 +50,22 @@ object ServeMain {
 
     val query = InvoicePipeline.run(
       spark.readStream.textFile(inDir), models, sinks, s"$workDir/ckpt",
-      sessionTimeout = sessionTimeout,
+      sessionTimeout = "2 seconds",
       trigger = Trigger.ProcessingTime("500 milliseconds"))
 
-    // replay a burst shaped like the training data (per-invoice feature rows
-    // land near/far from the learned centers)
+    // replay a burst shaped like the reference's invoices (unit prices of a
+    // few units, a hundred-odd items: near the pinned centers) with every
+    // 17th priced far away, then a parse error, a cancellation and a
+    // missing-customer invoice
     val rnd = new scala.util.Random(7)
-    val lines = (1 to 200).flatMap { i =>
+    val lines = (1 to 200).map { i =>
       val inv = 800000 + i
-      val price = if (i % 17 == 0) 90000.0 + rnd.nextInt(10000) else 1.0 + rnd.nextInt(4000)
-      Seq(s"$inv,S1,ITEM,${1 + i % 5},7/19/2011 ${i % 24}:10,$price,cust$i,Spain")
-    }
+      val price = if (i % 17 == 0) 90000.0 + rnd.nextInt(10000) else 0.5 + rnd.nextInt(1500) / 100.0
+      s"$inv,S1,ITEM,${100 + i % 120},7/19/2011 ${8 + i % 10}:10,$price,cust$i,Spain"
+    } ++ Seq(
+      "560900,S1,BAD,notanint,7/19/2011 12:19,1.0,cust9,Spain",
+      "C560901,S1,RET,-3,7/19/2011 12:19,5.0,cust10,Spain",
+      "560902,S1,NOCUST,2,7/19/2011 12:19,5.0,,Spain")
     Simulator.replayToDir(lines.iterator, inDir, linesPerFile = 50)
 
     Thread.sleep(runSeconds * 1000L)

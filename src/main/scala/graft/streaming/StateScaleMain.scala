@@ -36,17 +36,9 @@ object StateScaleMain {
     val useTws = args.length > 2 && args(2) == "tws"
     val longSessions = args.length > 3 && args(3) == "long"
 
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-state-scale")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.numRecentProgressUpdates", "500")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    implicit val spark: SparkSession = graft.Sessions.local(rocksDb = true)
+    // read at query start: keep every batch's progress for the curve
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "500")
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -37,16 +37,7 @@ object ThroughputMain {
     val ratePerSec = if (args.length > 2) args(2).toInt else 0
     val useTws = args.length > 3 && args(3) == "tws"
 
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-throughput")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    implicit val spark: SparkSession = graft.Sessions.local(rocksDb = true)
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -48,14 +48,7 @@ object GenScale {
     val Array(src, out, factorStr) = args
     val factor = factorStr.toInt
     require(factor >= 1, "factor must be >= 1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(Some(src))
     try generate(spark, src, out, factor)
     finally spark.stop()
   }

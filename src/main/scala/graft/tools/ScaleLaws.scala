@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Engine-side sf1 correctness laws for the two queries whose DuckDB
@@ -31,14 +30,7 @@ import org.apache.spark.sql.functions._
 object ScaleLaws {
   def main(args: Array[String]): Unit = {
     val Array(small, big) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(Some(big))
     var failed = false
     def check(name: String, ok: Boolean, detail: String): Unit = {
       println(s"SCALELAW ${if (ok) "PASS" else "FAIL"} $name: $detail")

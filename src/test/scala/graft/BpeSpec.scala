@@ -69,11 +69,11 @@ class BpeSpec extends AnyFunSuite {
 
   test("pinned merge table reproduces from its committed training run (q167)") {
     val (merges, seg) = Bpe.learn(spark,
-      graft.Tables.documents(spark, graft.ml.PinBpeMain.trainDir), "text",
-      graft.ml.PinBpeMain.numMerges)
+      graft.Tables.documents(spark, Bpe.trainDir), "text",
+      Bpe.numMerges)
     seg.unpersist()
     assert(merges.map(m => (m.a, m.b)) === graft.ml.PinnedBpeMerges.values,
-      "PinnedBpeMerges is stale — regenerate with `runMain graft.ml.PinBpeMain`")
+      "PinnedBpeMerges is stale — regenerate with `runMain graft.ml.PinMain bpe`")
   }
 
   test("column encoder segments every corpus word exactly like Bpe.segment (q167)") {

@@ -599,7 +599,7 @@ class ExtensionsSpec extends AnyFunSuite {
     val want = graft.queries.Extensions.jpegDecodePins.sortBy(t => (t._1, t._6))
     assert(got.length === 48)
     assert(got.toSeq === want,
-      "JPEG decode drifted from the pinned oracle — re-run graft.tools.GenJpegPins")
+      "JPEG decode drifted from the pinned oracle — re-run graft.ml.PinMain jpeg")
     // and the decoded rasters really went through the lossy path: the
     // luminance grid of at least one payload must differ from the ENCODED
     // raster's grid (a PNG-style exact roundtrip would make this a

@@ -16,44 +16,24 @@ class GateHygieneSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
-  /** One registry pass: each query's output schema (or the error it
-    * threw), and whatever it left behind on the caller's session — a
-    * `graft_*` temp view, an active stream, or a gate conf key whose value
-    * changed. Gates run their streams inside the query function. */
-  private lazy val sweep: Seq[GateHygieneSpec.Swept] = {
-    import GateHygieneSpec.Swept
-    def graftViews: Set[String] = spark.catalog.listTables().collect()
-      .filter(_.isTemporary).map(_.name).filter(_.startsWith("graft_")).toSet
-    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val viewsBefore = graftViews
-      val confBefore = Gates.confKeys.map(k => k -> spark.conf.getOption(k))
-      val schema =
-        try Right(fn(spark, sf).schema)
-        catch { case scala.util.control.NonFatal(e) => Left(e) }
-      val leftovers = (graftViews -- viewsBefore).toSeq.sorted.map(v => s"temp view $v") ++
-        spark.streams.active.map(q => s"active stream ${q.name}") ++
-        confBefore.collect { case (k, v) if spark.conf.getOption(k) != v =>
-          s"conf $k = ${spark.conf.getOption(k)}, was $v" }
-      Swept(name, schema, leftovers)
-    }
-  }
-
   test("no registry query emits array/map/struct output columns " +
     "(driver comparator sorts rows with pandas; nested cells crash it)") {
-    val offending = sweep.flatMap { w =>
-      w.schema.fold(e => throw e, _.fields.toSeq).collect {
+    val offending = RegistrySweep.swept.flatMap { w =>
+      w.result.fold(_ => Nil, _._1.fields.toSeq).collect {
         case f if f.dataType.isInstanceOf[ArrayType] ||
                   f.dataType.isInstanceOf[MapType] ||
                   f.dataType.isInstanceOf[StructType] => s"${w.name}.${f.name}"
       }
     }
-    assert(offending.isEmpty,
-      s"driver-unsortable columns in registry output: ${offending.mkString(", ")}")
+    val errors = RegistrySweep.errors
+    assert(errors.isEmpty && offending.isEmpty,
+      s"${errors.size} queries failed:\n${errors.mkString("\n")}\n" +
+        s"driver-unsortable columns in registry output: ${offending.mkString(", ")}")
   }
 
   test("every registry gate leaves the caller's session as it found it: " +
     "no graft_ temp view, no active stream, every gate conf key restored") {
-    val dirty = sweep.filter(_.leftovers.nonEmpty)
+    val dirty = RegistrySweep.swept.filter(_.leftovers.nonEmpty)
       .map(w => s"${w.name}: ${w.leftovers.mkString("; ")}")
     assert(dirty.isEmpty, s"gates left state behind:\n${dirty.mkString("\n")}")
   }
@@ -165,19 +145,19 @@ class GateHygieneSpec extends AnyFunSuite {
     // q51's oracle scores against literal centers; this is the link back to
     // the live fit — if MLlib initialization or our featurize pipeline ever
     // changes the fit result, this fails here, not silently in the gate
-    val feats = graft.ml.PinCentersMain.canonicalLayout(
-      graft.queries.Relational.validFeatures(spark, "/root/testdata/sf0.01")).cache()
+    val feats = graft.ml.canonicalLayout(
+      graft.queries.Relational.validFeatures(spark, "/root/testdata/sf0.01"), "invoice_no").cache()
     try {
       val m = Anomaly.trainKMeans(feats, k = 4, seed = 42L, maxIter = 10)
       val got = m.clusterCenters.toSeq.map(_.toArray.toSeq)
       assert(got === graft.queries.MlQueries.pinnedCenters,
         "re-fit centers drifted from MlQueries.pinnedCenters — regenerate " +
-          "with runMain graft.ml.PinCentersMain and update the constant")
+          "with runMain graft.ml.PinMain centers and update the constant")
       val b = Anomaly.trainBisecting(feats, k = 3, seed = 42L, maxIter = 5)
       val gotB = b.clusterCenters.toSeq.map(_.toArray.toSeq)
       assert(gotB === graft.queries.MlQueries.pinnedBisectingCenters,
         "re-fit bisecting centers drifted from pinnedBisectingCenters — " +
-          "regenerate with runMain graft.ml.PinCentersMain <sf> 3 5 bisecting")
+          "regenerate with runMain graft.ml.PinMain centers")
     } finally feats.unpersist()
   }
 
@@ -186,16 +166,16 @@ class GateHygieneSpec extends AnyFunSuite {
     // back to the live fit (the q51 discipline) — if MLlib's L-BFGS, the
     // feature pipeline, or the teacher thresholds change, this fails here,
     // not silently in the gate
-    val feats = graft.ml.QualityLr.canonicalLayout(
+    val feats = graft.ml.canonicalLayout(
       graft.ml.QualityLr.features(
-        Tables.documents(spark, "/root/testdata/sf0.01"))).cache()
+        Tables.documents(spark, "/root/testdata/sf0.01")), "doc_id").cache()
     try {
       val (w, b) = graft.ml.QualityLr.train(feats)
       assert(w === graft.ml.QualityLr.pinnedWeights &&
         b === graft.ml.QualityLr.pinnedIntercept,
         "re-fit LR drifted from QualityLr.pinned* — an ENVIRONMENT change " +
           "(JVM or BLAS swap, e.g. netlib native) is an expected cause with " +
-          "no code change; remedy: runMain graft.ml.PinLrMain, update the " +
+          "no code change; remedy: runMain graft.ml.PinMain lr, update the " +
           "constants, re-run the oracle gate")
     } finally feats.unpersist()
   }
@@ -205,20 +185,20 @@ class GateHygieneSpec extends AnyFunSuite {
     // this is the link back to the live fit (the q51 discipline) — if the
     // k-means init, the canonical layout, or the embeddings fixture change,
     // the quantizer drift fails HERE by name, not as a silent recall drop
-    val emb = graft.ml.PinIvfMain.canonicalLayout(
-      Tables.embeddings(spark, "/root/testdata/sf0.01")).cache()
+    val emb = graft.ml.canonicalLayout(
+      Tables.embeddings(spark, "/root/testdata/sf0.01"), "vec_id").cache()
     try {
-      val got = graft.ml.PinIvfMain.trainCenters(emb)
+      val got = graft.operators.Similarity.trainCenters(emb)
       assert(got === graft.ml.PinnedIvfCenters.values,
         "re-fit IVF centers drifted from PinnedIvfCenters — an ENVIRONMENT " +
           "change (JVM or BLAS swap) is an expected cause with no code " +
-          "change; remedy: runMain graft.ml.PinIvfMain, update the " +
+          "change; remedy: runMain graft.ml.PinMain ivf, update the " +
           "generated file, re-run the oracle gate")
-      val gotDup = graft.ml.PinIvfMain.trainCenters(emb,
-        cells = graft.ml.PinIvfMain.dupCells)
+      val gotDup = graft.operators.Similarity.trainCenters(emb,
+        cells = graft.operators.Similarity.dupCells)
       assert(gotDup === graft.ml.PinnedDupCenters.values,
         "re-fit dup-blocking centers drifted from PinnedDupCenters — " +
-          "remedy: runMain graft.ml.PinIvfMain <sf> dup")
+          "remedy: runMain graft.ml.PinMain dup")
     } finally emb.unpersist()
   }
 
@@ -239,14 +219,14 @@ class GateHygieneSpec extends AnyFunSuite {
     // eigendecomposition has no RNG, so a fresh fit on the canonical
     // layout must reproduce them bit-for-bit — drift means MLlib's
     // eigensolver or the layout changed
-    val emb = graft.ml.EmbedPca.canonicalLayout(
-      Tables.embeddings(spark, "/root/testdata/sf0.01")).cache()
+    val emb = graft.ml.canonicalLayout(
+      Tables.embeddings(spark, "/root/testdata/sf0.01"), "vec_id").cache()
     try {
       val got = graft.ml.EmbedPca.fit(emb)
       assert(got === graft.ml.EmbedPca.pinnedComponents,
         "re-fit PCA drifted from PinnedPcaComponents — an ENVIRONMENT " +
           "change (JVM or BLAS swap) is an expected cause with no code " +
-          "change; remedy: runMain graft.ml.PinPcaMain, update the " +
+          "change; remedy: runMain graft.ml.PinMain pca, update the " +
           "constants, re-run the oracle gate")
     } finally emb.unpersist()
   }
@@ -300,7 +280,3 @@ class GateHygieneSpec extends AnyFunSuite {
   }
 }
 
-object GateHygieneSpec {
-  final case class Swept(name: String, schema: Either[Throwable, StructType],
-                         leftovers: Seq[String])
-}

@@ -14,9 +14,9 @@ class PqSpec extends AnyFunSuite {
   private lazy val books = graft.ml.PinnedPqCodebooks.values
 
   test("pinned codebooks reproduce from their committed training run") {
-    val emb = graft.ml.PinIvfMain.canonicalLayout(Tables.embeddings(spark, sf01))
-    assert(graft.ml.PinPqMain.trainBooks(emb) === books,
-      "PinnedPqCodebooks is stale — regenerate with `runMain graft.ml.PinPqMain`")
+    val emb = graft.ml.canonicalLayout(Tables.embeddings(spark, sf01), "vec_id")
+    assert(Pq.trainBooks(emb) === books,
+      "PinnedPqCodebooks is stale — regenerate with `runMain graft.ml.PinMain pq`")
   }
 
   test("codes are well-formed: 8 ids per vector, each in [1, 64]") {

@@ -32,10 +32,12 @@ class RelationalSpec extends AnyFunSuite {
     // (planted-pair tests in ExtensionsSpec prove them); q14's windowed
     // anti-join now yields survivors at every SF (round-11 verdict #7)
     val mayBeEmpty = Set("q25_near_dup_minhash", "q30_embedding_near_dups")
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sf).count()
-      if (!mayBeEmpty(name)) assert(n > 0, s"$name returned no rows")
-    }
+    val empty = RegistrySweep.swept.collect {
+      case RegistrySweep.Swept(n, Right((_, 0L)), _) if !mayBeEmpty(n) => n }
+    val errors = RegistrySweep.errors
+    assert(errors.isEmpty && empty.isEmpty,
+      s"${errors.size} queries failed:\n${errors.mkString("\n")}\n" +
+        s"queries that returned no rows: ${empty.mkString(", ")}")
   }
 
   test("entry flagship returns rows") {

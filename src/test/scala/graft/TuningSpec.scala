@@ -40,10 +40,4 @@ class TuningSpec extends AnyFunSuite {
   test("missing dir degrades to the core floor, not an exception") {
     assert(Tuning.shufflePartitions("/no/such/dir", 32) === 32)
   }
-
-  test("state partition calculator: keyspace-sized, floored at cores") {
-    assert(Tuning.statePartitions(1000L, 8) === 8)
-    assert(Tuning.statePartitions(10L * 1000 * 1000, 8) === 8)
-    assert(Tuning.statePartitions(100L * 1000 * 1000, 8) === 50)
-  }
 }
