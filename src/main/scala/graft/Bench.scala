@@ -37,13 +37,27 @@ package graft
   * set per query run. A tag, unlike a job group, is inherited by a gate's
   * stream thread (StreamExecution sets its own group), so gate work counts
   * for its query. BENCHDETAIL.json carries them per rep, with a stamp of
-  * the commit, the cores, the shuffle partitions and the Spark version.
+  * the commit, the cores, a calibration row, the shuffle partitions and the
+  * Spark version.
   */
 object Bench {
+  /** A fixed integer loop, timed once per run before the session starts:
+    * its time tracks the host's single-core speed, so runs on different
+    * hosts or under different load can be told apart. */
+  private def calibrate(): Double = {
+    val t0 = System.nanoTime()
+    var x = 1L
+    var i = 0
+    while (i < 300000000) { x = x * 6364136223846793005L + 1442695040888963407L; i += 1 }
+    if (x == 42L) println()
+    (System.nanoTime() - t0) / 1e6
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSeq)
+    val calibrationMs = calibrate()
     val spark = Sessions.local(Some(sfDir))
     val work = new QueryWork
     spark.sparkContext.addSparkListener(work)
@@ -162,6 +176,7 @@ object Bench {
     val stamp = s"""{"git_sha":"${git("rev-parse", "HEAD")}",""" +
       s""""git_dirty":${git("status", "--porcelain", "--untracked-files=no").nonEmpty},""" +
       s""""cpus":${Sessions.cpus},""" +
+      s""""calibration_ms":${r3(calibrationMs)},""" +
       s""""shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")},""" +
       s""""spark":"${spark.version}"}"""
     // stop() drains the listener bus, so every timed job is counted below

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.streaming.ProcessingTimeTrigger
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.ml.Anomaly
 
@@ -156,8 +157,16 @@ object InvoicePipeline {
       sessionTimeout, trigger)
 
   /** Unified-sink variant of run: one (topic, value) DataFrame per trigger.
-    * `relationalParse` selects the codegen from_csv parse (throughput) over
-    * the typed univocity route (quirk-exact default). */
+    *
+    * `relationalParse` swaps the typed univocity route for the codegen
+    * from_csv route — identical on well-formed and numeric-failure lines
+    * (parity-tested). On the MemoryStream throughput rig the TYPED route
+    * measured faster (37.5k vs 23.9k lines/s: from_csv plus the regex
+    * field-count guard outweigh the codegen win at this row width), so
+    * typed is the default; the relational path serves SQL-only deployments.
+    *
+    * Sessions expire on [[Sessionizer.expiresAt]], rounded to the grid of
+    * `trigger` when it is a processing-time trigger. */
   def runUnified(
       lines: Dataset[String],
       models: Models,
@@ -173,19 +182,17 @@ object InvoicePipeline {
       tws: Boolean = false)
       (implicit spark: SparkSession): StreamingQuery = {
     import spark.implicits._
+    val events =
+      if (relationalParse) PurchaseCsv.routeRelational(lines)
+      else lines.flatMap(PurchaseCsv.route _)
+    val expiryMs = Sessionizer.durationMs(sessionTimeout)
+    val triggerMs = trigger match {
+      case p: ProcessingTimeTrigger => p.intervalMs
+      case _ => 0L
+    }
     val sessions =
-      if (!tws) Sessionizer.fromRawLines(lines, sessionTimeout, relationalParse)
-      else {
-        val events =
-          if (relationalParse) PurchaseCsv.routeRelational(lines)
-          else lines.flatMap(PurchaseCsv.route _)
-        val iv = org.apache.spark.sql.catalyst.util.IntervalUtils
-          .stringToInterval(
-            org.apache.spark.unsafe.types.UTF8String.fromString(sessionTimeout))
-        val timeoutMs =
-          iv.months * 2592000000L + iv.days * 86400000L + iv.microseconds / 1000L
-        SessionizerTws.sessionizeProcTime(events, timeoutMs)
-      }
+      if (tws) SessionizerTws.sessionizeProcTime(events, expiryMs, triggerMs)
+      else Sessionizer.sessionize(events, expiryMs, triggerMs)
     sessions.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)

@@ -10,15 +10,21 @@ import org.apache.spark.sql.streaming.Trigger
   *
   * With `modelDir` it scores against the artifacts of graft.ml.TrainingMain
   * (`model/` and `threshold`); without, against the reference's pinned
-  * KMeans model ([[graft.ml.PinnedKmeansModel]]).
+  * KMeans model ([[graft.ml.PinnedKmeansModel]]). It stops the query
+  * between two triggers once every sink holds the rows that a batch replay
+  * of the same lines routes to it (or after 120 s, saying so).
   *
   * Usage: runMain graft.streaming.ServeMain <workDir> [modelDir]
   */
 object ServeMain {
+  private val topicSink = scala.collection.immutable.ListMap(
+    "facturas_erroneas" -> "erroneous", "cancelaciones" -> "cancellations",
+    "anomalias_kmeans" -> "anomalies_kmeans",
+    "anomalias_bisect_kmeans" -> "anomalies_bisect")
+
   def main(args: Array[String]): Unit = {
     val workDir = args.headOption.getOrElse("/tmp/graft-serve")
     val modelDir = args.lift(1)
-    val runSeconds = 15
 
     implicit val spark: SparkSession = graft.Sessions.local(rocksDb = true)
 
@@ -39,8 +45,12 @@ object ServeMain {
     val inDir = s"$workDir/in"
     val outDir = s"$workDir/out"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
-    def sink(name: String): (DataFrame, Long) => Unit = (b, _) =>
+    // rows each sink has written, counted on the driver after each write
+    val written = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    def sink(name: String): (DataFrame, Long) => Unit = (b, _) => {
       b.write.mode("append").parquet(s"$outDir/$name")
+      written.merge(name, b.count(), (x, y) => x + y)
+    }
     val sinks = new InvoiceSinks {
       def erroneous(b: DataFrame, id: Long): Unit = sink("erroneous")(b, id)
       def cancellations(b: DataFrame, id: Long): Unit = sink("cancellations")(b, id)
@@ -68,9 +78,24 @@ object ServeMain {
       "560902,S1,NOCUST,2,7/19/2011 12:19,5.0,,Spain")
     Simulator.replayToDir(lines.iterator, inDir, linesPerFile = 50)
 
-    Thread.sleep(runSeconds * 1000L)
+    // the batch twin routes the same lines: the row count each sink must
+    // reach once every replayed invoice has expired
+    val expected = {
+      import spark.implicits._
+      InvoicePipeline.routeBatchUnified(models)(
+          Sessionizer.sessionizeBatch(lines.toDS().flatMap(PurchaseCsv.route _)))
+        .groupBy("topic").count().collect()
+        .map(r => topicSink(r.getString(0)) -> r.getLong(1)).toMap
+    }
+    def complete = expected.forall { case (name, n) => written.getOrDefault(name, 0L) >= n }
+    val deadline = System.currentTimeMillis() + 120000L
+    while (!complete && query.isActive && System.currentTimeMillis() < deadline)
+      Thread.sleep(100)
+    if (!complete) println(s"SERVE incomplete: wrote $written of $expected")
+    // stop between triggers, so no batch is cut off mid-way
+    while (query.isActive && query.status.isTriggerActive) Thread.sleep(5)
     query.stop()
-    Seq("erroneous", "cancellations", "anomalies_kmeans", "anomalies_bisect").foreach { s0 =>
+    topicSink.values.foreach { s0 =>
       val n = try spark.read.parquet(s"$outDir/$s0").count() catch { case _: Exception => 0L }
       println(s"SERVE SINK $s0: $n rows")
     }

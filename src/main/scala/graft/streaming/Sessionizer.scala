@@ -4,8 +4,10 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Per-invoice session state: accumulated lines plus a sticky error reason
-  * (realtime/InvoicePipeline.scala:59-64). The DStream tick counter is gone —
-  * the state-store timeout IS the expiry clock. */
+  * (realtime/InvoicePipeline.scala:59-64). The DStream tick counter is gone:
+  * the state-store timeout is the expiry clock, armed at
+  * [[Sessionizer.expiresAt]] so that it fires on the reference's tick (the
+  * 2nd empty trigger after the last line for a 40 s expiry on 20 s ticks). */
 final case class SessionState(
     lines: List[Purchase],
     errorReason: Option[String])
@@ -61,6 +63,43 @@ object Sessionizer {
 
   val DefaultTimeout = "40 seconds"
 
+  /** Milliseconds in an interval string such as "40 seconds" — the grammar
+    * of `GroupState.setTimeoutDuration(String)`. Parsed once per query. */
+  def durationMs(interval: String): Long = {
+    import org.apache.spark.sql.catalyst.util.IntervalUtils
+    val ms = IntervalUtils.getDuration(IntervalUtils.stringToInterval(
+      org.apache.spark.unsafe.types.UTF8String.fromString(interval)),
+      java.util.concurrent.TimeUnit.MILLISECONDS)
+    require(ms > 0, s"session timeout must be positive: $interval")
+    ms
+  }
+
+  /** The processing-time session deadline, shared by both state machines
+    * ([[updateSession]] and [[SessionizerTws.ProcTimeSessionProcessor]]).
+    *
+    * A session last touched by the batch that started at `batchTs` expires
+    * at the trigger grid point that started that batch (`batchTs` rounded
+    * down to a multiple of `triggerMs`; Spark schedules processing-time
+    * triggers on that grid) plus `expiryMs`, minus 1 ms. The two engines
+    * fire on different comparisons: fMGWS times a key out when
+    * `timeout < batchTs`, strictly, and TWS fires a timer when
+    * `timer <= batchTs`. One millisecond before the grid point makes both
+    * fire in the batch that starts exactly on it, and neither fires a
+    * trigger earlier. So a session read in batch k is emitted in the batch
+    * of grid point k + expiry/interval — batch k+2 for a 2 s expiry on 1 s
+    * triggers, or the reference's 40 s on 20 s ticks (`ticksSinceUpdate >=
+    * 2`) — even when batch k itself started late. Arming from `batchTs`
+    * instead would wait one trigger more whenever batch k+2 started no
+    * later past its grid point than batch k did.
+    *
+    * `triggerMs` = 0 means no grid (any other trigger). The deadline is
+    * never at or before `batchTs`: an expiry shorter than the trigger
+    * emits in the next batch. */
+  def expiresAt(batchTs: Long, expiryMs: Long, triggerMs: Long): Long = {
+    val grid = if (triggerMs > 0) batchTs - Math.floorMod(batchTs, triggerMs) else batchTs
+    math.max(grid + expiryMs - 1, batchTs + 1)
+  }
+
   /** ST6 priority cascade + A2 fold at emit time. Stream semantics: hour and
     * customer come from the FIRST line (quirk Q2 — batch uses max(hour);
     * documented, stream keeps first-line semantics as primary). */
@@ -95,8 +134,10 @@ object Sessionizer {
   }
 
   /** The flatMapGroupsWithState update function. Public so tests can drive
-    * it with TestGroupState. */
-  def updateSession(timeout: String)(
+    * it with TestGroupState. ProcessingTimeTimeout takes only a duration, so
+    * the deadline [[expiresAt]] is armed as its distance from the batch
+    * time. */
+  def updateSession(expiryMs: Long, triggerMs: Long)(
       invoiceNo: String,
       events: Iterator[LineEvent],
       state: GroupState[SessionState]): Iterator[InvoiceResult] = {
@@ -113,7 +154,8 @@ object Sessionizer {
         case None         => prev.copy(lines = prev.lines ++ evs.flatMap(_.purchase))
       }
       state.update(next)
-      state.setTimeoutDuration(timeout)
+      val now = state.getCurrentProcessingTimeMs()
+      state.setTimeoutDuration(expiresAt(now, expiryMs, triggerMs) - now)
       Iterator.empty
     }
   }
@@ -122,14 +164,15 @@ object Sessionizer {
     * (batch) Dataset this emits nothing by design — sessions complete only
     * via the processing-time timeout, which a one-shot batch execution never
     * fires. For batch replay, group events per invoice and call `classify`
-    * directly (see ReferenceParitySpec). */
-  def sessionize(events: Dataset[LineEvent], timeout: String = DefaultTimeout)
+    * directly (see ReferenceParitySpec). `triggerMs` is the query's trigger
+    * interval, 0 for none ([[expiresAt]]). */
+  def sessionize(events: Dataset[LineEvent], expiryMs: Long, triggerMs: Long)
                 (implicit spark: SparkSession): Dataset[InvoiceResult] = {
     import spark.implicits._
     events
       .groupByKey(_.invoiceNo)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout)(
-        updateSession(timeout))
+        updateSession(expiryMs, triggerMs))
   }
 
   /** Batch replay: treat ALL of an invoice's events as one closed session
@@ -307,23 +350,5 @@ object Sessionizer {
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout, initial)(
         updateSessionEventTime(gapMs))
-  }
-
-  /** Parse + route + sessionize raw CSV lines end-to-end (ST3 → ST4).
-    * `relationalParse = true` swaps the typed univocity route for the
-    * codegen from_csv route — identical on well-formed and numeric-failure
-    * lines (parity-tested). Measured on the MemoryStream throughput rig the
-    * TYPED route is actually faster (37.5k vs 23.9k lines/s: from_csv plus
-    * the regex field-count guard outweigh the codegen win at this row
-    * width), so typed remains the default on both axes — quirk-exactness
-    * AND speed; the relational path exists for SQL-only deployments. */
-  def fromRawLines(lines: Dataset[String], timeout: String = DefaultTimeout,
-                   relationalParse: Boolean = false)
-                  (implicit spark: SparkSession): Dataset[InvoiceResult] = {
-    import spark.implicits._
-    val events =
-      if (relationalParse) PurchaseCsv.routeRelational(lines)
-      else lines.flatMap(PurchaseCsv.route _)
-    sessionize(events, timeout)
   }
 }

@@ -200,8 +200,15 @@ object SessionizerTws {
     * ProcessingTime mode keeps every trigger running a batch, which is
     * exactly right for a continuously-triggered pipeline (and exactly
     * wrong for AvailableNow gates — the round-12 q225 lesson; the gates
-    * stay on the event-time processor above). */
-  class ProcTimeSessionProcessor(timeoutMs: Long)
+    * stay on the event-time processor above).
+    *
+    * The inactivity timer is armed at [[Sessionizer.expiresAt]]: the trigger
+    * grid point that started the batch, plus the expiry, minus 1 ms — the
+    * same deadline as the fMGWS twin, so both emit a session on the same
+    * trigger although TWS fires on `timer <= batchTs` and fMGWS on
+    * `timeout < batchTs`. `triggerMs` is the query's trigger interval, 0
+    * for none. */
+  class ProcTimeSessionProcessor(expiryMs: Long, triggerMs: Long)
       extends org.apache.spark.sql.streaming.StatefulProcessor[
         String, LineEvent, InvoiceResult] {
     @transient private var lines: ListState[Purchase] = _
@@ -231,7 +238,8 @@ object SessionizerTws {
       }
       // inactivity clock: re-arm on every batch that touches the key — a
       // POINT delete at the remembered timestamp, not a listTimers() scan
-      val t = timerValues.getCurrentProcessingTimeInMs() + timeoutMs
+      val t = Sessionizer.expiresAt(
+        timerValues.getCurrentProcessingTimeInMs(), expiryMs, triggerMs)
       val prev = if (armed.exists()) armed.get() else -1L
       if (prev != t) {
         if (prev >= 0L) getHandle.deleteTimer(prev)
@@ -261,12 +269,12 @@ object SessionizerTws {
 
   /** Processing-time TWS sessionization over routed events — the
     * drop-in TWS twin of [[Sessionizer.sessionize]]. */
-  def sessionizeProcTime(events: Dataset[LineEvent],
-                         timeoutMs: Long = 40000L): Dataset[InvoiceResult] = {
+  def sessionizeProcTime(events: Dataset[LineEvent], expiryMs: Long,
+                         triggerMs: Long): Dataset[InvoiceResult] = {
     import events.sparkSession.implicits._
     events
       .groupByKey(_.invoiceNo)
-      .transformWithState(new ProcTimeSessionProcessor(timeoutMs),
+      .transformWithState(new ProcTimeSessionProcessor(expiryMs, triggerMs),
         TimeMode.ProcessingTime(), OutputMode.Append())
   }
 

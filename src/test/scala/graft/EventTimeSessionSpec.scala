@@ -62,7 +62,7 @@ class EventTimeSessionSpec extends AnyFunSuite {
       batchProcessingTimeMs = 60000L,
       eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty[Long](),
       hasTimedOut = true)
-    val ptOut = updateSession("40 seconds")("I1", Iterator.empty, pt).toSeq
+    val ptOut = updateSession(40000L, 0L)("I1", Iterator.empty, pt).toSeq
     assert(etOut === ptOut && etOut.head.status === "valid")
     assert(et.isRemoved && pt.isRemoved)
   }
@@ -81,7 +81,7 @@ class EventTimeSessionSpec extends AnyFunSuite {
       batchProcessingTimeMs = 61000L,
       eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty[Long](),
       hasTimedOut = true)
-    val early = updateSession("40 seconds")("I1", Iterator.empty, ptExpired).toSeq
+    val early = updateSession(40000L, 0L)("I1", Iterator.empty, ptExpired).toSeq
     assert(early.size === 1 && early.head.lineCount === 1,
       "processing-time twin emits a split 1-line session")
 

@@ -75,14 +75,14 @@ class SessionizerSpec extends AnyFunSuite {
 
   test("good lines accumulate, no emission before timeout") {
     val st = freshState
-    val out = updateSession("40 seconds")("I1", Iterator(good("I1"), good("I1")), st)
+    val out = updateSession(40000L, 0L)("I1", Iterator(good("I1"), good("I1")), st)
     assert(out.isEmpty)
     assert(st.get.lines.size === 2 && st.get.errorReason.isEmpty)
   }
 
   test("error event wins the batch and drops its good lines (quirk Q3)") {
     val st = freshState
-    updateSession("40 seconds")("I1", Iterator(good("I1"), err("I1"), good("I1")), st)
+    updateSession(40000L, 0L)("I1", Iterator(good("I1"), err("I1"), good("I1")), st)
     assert(st.get.errorReason === Some("parse error: boom"))
     assert(st.get.lines.isEmpty)
   }
@@ -93,7 +93,7 @@ class SessionizerSpec extends AnyFunSuite {
       GroupStateTimeout.ProcessingTimeTimeout,
       batchProcessingTimeMs = 60000L, eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty[Long](),
       hasTimedOut = true)
-    val out = updateSession("40 seconds")("I1", Iterator.empty, pre).toSeq
+    val out = updateSession(40000L, 0L)("I1", Iterator.empty, pre).toSeq
     assert(out.size === 1)
     assert(out.head.status === "valid" && out.head.numberItems === 3.0)
     assert(pre.isRemoved)
