@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{QueryDef, Tables}
+import graft.{Fixtures, QueryDef, Tables}
 import graft.functions.{Exact, TextFunctions}
 import graft.operators.Sampling
 
@@ -853,16 +853,11 @@ object Curation {
     * inside streaming queries; the heavy corpus path — tokenize, encode,
     * count — all executed under the streaming engine). */
   private val bpeGateRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val bpeReplayLock = new Object
 
   def bpeStreamingGate(s: SparkSession, d: String): DataFrame = {
     val name = s"graft_bpe_gate_${bpeGateRuns.incrementAndGet()}"
-    val dir = graft.queries.Extensions.indexCacheDir(
-      "graft-docs-replay", d, "documents", "files4b1")
-    bpeReplayLock.synchronized {
-      if (!new java.io.File(s"$dir/_SUCCESS").exists())
-        Tables.documents(s, d).repartition(4, col("doc_id"))
-          .write.mode("overwrite").parquet(dir)
+    val dir = Fixtures.once(s, "graft-docs-replay", d, "documents", "files4b1") { dir =>
+      Tables.documents(s, d).repartition(4, col("doc_id")).write.parquet(dir)
     }
     val schema = Tables.documents(s, d).schema
     bpeVocabRank(graft.streaming.Gates.run(s, name,
@@ -1138,20 +1133,16 @@ object Curation {
     docs.select(explode(TextFunctions.tokens(col("text"))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("cnt"))
 
-  private[graft] def vocabIndexDir(d: String): String =
-    Extensions.indexCacheDir("graft-vocab-cache", d, "documents", "tok")
-
-  private val vocabBuildLock = new Object
+  /** The persisted day-1 (even doc_id) vocabulary. */
+  private[graft] def vocabIndex(s: SparkSession, d: String): String =
+    Fixtures.once(s, "graft-vocab-cache", d, "documents", "tok") { dir =>
+      tokenCounts(Tables.documents(s, d).filter(col("doc_id") % 2 === 0))
+        .write.parquet(dir)
+    }
 
   def incrementalVocab(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    val dir = vocabIndexDir(d)
-    vocabBuildLock.synchronized {
-      if (!new java.io.File(s"$dir/_SUCCESS").exists())
-        tokenCounts(docs.filter(col("doc_id") % 2 === 0))
-          .write.mode("overwrite").parquet(dir)
-    }
-    val base = s.read.parquet(dir)
+    val base = s.read.parquet(vocabIndex(s, d))
     val delta = tokenCounts(docs.filter(col("doc_id") % 2 === 1))
     base.unionByName(delta).groupBy("token").agg(sum("cnt").as("cnt"))
   }
@@ -1434,33 +1425,30 @@ object Curation {
     * ingest and fold it in; you never re-window the corpus. */
   private val packStateVersion = "p1"
 
-  private def packStateDir(d: String): String =
-    Extensions.indexCacheDir("graft-pack-state", d, "documents",
-      s"half$packStateVersion")
+  private def packDocs(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d).select(col("source"), col("doc_id"),
+      TextFunctions.tokenCount(col("text")).cast("long").as("tok"))
 
-  private val packStateLock = new Object
+  /** The fixture's "day boundary": docs at or below the median doc_id are
+    * day 1 — deterministic from the data, and (critically for append
+    * semantics) every day-2 doc_id sorts AFTER every day-1 doc_id. */
+  private def packCut(s: SparkSession, d: String): Long =
+    Tables.documents(s, d).agg(max(col("doc_id"))).head.getLong(0) / 2
+
+  /** The persisted day-1 state: `packed` bins and the per-source `carry`. */
+  private[graft] def packState(s: SparkSession, d: String): String =
+    Fixtures.once(s, "graft-pack-state", d, "documents", s"half$packStateVersion") { dir =>
+      val day1 = packDocs(s, d).filter(col("doc_id") <= packCut(s, d))
+      packOn(day1).write.parquet(s"$dir/packed")
+      day1.groupBy("source").agg(sum("tok").as("carry")).write.parquet(s"$dir/carry")
+    }
 
   def sequencePackIncremental(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).select(col("source"), col("doc_id"),
-      TextFunctions.tokenCount(col("text")).cast("long").as("tok"))
-    // the fixture's "day boundary": docs at or below the median doc_id are
-    // day 1 — deterministic from the data, and (critically for append
-    // semantics) every day-2 doc_id sorts AFTER every day-1 doc_id
-    val cut = Tables.documents(s, d)
-      .agg(max(col("doc_id"))).head.getLong(0) / 2
-    val dir = packStateDir(d)
-    packStateLock.synchronized {
-      if (!(new java.io.File(s"$dir/packed/_SUCCESS").exists() &&
-            new java.io.File(s"$dir/carry/_SUCCESS").exists())) {
-        val day1 = docs.filter(col("doc_id") <= cut)
-        packOn(day1).write.mode("overwrite").parquet(s"$dir/packed")
-        day1.groupBy("source").agg(sum("tok").as("carry"))
-          .write.mode("overwrite").parquet(s"$dir/carry")
-      }
-    }
+    val dir = packState(s, d)
     val day1Packed = s.read.parquet(s"$dir/packed")
     val carry = s.read.parquet(s"$dir/carry")
-    val day2Packed = packOn(docs.filter(col("doc_id") > cut), Some(carry))
+    val day2Packed = packOn(packDocs(s, d).filter(col("doc_id") > packCut(s, d)),
+      Some(carry))
     day1Packed.unionByName(day2Packed)
       .groupBy("source", "bin")
       .agg(sum("n_docs").as("n_docs"),

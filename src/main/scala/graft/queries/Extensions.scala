@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{QueryDef, Tables}
+import graft.{Fixtures, QueryDef, Tables}
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, Multimodal, Similarity}
 import graft.streaming.Gates
@@ -346,18 +346,14 @@ object Extensions {
     * path. */
   private val auditGateRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  private val auditReplayLock = new Object
-
   def streamingAuditGate(s: SparkSession, d: String): DataFrame = {
     val name = s"graft_audit_gate_${auditGateRuns.incrementAndGet()}"
     // the testdata table is a single file and a file stream source needs a
     // directory — materialize a 4-file copy once per fixture fingerprint
     // (hash-partitioned on vec_id, so each micro-batch is a nontrivial slice)
-    val dir = indexCacheDir("graft-audit-replay", d, "embeddings", s"files4$auditCacheVersion")
-    auditReplayLock.synchronized {
-      if (!new java.io.File(s"$dir/_SUCCESS").exists())
-        Tables.embeddings(s, d).repartition(4, col("vec_id"))
-          .write.mode("overwrite").parquet(dir)
+    val dir = Fixtures.once(s, "graft-audit-replay", d, "embeddings",
+        s"files4$auditCacheVersion") { dir =>
+      Tables.embeddings(s, d).repartition(4, col("vec_id")).write.parquet(dir)
     }
     val schema = Tables.embeddings(s, d).schema
     Gates.run(s, name, Gates.Memory("complete")) {
@@ -380,11 +376,6 @@ object Extensions {
     * the global ntile sort happens there, never in the gated query. */
   private val transGateRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  private val transReplayLock = new Object
-
-  private def transitionsReplayDir(d: String): String =
-    indexCacheDir("graft-transitions-replay", d, "events", "tslices4v1")
-
   private val replayCols = Seq("user_id", "ts", "event_id", "event_type").map(col)
 
   /** An events replay directory as a stream, two files per trigger. */
@@ -393,35 +384,27 @@ object Extensions {
       .option("maxFilesPerTrigger", 2).parquet(dir)
 
   /** The time-sliced events replay (built on first use) as a stream. */
-  private def transitionsStream(s: SparkSession, d: String): DataFrame = {
-    ensureTransitionsReplay(s, d)
-    eventsStream(s, d, transitionsReplayDir(d))
-  }
+  private def transitionsStream(s: SparkSession, d: String): DataFrame =
+    eventsStream(s, d, transitionsReplay(s, d))
 
-  /** Build (once per events fingerprint) the 4-file time-sliced events
-    * replay — shared by q210 and q223. */
-  private def ensureTransitionsReplay(s: SparkSession, d: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    val dir = transitionsReplayDir(d)
-    transReplayLock.synchronized {
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-        val ev = Tables.events(s, d).select(replayCols: _*)
-        // persisted: the global ntile sort runs ONCE, not once per slice
-        val sliced = ev.withColumn("slice",
-          ntile(4).over(Window.orderBy(col("ts"), col("event_id"))))
-          .persist()
-        try {
-          val base = System.currentTimeMillis() - 60000L
-          (1 to 4).foreach { i =>
-            // distinct ascending mtimes pin the micro-batch order
-            writeSingleParquet(sliced.filter(col("slice") === i).drop("slice"),
-              dir, f"slice$i%02d.parquet", mtime = Some(base + i * 1000L))
-          }
-          Files.writeString(Paths.get(dir, "_SUCCESS"), "")
-        } finally sliced.unpersist()
-      }
+  /** The 4-file time-sliced events replay (built once per events
+    * fingerprint) — shared by q210, q223 and the q226 dup replay. */
+  private def transitionsReplay(s: SparkSession, d: String): String =
+    Fixtures.once(s, "graft-transitions-replay", d, "events", "tslices4v1") { dir =>
+      val ev = Tables.events(s, d).select(replayCols: _*)
+      // persisted: the global ntile sort runs ONCE, not once per slice
+      val sliced = ev.withColumn("slice",
+        ntile(4).over(Window.orderBy(col("ts"), col("event_id"))))
+        .persist()
+      try {
+        val base = System.currentTimeMillis() - 60000L
+        (1 to 4).foreach { i =>
+          // distinct ascending mtimes pin the micro-batch order
+          writeSingleParquet(sliced.filter(col("slice") === i).drop("slice"),
+            dir, f"slice$i%02d.parquet", mtime = Some(base + i * 1000L))
+        }
+      } finally sliced.unpersist()
     }
-  }
 
   def transitionsStreamingGate(s: SparkSession, d: String): DataFrame = {
     // two slices per trigger: the carry law needs ≥ 2 micro-batches
@@ -561,29 +544,22 @@ object Extensions {
     * not. */
   private val dedupGateRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  private val dupReplayLock = new Object
-
   def streamingDedupNative(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    ensureTransitionsReplay(s, d)
-    val src0 = transitionsReplayDir(d)
-    val dir = indexCacheDir("graft-dup-replay", d, "events", "dup8v1")
-    dupReplayLock.synchronized {
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-        Files.createDirectories(Paths.get(dir))
-        val base = System.currentTimeMillis() - 60000L
-        // originals first (mtimes 1-4), then the duplicate copies (5-8):
-        // with 2 files/trigger the copy of slice i lands 2 batches after i
-        (1 to 4).foreach { i =>
-          val from = Paths.get(src0, f"slice$i%02d.parquet")
-          val orig = Paths.get(dir, f"orig$i%02d.parquet")
-          val dup = Paths.get(dir, f"dupl$i%02d.parquet")
-          Files.copy(from, orig, StandardCopyOption.REPLACE_EXISTING)
-          Files.copy(from, dup, StandardCopyOption.REPLACE_EXISTING)
-          orig.toFile.setLastModified(base + i * 1000L)
-          dup.toFile.setLastModified(base + (4 + i) * 1000L)
-        }
-        Files.writeString(Paths.get(dir, "_SUCCESS"), "")
+    import java.nio.file.{Files, Paths}
+    val dir = Fixtures.once(s, "graft-dup-replay", d, "events", "dup8v1") { dir =>
+      val src0 = transitionsReplay(s, d)
+      Files.createDirectories(Paths.get(dir))
+      val base = System.currentTimeMillis() - 60000L
+      // originals first (mtimes 1-4), then the duplicate copies (5-8):
+      // with 2 files/trigger the copy of slice i lands 2 batches after i
+      (1 to 4).foreach { i =>
+        val from = Paths.get(src0, f"slice$i%02d.parquet")
+        val orig = Paths.get(dir, f"orig$i%02d.parquet")
+        val dup = Paths.get(dir, f"dupl$i%02d.parquet")
+        Files.copy(from, orig)
+        Files.copy(from, dup)
+        orig.toFile.setLastModified(base + i * 1000L)
+        dup.toFile.setLastModified(base + (4 + i) * 1000L)
       }
     }
     val src = eventsStream(s, d, dir)
@@ -782,52 +758,41 @@ object Extensions {
     * (id div 60)·60 arithmetic is off by a phase. */
   private val LateBaseSec = 1699999980L
 
-  private def lateReplayDir(d: String): String =
-    indexCacheDir("graft-late-replay", d, "events", "late3k_v3")
-
-  private val lateReplayLock = new Object
-
-  private def ensureLateReplay(s: SparkSession, d: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    val dir = lateReplayDir(d)
-    lateReplayLock.synchronized {
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-        val ids = Tables.events(s, d).select(col("event_id"))
-          .filter(col("event_id") < 3000L)
-        val base = System.currentTimeMillis() - 60000L
-        def ts(expr: org.apache.spark.sql.Column) =
-          timestamp_seconds(lit(LateBaseSec) + expr)
-        writeSingleParquet(
-          ids.filter(col("event_id") < 1000L)
-            .select(col("event_id"), ts(col("event_id")).as("ts")),
-          dir, "slice01.parquet", mtime = Some(base + 1000L))
-        writeSingleParquet(
-          ids.filter(col("event_id") >= 1000L && col("event_id") < 2000L)
-            .select(col("event_id"), ts(col("event_id")).as("ts")),
-          dir, "slice02.parquet", mtime = Some(base + 2000L))
-        // the late batch: arrives with slice 1's watermark OPERATIVE
-        // (two batches behind its own data — the lag the gate's doc
-        // comment pins), so the rewound rows are genuinely filtered
-        writeSingleParquet(
-          ids.filter(col("event_id") >= 2000L)
-            .select(col("event_id"),
-              ts(when(col("event_id") % 5 === 0, col("event_id") % 100)
-                .otherwise(col("event_id"))).as("ts")),
-          dir, "slice03.parquet", mtime = Some(base + 3000L))
-        writeSingleParquet(
-          s.range(1).select(lit(1000000L).as("event_id"),
-            ts(lit(1000000L)).as("ts")),
-          dir, "slice04.parquet", mtime = Some(base + 4000L))
-        Files.writeString(Paths.get(dir, "_SUCCESS"), "")
-      }
+  private def lateReplay(s: SparkSession, d: String): String =
+    Fixtures.once(s, "graft-late-replay", d, "events", "late3k_v3") { dir =>
+      val ids = Tables.events(s, d).select(col("event_id"))
+        .filter(col("event_id") < 3000L)
+      val base = System.currentTimeMillis() - 60000L
+      def ts(expr: org.apache.spark.sql.Column) =
+        timestamp_seconds(lit(LateBaseSec) + expr)
+      writeSingleParquet(
+        ids.filter(col("event_id") < 1000L)
+          .select(col("event_id"), ts(col("event_id")).as("ts")),
+        dir, "slice01.parquet", mtime = Some(base + 1000L))
+      writeSingleParquet(
+        ids.filter(col("event_id") >= 1000L && col("event_id") < 2000L)
+          .select(col("event_id"), ts(col("event_id")).as("ts")),
+        dir, "slice02.parquet", mtime = Some(base + 2000L))
+      // the late batch: arrives with slice 1's watermark OPERATIVE
+      // (two batches behind its own data — the lag the gate's doc
+      // comment pins), so the rewound rows are genuinely filtered
+      writeSingleParquet(
+        ids.filter(col("event_id") >= 2000L)
+          .select(col("event_id"),
+            ts(when(col("event_id") % 5 === 0, col("event_id") % 100)
+              .otherwise(col("event_id"))).as("ts")),
+        dir, "slice03.parquet", mtime = Some(base + 3000L))
+      writeSingleParquet(
+        s.range(1).select(lit(1000000L).as("event_id"),
+          ts(lit(1000000L)).as("ts")),
+        dir, "slice04.parquet", mtime = Some(base + 4000L))
     }
-  }
 
   def lateDataAccounting(s: SparkSession, d: String): DataFrame = {
-    ensureLateReplay(s, d)
+    val dir = lateReplay(s, d)
     val name = s"graft_late_${lateGateRuns.incrementAndGet()}"
     val agg = s.readStream.schema("event_id LONG, ts TIMESTAMP")
-      .option("maxFilesPerTrigger", 1).parquet(lateReplayDir(d))
+      .option("maxFilesPerTrigger", 1).parquet(dir)
       .withWatermark("ts", "100 seconds")
       .groupBy(window(col("ts"), "60 seconds"))
       .agg(count(lit(1)).as("n"), sum(col("event_id")).as("sum_id"))
@@ -878,50 +843,39 @@ object Extensions {
     * closed-form oracle checks both. */
   private val sessLateGateRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  private def sessLateReplayDir(d: String): String =
-    indexCacheDir("graft-sess-late-replay", d, "events", "sesslate3k_v1")
-
-  private val sessLateReplayLock = new Object
-
-  private def ensureSessLateReplay(s: SparkSession, d: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    val dir = sessLateReplayDir(d)
-    sessLateReplayLock.synchronized {
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-        val ids = Tables.events(s, d).select(col("event_id").as("id"))
-          .filter(col("id") < 3000L)
-        val base = System.currentTimeMillis() - 60000L
-        def ts(expr: org.apache.spark.sql.Column) =
-          timestamp_seconds(lit(LateBaseSec) + expr)
-        def slice(df: DataFrame, tsCol: org.apache.spark.sql.Column,
-                  name: String, mt: Long): Unit =
-          writeSingleParquet(df.select(col("id"), tsCol.as("ts")),
-            dir, name, mtime = Some(base + mt))
-        slice(ids.filter(col("id") < 1000L), ts(col("id")),
-          "slice01.parquet", 1000L)
-        slice(ids.filter(col("id") >= 1000L && col("id") < 2000L),
-          ts(col("id")), "slice02.parquet", 2000L)
-        slice(ids.filter(col("id") >= 2000L),
-          ts(when(col("id") % 5 === 0, col("id") % 100).otherwise(col("id"))),
-          "slice03.parquet", 3000L)
-        writeSingleParquet(
-          s.range(1).select(lit(1000000L).as("id"),
-            ts(lit(1000000L)).as("ts")),
-          dir, "slice04.parquet", mtime = Some(base + 4000L))
-        Files.writeString(Paths.get(dir, "_SUCCESS"), "")
-      }
+  private def sessLateReplay(s: SparkSession, d: String): String =
+    Fixtures.once(s, "graft-sess-late-replay", d, "events", "sesslate3k_v1") { dir =>
+      val ids = Tables.events(s, d).select(col("event_id").as("id"))
+        .filter(col("id") < 3000L)
+      val base = System.currentTimeMillis() - 60000L
+      def ts(expr: org.apache.spark.sql.Column) =
+        timestamp_seconds(lit(LateBaseSec) + expr)
+      def slice(df: DataFrame, tsCol: org.apache.spark.sql.Column,
+                name: String, mt: Long): Unit =
+        writeSingleParquet(df.select(col("id"), tsCol.as("ts")),
+          dir, name, mtime = Some(base + mt))
+      slice(ids.filter(col("id") < 1000L), ts(col("id")),
+        "slice01.parquet", 1000L)
+      slice(ids.filter(col("id") >= 1000L && col("id") < 2000L),
+        ts(col("id")), "slice02.parquet", 2000L)
+      slice(ids.filter(col("id") >= 2000L),
+        ts(when(col("id") % 5 === 0, col("id") % 100).otherwise(col("id"))),
+        "slice03.parquet", 3000L)
+      writeSingleParquet(
+        s.range(1).select(lit(1000000L).as("id"),
+          ts(lit(1000000L)).as("ts")),
+        dir, "slice04.parquet", mtime = Some(base + 4000L))
     }
-  }
 
   def sessionLateDrops(s: SparkSession, d: String): DataFrame = {
     implicit val spark: SparkSession = s
     import spark.implicits._
-    ensureSessLateReplay(s, d)
+    val dir = sessLateReplay(s, d)
     val name = s"graft_sess_late_${sessLateGateRuns.incrementAndGet()}"
     val ran = Gates.run(s, name, Gates.Memory("append"), tws = true) {
       val src = s.readStream
         .schema("id LONG, ts TIMESTAMP")
-        .option("maxFilesPerTrigger", 1).parquet(sessLateReplayDir(d))
+        .option("maxFilesPerTrigger", 1).parquet(dir)
       val events = src.as[(Long, java.sql.Timestamp)].map { case (id, t) =>
         val inv = (id / 5L).toString
         graft.streaming.TimedLineEvent(inv, t,
@@ -1077,18 +1031,11 @@ object Extensions {
     * proven under oracle, daily cost = delta) applied to the monitoring
     * table: at 100 TB you audit the day's ingest and fold it into
     * yesterday's table; you never re-scan the corpus. */
-  private def auditStateDir(d: String): String =
-    indexCacheDir("graft-audit-state", d, "embeddings", s"evenhalf$auditCacheVersion")
-
-  private val auditStateLock = new Object
-
   def auditIncremental(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
-    val dir = auditStateDir(d)
-    auditStateLock.synchronized {
-      if (!new java.io.File(s"$dir/_SUCCESS").exists())
-        embeddingAuditOn(emb.filter(col("vec_id") % 2 === 0))
-          .write.mode("overwrite").parquet(dir)
+    val dir = Fixtures.once(s, "graft-audit-state", d, "embeddings",
+        s"evenhalf$auditCacheVersion") { dir =>
+      embeddingAuditOn(emb.filter(col("vec_id") % 2 === 0)).write.parquet(dir)
     }
     val day1 = s.read.parquet(dir)
     val day2 = embeddingAuditOn(emb.filter(col("vec_id") % 2 === 1))
@@ -1265,21 +1212,15 @@ object Extensions {
     * q138 discipline). Corpus rows are embeddings joined to their
     * document's verdict at INDEX BUILD time — re-curation is an index
     * rebuild (offline maintenance), not a query-time recomputation. */
-  private def ivfVerdictIndexDir(d: String): String =
-    indexCacheDir("graft-ivf-cache", d, "embeddings", "c16t99verd")
-
   def hybridSearchIvf(s: SparkSession, d: String): DataFrame = {
     implicit val sp: SparkSession = s
     val emb = Tables.embeddings(s, d)
-    val dir = ivfVerdictIndexDir(d)
-    ivfBuildLock.synchronized {
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-        val labeled = emb.join(
-          graft.queries.Curation.qualityRouteOn(Tables.documents(s, d))
-            .select(col("doc_id").as("vec_id"), col("verdict")),
-          Seq("vec_id"))
-        Similarity.writeIvfIndex(labeled, dir, ivfCenters, metaCols = Seq("verdict"))
-      }
+    val dir = Fixtures.once(s, "graft-ivf-cache", d, "embeddings", "c16t99verd") { dir =>
+      val labeled = emb.join(
+        graft.queries.Curation.qualityRouteOn(Tables.documents(s, d))
+          .select(col("doc_id").as("vec_id"), col("verdict")),
+        Seq("vec_id"))
+      Similarity.writeIvfIndex(labeled, dir, ivfCenters, metaCols = Seq("verdict"))
     }
     Similarity.ivfTopKIndexedFiltered(dir, ivfCenters,
       emb.filter(col("vec_id") < 10), k = 5,
@@ -1332,11 +1273,7 @@ object Extensions {
   def hardNegativesIvfGate(s: SparkSession, d: String): DataFrame = {
     implicit val sp: SparkSession = s
     val emb = Tables.embeddings(s, d)
-    val dir = ivfLabIndexDir(d)
-    ivfBuildLock.synchronized {
-      if (!new java.io.File(s"$dir/_SUCCESS").exists())
-        Similarity.writeIvfIndex(emb, dir, ivfCenters, metaCols = Seq("label"))
-    }
+    val dir = ivfLabIndex(s, d)
     Similarity.hardNegativesIvf(dir, ivfCenters, emb.filter(col("vec_id") < 20))
   }
 
@@ -1470,58 +1407,30 @@ object Extensions {
     * scans — the 100 TB serving path, not per-query index training. */
   private val ivfCenters: Seq[Seq[Double]] = graft.ml.PinnedIvfCenters.values
 
-  /** Fingerprinted cache directory for a materialized index: the key binds
-    * the source parquet's identity (mtime ^ size — a regenerated fixture
-    * can never serve a stale index) AND the build parameters (`params` —
-    * a parameter change can never probe an incompatible index; band hashes
-    * built under different numHashes would simply never collide, silently
-    * emitting zero candidates). */
   /** Write `df` as exactly ONE named parquet file inside `dir` — the
     * fixture-prep move every file-ordered replay and multi-generation
-    * layout needs. Crash-safe: REPLACE_EXISTING makes a re-run after an
-    * interrupted build converge on the same file instead of failing on
-    * the half-moved one (the `_SUCCESS` marker is still what gates
-    * "built"; this just makes the rebuild idempotent). The temp dir is
+    * layout needs. Callers write into a fresh directory (a [[Fixtures]]
+    * build or a temp dir), so the target name is new. The temp dir is
     * `_`-prefixed INSIDE `dir`, which Spark's file listing hides. */
   private[graft] def writeSingleParquet(df: DataFrame, dir: String,
       fileName: String, mtime: Option[Long] = None): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.{Files, Paths}
     Files.createDirectories(Paths.get(dir))
     val tmp = s"$dir/_build_$fileName"
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    df.coalesce(1).write.parquet(tmp)
     val part = new java.io.File(tmp).listFiles()
       .find(_.getName.endsWith(".parquet")).get
     val target = Paths.get(dir, fileName)
-    Files.move(part.toPath, target, StandardCopyOption.REPLACE_EXISTING)
+    Files.move(part.toPath, target)
     mtime.foreach { t => target.toFile.setLastModified(t): Unit }
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-    }
-    rm(new java.io.File(tmp))
+    new scala.reflect.io.Directory(new java.io.File(tmp)).deleteRecursively(): Unit
   }
-
-  private[queries] def indexCacheDir(cache: String, d: String, srcTable: String,
-                                     params: String): String = {
-    val src = new java.io.File(s"$d/$srcTable.parquet")
-    val fp = java.lang.Long.toHexString(src.lastModified() ^ (src.length() * 1000003L))
-    s"/root/repo/target/$cache/" +
-      d.replaceAll("[^A-Za-z0-9.]", "_") + s"_${params}_${fp}_v2"
-  }
-
-  private def ivfIndexDir(d: String): String =
-    indexCacheDir("graft-ivf-cache", d, "embeddings", "c16t99")
-
-  private val ivfBuildLock = new Object
 
   def annIvfTopK(s: SparkSession, d: String): DataFrame = {
     implicit val sp: SparkSession = s
     val emb = Tables.embeddings(s, d)
-    val dir = ivfIndexDir(d)
-    // serialize the existence check + build so concurrent callers in one
-    // JVM never race overlapping overwrite-writes into the same directory
-    ivfBuildLock.synchronized {
-      if (!new java.io.File(s"$dir/_SUCCESS").exists())
-        Similarity.writeIvfIndex(emb, dir, ivfCenters)
+    val dir = Fixtures.once(s, "graft-ivf-cache", d, "embeddings", "c16t99") { dir =>
+      Similarity.writeIvfIndex(emb, dir, ivfCenters)
     }
     Similarity.ivfTopKIndexed(dir, ivfCenters, emb.filter(col("vec_id") < 10),
       k = 5, nProbe = 4)
@@ -1777,17 +1686,17 @@ object Extensions {
     * post-filtering would return fewer than k rows. */
   private val filteredLabels: Seq[Int] = Seq(0, 2, 4, 6, 8)
 
-  private def ivfLabIndexDir(d: String): String =
-    indexCacheDir("graft-ivf-cache", d, "embeddings", "c16t99lab")
+  /** The label-carrying IVF index (q104's), shared by q104 and q138. */
+  private def ivfLabIndex(s: SparkSession, d: String): String =
+    Fixtures.once(s, "graft-ivf-cache", d, "embeddings", "c16t99lab") { dir =>
+      Similarity.writeIvfIndex(Tables.embeddings(s, d), dir, ivfCenters,
+        metaCols = Seq("label"))
+    }
 
   def annIvfFilteredTopK(s: SparkSession, d: String): DataFrame = {
     implicit val sp: SparkSession = s
     val emb = Tables.embeddings(s, d)
-    val dir = ivfLabIndexDir(d)
-    ivfBuildLock.synchronized {
-      if (!new java.io.File(s"$dir/_SUCCESS").exists())
-        Similarity.writeIvfIndex(emb, dir, ivfCenters, metaCols = Seq("label"))
-    }
+    val dir = ivfLabIndex(s, d)
     Similarity.ivfTopKIndexedFiltered(dir, ivfCenters,
       emb.filter(col("vec_id") < 10), k = 5,
       neighborFilter = col("label").isin(filteredLabels.map(Integer.valueOf): _*),
@@ -2539,21 +2448,14 @@ object Extensions {
   private val sigBands = 8
   private val sigShingleN = 3
 
-  private def sigIndexDir(d: String): String =
-    indexCacheDir("graft-sig-cache", d, "documents",
-      s"h${sigHashes}b${sigBands}n$sigShingleN")
-
-  private val sigBuildLock = new Object
-
   def incrementalDedup(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
     val day1 = docs.filter(col("doc_id") % 2 === 0)
     val day2 = docs.filter(col("doc_id") % 2 === 1)
-    val dir = sigIndexDir(d)
-    sigBuildLock.synchronized {
-      if (!new java.io.File(s"$dir/_SUCCESS").exists())
-        Dedup.writeSignatureIndex(day1, dir,
-          numHashes = sigHashes, bands = sigBands, shingleN = sigShingleN)
+    val dir = Fixtures.once(s, "graft-sig-cache", d, "documents",
+        s"h${sigHashes}b${sigBands}n$sigShingleN") { dir =>
+      Dedup.writeSignatureIndex(day1, dir,
+        numHashes = sigHashes, bands = sigBands, shingleN = sigShingleN)
     }
     Dedup.nearDuplicatesAgainst(s, dir, day1, day2, minJaccard = 0.2,
       numHashes = sigHashes, bands = sigBands, shingleN = sigShingleN)
@@ -2579,24 +2481,14 @@ object Extensions {
     * full-rebuild rows, so the oracle — the same full-corpus IVF pipeline
     * as q31 under a different query set — checks append ≡ rebuild
     * end-to-end, hash-exact. */
-  private def ivfIncrDir(d: String): String =
-    indexCacheDir("graft-ivf-incr-cache", d, "embeddings", "c16t99incr")
-
-  private val ivfIncrLock = new Object
-
   def annIvfAppendProbe(s: SparkSession, d: String): DataFrame = {
     implicit val sp: SparkSession = s
     val emb = Tables.embeddings(s, d)
-    val dir = ivfIncrDir(d)
-    ivfIncrLock.synchronized {
-      // two-step build under one marker: day-1 overwrite, day-2 append.
-      // The marker is written LAST, so a half-built index (crash between
-      // the steps) is rebuilt from scratch, never probed.
-      if (!new java.io.File(s"$dir/_GRAFT_INDEX_READY").exists()) {
-        Similarity.writeIvfIndex(emb.filter(col("vec_id") % 2 === 0), dir, ivfCenters)
-        Similarity.appendToIvfIndex(emb.filter(col("vec_id") % 2 === 1), dir, ivfCenters)
-        new java.io.File(s"$dir/_GRAFT_INDEX_READY").createNewFile()
-      }
+    // two-step build under one marker: day-1 write, day-2 append; a
+    // crash between the steps leaves no marker, so it is rebuilt
+    val dir = Fixtures.once(s, "graft-ivf-incr-cache", d, "embeddings", "c16t99incr") { dir =>
+      Similarity.writeIvfIndex(emb.filter(col("vec_id") % 2 === 0), dir, ivfCenters)
+      Similarity.appendToIvfIndex(emb.filter(col("vec_id") % 2 === 1), dir, ivfCenters)
     }
     Similarity.ivfTopKIndexed(dir, ivfCenters,
       emb.filter(col("vec_id") >= 10 && col("vec_id") < 20), k = 5, nProbe = 4)
@@ -3020,6 +2912,13 @@ object Extensions {
       ON b.query_id = r.query_id AND b.neighbor_id = r.neighbor_id
     GROUP BY b.query_id"""
 
+  /** The q171 codes index: (vec_id, cell, codes), partitioned by cell. */
+  private[graft] def ivfPqIndex(s: SparkSession, d: String): String =
+    Fixtures.once(s, "graft-ivfpq-cache", d, "embeddings", "c16t99pq64x8") { dir =>
+      graft.operators.Pq.writeIvfPqIndex(Tables.embeddings(s, d), dir,
+        ivfCenters, pqBooks)
+    }
+
   /** q171: the composed IVF-PQ serving path ("IVFADC", Jégou et al. §VI —
     * the FAISS-standard architecture): coarse cells prune WHICH rows a
     * probe scans (cells/nProbe of the corpus, PartitionFilters on the
@@ -3034,12 +2933,7 @@ object Extensions {
     implicit val sp: SparkSession = s
     import graft.operators.Pq
     val emb = Tables.embeddings(s, d)
-    val dir = indexCacheDir("graft-ivfpq-cache", d, "embeddings", "c16t99pq64x8")
-    ivfBuildLock.synchronized {
-      if (!new java.io.File(s"$dir/_SUCCESS").exists())
-        Pq.writeIvfPqIndex(emb, dir, ivfCenters, pqBooks)
-    }
-    Pq.ivfPqTopK(dir, emb, emb.filter(col("vec_id") < 10),
+    Pq.ivfPqTopK(ivfPqIndex(s, d), emb, emb.filter(col("vec_id") < 10),
       ivfCenters, pqBooks, k = 5, nProbe = 4, shortlist = Pq.rerankShortlist)
   }
 
@@ -3106,17 +3000,11 @@ object Extensions {
     implicit val sp: SparkSession = s
     import graft.operators.Pq
     val emb = Tables.embeddings(s, d)
-    val dir = indexCacheDir("graft-ivfpq-incr", d, "embeddings", "c16t99pq64x8")
-    ivfBuildLock.synchronized {
-      // marker LAST: a half-built index (crash between the steps) is
-      // rebuilt from scratch, never probed — the q99 pattern
-      if (!new java.io.File(s"$dir/_GRAFT_INDEX_READY").exists()) {
-        Pq.writeIvfPqIndex(emb.filter(col("vec_id") % 2 === 0), dir,
-          ivfCenters, pqBooks)
-        Pq.appendToIvfPqIndex(emb.filter(col("vec_id") % 2 === 1), dir,
-          ivfCenters, pqBooks)
-        new java.io.File(s"$dir/_GRAFT_INDEX_READY").createNewFile()
-      }
+    val dir = Fixtures.once(s, "graft-ivfpq-incr", d, "embeddings", "c16t99pq64x8") { dir =>
+      Pq.writeIvfPqIndex(emb.filter(col("vec_id") % 2 === 0), dir,
+        ivfCenters, pqBooks)
+      Pq.appendToIvfPqIndex(emb.filter(col("vec_id") % 2 === 1), dir,
+        ivfCenters, pqBooks)
     }
     Pq.ivfPqTopK(dir, emb, emb.filter(col("vec_id") >= 10 && col("vec_id") < 20),
       ivfCenters, pqBooks, k = 5, nProbe = 4, shortlist = Pq.rerankShortlist)
@@ -3341,15 +3229,11 @@ object Extensions {
   def dupSpansIncremental(s: SparkSession, d: String): DataFrame = {
     import graft.operators.Dedup
     val docs = Tables.documents(s, d)
-    val dir = indexCacheDir("graft-grams-cache", d, "documents", s"g$dupSpanGram")
-    ivfBuildLock.synchronized {
-      if (!new java.io.File(s"$dir/_GRAFT_INDEX_READY").exists()) {
-        Dedup.gramPostings(docs.filter(col("doc_id") % 2 === 0), dupSpanGram)
-          .write.mode("overwrite").parquet(dir)
-        Dedup.gramPostings(docs.filter(col("doc_id") % 2 === 1), dupSpanGram)
-          .write.mode("append").parquet(dir)
-        new java.io.File(s"$dir/_GRAFT_INDEX_READY").createNewFile()
-      }
+    val dir = Fixtures.once(s, "graft-grams-cache", d, "documents", s"g$dupSpanGram") { dir =>
+      Dedup.gramPostings(docs.filter(col("doc_id") % 2 === 0), dupSpanGram)
+        .write.parquet(dir)
+      Dedup.gramPostings(docs.filter(col("doc_id") % 2 === 1), dupSpanGram)
+        .write.mode("append").parquet(dir)
     }
     Dedup.duplicatedSpanStatsFromPostings(
       s.read.parquet(dir), docs, gram = dupSpanGram)

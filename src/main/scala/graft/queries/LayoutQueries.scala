@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{QueryDef, Tables}
+import graft.{Fixtures, QueryDef, Tables}
 import graft.expressions.ZOrderKey
 
 /** Storage-layout query surface (see [[graft.operators.Layout]]). */
@@ -49,35 +49,26 @@ object LayoutQueries {
 
   // --- q219: zone-map stats off the PHYSICAL file layout ---------------------
 
-  private val zoneBuildLock = new Object
-
   /** 8 key-range-clustered order files (slice i = the i-th ntile of the
     * o_orderkey order) — the layout a range-clustered lakehouse write
     * produces, cached per orders fingerprint. Deterministic: o_orderkey
     * is unique, so the ntile cut is total-order stable. */
-  private[graft] def zonedOrdersDir(s: SparkSession, d: String): String = {
-    val dir = Extensions.indexCacheDir("graft-zone-layout", d, "orders", "ntile8v1")
-    zoneBuildLock.synchronized {
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-        val sliced = Tables.orders(s, d)
-          .select(col("o_orderkey"), col("o_orderdate"),
-            floor(col("o_totalprice") * lit(1e2)).cast("long").as("cents"))
-          .withColumn("slice", ntile(8).over(
-            org.apache.spark.sql.expressions.Window.orderBy(col("o_orderkey"))))
-          .persist()
-        try {
-          (1 to 8).foreach { i =>
-            Extensions.writeSingleParquet(
-              sliced.filter(col("slice") === i).drop("slice"),
-              dir, f"slice$i%02d.parquet")
-          }
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(dir, "_SUCCESS"), "")
-        } finally sliced.unpersist()
-      }
+  private[graft] def zonedOrdersDir(s: SparkSession, d: String): String =
+    Fixtures.once(s, "graft-zone-layout", d, "orders", "ntile8v1") { dir =>
+      val sliced = Tables.orders(s, d)
+        .select(col("o_orderkey"), col("o_orderdate"),
+          floor(col("o_totalprice") * lit(1e2)).cast("long").as("cents"))
+        .withColumn("slice", ntile(8).over(
+          org.apache.spark.sql.expressions.Window.orderBy(col("o_orderkey"))))
+        .persist()
+      try {
+        (1 to 8).foreach { i =>
+          Extensions.writeSingleParquet(
+            sliced.filter(col("slice") === i).drop("slice"),
+            dir, f"slice$i%02d.parquet")
+        }
+      } finally sliced.unpersist()
     }
-    dir
-  }
 
   /** q219: ZONE-MAP (per-file min/max/count) statistics computed off the
     * physical layout itself — `input_file_name()` groups rows by the file

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{QueryDef, Tables}
+import graft.{Fixtures, QueryDef, Tables}
 import graft.operators.{Maintenance => M}
 
 /** Table-maintenance query surface (see [[graft.operators.Maintenance]]).
@@ -38,52 +38,46 @@ object MaintenanceQueries {
 
   // --- q192: versioned table, time travel -----------------------------------
 
-  private val versionBuildLock = new Object
-
-  /** The deterministic 3-commit log over orders (all in exact cents, so
+  /** The deterministic 4-commit log over orders (all in exact cents, so
     * the merged state is pure integers):
     *  - v0 base: (key, prio, status, cents = floor(price·100));
     *  - v1: tombstones for keys ≡ 0 (mod 13); upserts for the remaining
     *    keys ≡ 0 (mod 7) — status 'R', cents + 1000;
     *  - v2: upserts for keys ≡ 0 (mod 5) — status 'V2', cents + 500 —
     *    including keys v1 deleted (re-insert after delete is the
-    *    semantics worth exercising).
-    * Both engines can state the final as-of-v2 row for every key in
-    * closed form, which is exactly what the oracle does. */
-  private def versionedOrdersDir(s: SparkSession, d: String): String = {
-    val root = Extensions.indexCacheDir("graft-version-cache", d, "orders", "log3v1")
-    versionBuildLock.synchronized {
-      if (!new java.io.File(s"$root/_GRAFT_LOG_READY").exists()) {
-        // a crashed partial build leaves commits without the READY marker;
-        // errorifexists would then wedge every rebuild — clear it first
-        val rootFile = new java.io.File(root)
-        if (rootFile.exists()) {
-          import scala.reflect.io.Directory
-          new Directory(rootFile).deleteRecursively()
-        }
-        val base = Tables.orders(s, d).select(
-          col("o_orderkey"),
-          col("o_orderpriority").as("prio"),
-          col("o_orderstatus").as("status"),
-          floor(col("o_totalprice") * lit(1e2)).cast("long").as("cents"),
-          lit("u").as("_op"))
-        graft.operators.Versioned.commit(base, root, "o_orderkey", 0)
-        val v1 = base.filter(col("o_orderkey") % 13 === 0)
-          .withColumn("_op", lit("d"))
-          .unionByName(base
-            .filter(col("o_orderkey") % 13 =!= 0 && col("o_orderkey") % 7 === 0)
-            .withColumn("status", lit("R"))
-            .withColumn("cents", col("cents") + 1000L))
-        graft.operators.Versioned.commit(v1, root, "o_orderkey", 1)
-        val v2 = base.filter(col("o_orderkey") % 5 === 0)
-          .withColumn("status", lit("V2"))
-          .withColumn("cents", col("cents") + 500L)
-        graft.operators.Versioned.commit(v2, root, "o_orderkey", 2)
-        new java.io.File(s"$root/_GRAFT_LOG_READY").createNewFile()
-      }
+    *    semantics worth exercising);
+    *  - v3: q220's erasure — tombstones for every key ≡ 3 (mod 17) live
+    *    at v2.
+    * Both engines can state the as-of-v2 and as-of-v3 row for every key
+    * in closed form, which is exactly what the oracles do. Every reader
+    * names the version it reads, so v3 never changes what a v0–v2
+    * reader sees. */
+  private def versionedOrdersDir(s: SparkSession, d: String): String =
+    Fixtures.once(s, "graft-version-cache", d, "orders", "log4v1") { root =>
+      import graft.operators.Versioned
+      val base = Tables.orders(s, d).select(
+        col("o_orderkey"),
+        col("o_orderpriority").as("prio"),
+        col("o_orderstatus").as("status"),
+        floor(col("o_totalprice") * lit(1e2)).cast("long").as("cents"),
+        lit("u").as("_op"))
+      Versioned.commit(base, root, "o_orderkey", 0)
+      val v1 = base.filter(col("o_orderkey") % 13 === 0)
+        .withColumn("_op", lit("d"))
+        .unionByName(base
+          .filter(col("o_orderkey") % 13 =!= 0 && col("o_orderkey") % 7 === 0)
+          .withColumn("status", lit("R"))
+          .withColumn("cents", col("cents") + 1000L))
+      Versioned.commit(v1, root, "o_orderkey", 1)
+      val v2 = base.filter(col("o_orderkey") % 5 === 0)
+        .withColumn("status", lit("V2"))
+        .withColumn("cents", col("cents") + 500L)
+      Versioned.commit(v2, root, "o_orderkey", 2)
+      val erased = Versioned.readAt(s, root, "o_orderkey", 2)
+        .filter(col("o_orderkey") % 17 === 3)
+        .withColumn("_op", lit("d"))
+      Versioned.commit(erased, root, "o_orderkey", 3)
     }
-    root
-  }
 
   /** Public handle on the q192 log root — specs assert the q220 erasure
     * laws (all-D feed, legal-hold time travel, destruction-on-compact)
@@ -327,11 +321,6 @@ object MaintenanceQueries {
     * iteration counts far more often than it is rebuilt. */
   val prIterations = 3
 
-  private def graphCacheDir(d: String): String =
-    Extensions.indexCacheDir("graft-graph-cache", d, "lineitem", "copurchasev2")
-
-  private val graphBuildLock = new Object
-
   /** The maintained co-purchase graph artifact: `edges` = (src, dst, sdeg)
     * with each edge's source out-degree FUSED ON and rows clustered by dst
     * (the key every ranking iteration aggregates on), `deg` = (node, deg).
@@ -340,35 +329,31 @@ object MaintenanceQueries {
     * re-scanning the corpus-sized edge list per query to re-prove an
     * invariant of the build. */
   private[graft] def copurchaseGraph(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val dir = graphCacheDir(d)
-    graphBuildLock.synchronized {
-      if (!(new java.io.File(s"$dir/edges/_SUCCESS").exists() &&
-            new java.io.File(s"$dir/deg/_SUCCESS").exists())) {
-        val e = Tables.lineitem(s, d).select("l_orderkey", "l_partkey").distinct()
-        val pairs = e.as("a").join(e.as("b"), "l_orderkey")
-          .filter(col("a.l_partkey") =!= col("b.l_partkey"))
-          .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
-          .distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          pairs.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-            .repartition(4)
-            .write.mode("overwrite").parquet(s"$dir/deg")
-          val deg = s.read.parquet(s"$dir/deg")
-          pairs
-            .join(broadcast(deg.select(col("node").as("src"), col("deg").as("sdeg"))), "src")
-            .select(col("src"), col("dst"), col("sdeg"))
-            .repartition(col("dst"))
-            .write.mode("overwrite").parquet(s"$dir/edges")
-          // build-time dangling proof on the WRITTEN artifact (undirected
-          // pairs make it true by construction; prove it anyway)
-          val dangling = s.read.parquet(s"$dir/edges")
-            .select(col("dst").as("node")).distinct()
-            .join(deg.select("node"), Seq("node"), "left_anti").count()
-          require(dangling == 0L,
-            s"co-purchase graph build produced $dangling dangling node(s)")
-        } finally pairs.unpersist(false)
-      }
+    val dir = Fixtures.once(s, "graft-graph-cache", d, "lineitem", "copurchasev2") { dir =>
+      val e = Tables.lineitem(s, d).select("l_orderkey", "l_partkey").distinct()
+      val pairs = e.as("a").join(e.as("b"), "l_orderkey")
+        .filter(col("a.l_partkey") =!= col("b.l_partkey"))
+        .select(col("a.l_partkey").as("src"), col("b.l_partkey").as("dst"))
+        .distinct()
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        pairs.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
+          .repartition(4)
+          .write.parquet(s"$dir/deg")
+        val deg = s.read.parquet(s"$dir/deg")
+        pairs
+          .join(broadcast(deg.select(col("node").as("src"), col("deg").as("sdeg"))), "src")
+          .select(col("src"), col("dst"), col("sdeg"))
+          .repartition(col("dst"))
+          .write.parquet(s"$dir/edges")
+        // build-time dangling proof on the WRITTEN artifact (undirected
+        // pairs make it true by construction; prove it anyway)
+        val dangling = s.read.parquet(s"$dir/edges")
+          .select(col("dst").as("node")).distinct()
+          .join(deg.select("node"), Seq("node"), "left_anti").count()
+        require(dangling == 0L,
+          s"co-purchase graph build produced $dangling dangling node(s)")
+      } finally pairs.unpersist(false)
     }
     (s.read.parquet(s"$dir/edges"), s.read.parquet(s"$dir/deg"))
   }
@@ -418,12 +403,6 @@ object MaintenanceQueries {
     * makes (support pruning precedes structure mining). */
   val triMinSupport = 2
 
-  private def supportGraphDir(d: String): String =
-    Extensions.indexCacheDir("graft-graph-cache", d, "lineitem",
-      s"trisupport${triMinSupport}v1")
-
-  private val supportBuildLock = new Object
-
   /** Maintained artifact: canonical undirected frequent-co-purchase edges
     * `(s < t, c ≥ triMinSupport)` — the weighted sibling of
     * [[copurchaseGraph]] (which drops counts), built by the same
@@ -431,20 +410,17 @@ object MaintenanceQueries {
     * key (per-order fanout bounded by basket size, never all-pairs) runs
     * once per dataset fingerprint; structure queries reuse the parquet. */
   private[graft] def copurchaseSupportEdges(s: SparkSession, d: String): DataFrame = {
-    val dir = supportGraphDir(d)
-    supportBuildLock.synchronized {
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-        val e = Tables.lineitem(s, d).select("l_orderkey", "l_partkey").distinct()
-        e.as("a").join(e.as("b"), "l_orderkey")
-          .filter(col("a.l_partkey") < col("b.l_partkey"))
-          .groupBy(col("a.l_partkey").as("s"), col("b.l_partkey").as("t"))
-          .agg(count(lit(1)).as("c"))
-          .filter(col("c") >= triMinSupport)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(dir)
-      }
-    }
-    s.read.parquet(dir)
+    s.read.parquet(Fixtures.once(s, "graft-graph-cache", d, "lineitem",
+        s"trisupport${triMinSupport}v1") { dir =>
+      val e = Tables.lineitem(s, d).select("l_orderkey", "l_partkey").distinct()
+      e.as("a").join(e.as("b"), "l_orderkey")
+        .filter(col("a.l_partkey") < col("b.l_partkey"))
+        .groupBy(col("a.l_partkey").as("s"), col("b.l_partkey").as("t"))
+        .agg(count(lit(1)).as("c"))
+        .filter(col("c") >= triMinSupport)
+        .coalesce(1)
+        .write.parquet(dir)
+    })
   }
 
   /** q182: every triangle in the frequent co-purchase graph, as sorted
@@ -611,17 +587,8 @@ object MaintenanceQueries {
     * never the fold of the full live log. */
   def changeFeedCheckpointSummary(s: SparkSession, d: String): DataFrame = {
     val root = versionedOrdersDir(s, d)
-    val ck = Extensions.indexCacheDir("graft-version-ck", d, "orders", "ckv1")
-    versionBuildLock.synchronized {
-      if (!new java.io.File(s"$ck/_GRAFT_LOG_READY").exists()) {
-        val ckFile = new java.io.File(ck)
-        if (ckFile.exists()) {
-          import scala.reflect.io.Directory
-          new Directory(ckFile).deleteRecursively()
-        }
-        graft.operators.Versioned.compact(s, root, "o_orderkey", 1, ck)
-        new java.io.File(s"$ck/_GRAFT_LOG_READY").createNewFile()
-      }
+    val ck = Fixtures.once(s, "graft-version-ck", d, "orders", "ckv1") { ck =>
+      graft.operators.Versioned.compact(s, root, "o_orderkey", 1, ck)
     }
     graft.operators.Versioned
       .changeFeedFromCheckpoint(s, ck, root, "o_orderkey", 1, 2)
@@ -652,9 +619,9 @@ object MaintenanceQueries {
   /** q220: RIGHT-TO-BE-FORGOTTEN ERASURE over the versioned log — the
     * GDPR/CCPA deletion flow a lakehouse actually runs: the subject's
     * keys (here: o_orderkey ≡ 3 mod 17, standing in for "one customer's
-    * rows") are erased by COMMITTING TOMBSTONES as the next log version —
-    * an append, not a rewrite: time travel to v2 still serves the
-    * pre-erasure state (legal-hold reads), readAt(v3) serves none of the
+    * rows") are erased by COMMITTING TOMBSTONES as the next log version
+    * (v3, committed with the log) — an append, not a rewrite: time
+    * travel to v2 still serves the pre-erasure state (legal-hold reads), readAt(v3) serves none of the
     * erased keys, and changeFeed(2,3) hands downstream consumers exactly
     * the D-ops they must replay (VersionedSpec/MaintenanceSpec pin both
     * laws). Cost shape: the erasure delta is subject-sized, the commit is
@@ -665,15 +632,6 @@ object MaintenanceQueries {
     * path). Oracle: q192's closed form minus the erased keys. */
   def gdprErasureSummary(s: SparkSession, d: String): DataFrame = {
     val root = versionedOrdersDir(s, d)
-    versionBuildLock.synchronized {
-      if (!new java.io.File(s"$root/v=3").exists()) {
-        val doomed = graft.operators.Versioned
-          .readAt(s, root, "o_orderkey", 2)
-          .filter(col("o_orderkey") % 17 === 3)
-          .withColumn("_op", lit("d"))
-        graft.operators.Versioned.commit(doomed, root, "o_orderkey", 3)
-      }
-    }
     graft.operators.Versioned.readAt(s, root, "o_orderkey", 3)
       .groupBy(col("prio"), col("status"))
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("revenue_cents"))

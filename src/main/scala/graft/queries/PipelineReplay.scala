@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
-import graft.{QueryDef, Tables}
+import graft.{Fixtures, QueryDef, Tables}
 import graft.ml.{Anomaly, PinnedKmeansModel}
 import graft.streaming.{Gates, InvoiceResult, PurchaseCsv, Sessionizer,
   SessionizerTws, TimedLineEvent}
@@ -53,10 +53,8 @@ object PipelineReplay {
 
     val lines = manufacturedLines(s, d).select("value").as[String]
 
-    // typed univocity route, not routeRelational: measured 2× faster at
-    // this row width (from_csv's CsvToStructs is a non-codegen expression;
-    // the primitive univocity loop wins) — the two are parity-tested
-    // equal on well-formed and numeric-failure lines (RelationalParseSpec)
+    // the typed univocity route, as in the streaming pipeline (a from_csv
+    // route measured 2× slower at this row width)
     val events = lines.flatMap(PurchaseCsv.route _)
     Sessionizer.sessionizeBatch(events).toDF()
       .select(
@@ -169,8 +167,6 @@ object PipelineReplay {
 
   private val streamGateRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  private val streamReplayLock = new Object
-
   /** Part files per DATA slice. One slice used to be ONE parquet file, so
     * every micro-batch's CSV parse (the univocity flatMap runs inside the
     * file-scan stage) was capped at one task per file — measured at
@@ -188,9 +184,6 @@ object PipelineReplay {
   private[graft] def sliceFiles(i: Int): Seq[String] =
     if (i <= 4) (0 until SliceParts).map(p => f"slice$i%02d_p$p.parquet")
     else Seq(f"slice$i%02d.parquet")
-
-  private[graft] def pipelineReplayDir(d: String): String =
-    Extensions.indexCacheDir("graft-pipe-replay", d, "lineitem", "slices6p8v2")
 
   /** q216: the reference's ENTIRE reason to exist — readStream → CSV parse/
     * route (ST3) → the REAL flatMapGroupsWithState event-time sessionizer
@@ -242,51 +235,44 @@ object PipelineReplay {
 
   /** Build (once per lineitem fingerprint) the six-slice replay fixture
     * the q216 family streams; returns its directory. */
-  private[graft] def ensurePipelineReplay(s: SparkSession, d: String): String = {
-    val dir = pipelineReplayDir(d)
-    streamReplayLock.synchronized {
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-        // the global slice sort runs once (fixture prep, cached per
-        // lineitem fingerprint), never in the gated query
-        val sliced = manufacturedLines(s, d).withColumn("slice",
-          ntile(4).over(Window.orderBy(col("l_orderkey"), col("l_linenumber"))))
-          .persist()
-        try {
-          val base = System.currentTimeMillis() - 60000L
-          (1 to 4).foreach { i =>
-            (0 until SliceParts).foreach { p =>
-              Extensions.writeSingleParquet(
-                sliced.filter(col("slice") === i &&
-                    pmod(col("l_orderkey"), lit(SliceParts)) === p)
-                  .select(lit(new java.sql.Timestamp(
-                    ReplayBaseMs + (i - 1) * SliceStepMs)).as("event_ts"),
-                    col("value")),
-                dir, f"slice$i%02d_p$p.parquet", mtime = Some(base + i * 1000L))
-            }
-          }
-          // two sentinel FILES on a throwaway key drive the watermark.
-          // (With maxFilesPerTrigger = 2·SliceParts both sentinels land
-          // in ONE micro-batch, so the final emit relies on the engine's
-          // no-data watermark sweep — the load-bearing dependency the
-          // q216 ledger names; a Spark version that stopped running the
-          // sweep would emit ZERO rows here, loudly.)
-          // past every data-slice session's timeout; the sentinel's own
-          // session never expires (nothing advances the watermark past it)
-          // and is filtered out of the gate output
-          Seq(5, 6).foreach { i =>
+  private[graft] def ensurePipelineReplay(s: SparkSession, d: String): String =
+    Fixtures.once(s, "graft-pipe-replay", d, "lineitem", "slices6p8v2") { dir =>
+      // the global slice sort runs once (fixture prep, cached per
+      // lineitem fingerprint), never in the gated query
+      val sliced = manufacturedLines(s, d).withColumn("slice",
+        ntile(4).over(Window.orderBy(col("l_orderkey"), col("l_linenumber"))))
+        .persist()
+      try {
+        val base = System.currentTimeMillis() - 60000L
+        (1 to 4).foreach { i =>
+          (0 until SliceParts).foreach { p =>
             Extensions.writeSingleParquet(
-              s.createDataFrame(Seq(TimedRawLine(
-                new java.sql.Timestamp(ReplayBaseMs + (i - 4) * 86400000L),
-                s"$SentinelInvoice,0,ITEM,1,7/19/2011 12:19,100,cWM,ES"))),
-              dir, f"slice$i%02d.parquet", mtime = Some(base + i * 1000L))
+              sliced.filter(col("slice") === i &&
+                  pmod(col("l_orderkey"), lit(SliceParts)) === p)
+                .select(lit(new java.sql.Timestamp(
+                  ReplayBaseMs + (i - 1) * SliceStepMs)).as("event_ts"),
+                  col("value")),
+              dir, f"slice$i%02d_p$p.parquet", mtime = Some(base + i * 1000L))
           }
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(dir, "_SUCCESS"), "")
-        } finally sliced.unpersist()
-      }
+        }
+        // two sentinel FILES on a throwaway key drive the watermark.
+        // (With maxFilesPerTrigger = 2·SliceParts both sentinels land
+        // in ONE micro-batch, so the final emit relies on the engine's
+        // no-data watermark sweep — the load-bearing dependency the
+        // q216 ledger names; a Spark version that stopped running the
+        // sweep would emit ZERO rows here, loudly.)
+        // past every data-slice session's timeout; the sentinel's own
+        // session never expires (nothing advances the watermark past it)
+        // and is filtered out of the gate output
+        Seq(5, 6).foreach { i =>
+          Extensions.writeSingleParquet(
+            s.createDataFrame(Seq(TimedRawLine(
+              new java.sql.Timestamp(ReplayBaseMs + (i - 4) * 86400000L),
+              s"$SentinelInvoice,0,ITEM,1,7/19/2011 12:19,100,cWM,ES"))),
+            dir, f"slice$i%02d.parquet", mtime = Some(base + i * 1000L))
+        }
+      } finally sliced.unpersist()
     }
-    dir
-  }
 
   /** q43's oracle extended with the q44 scoring block: time_hour derives
     * from the order date (a DATE — its hour is structurally 0, exactly
@@ -413,31 +399,21 @@ object PipelineReplay {
     * GATED surface of q224/q234 is the initial-state bulk load plus the
     * stream on top, not the batch fold that manufactures the snapshot;
     * re-folding 300k lines per invocation was pure fixture cost). */
-  private def initSnapshotDir(d: String): String =
-    Extensions.indexCacheDir("graft-pipe-initsnap", d, "lineitem", "fold12v2")
-
-  private def ensureInitSnapshot(s: SparkSession, d: String): String = {
-    implicit val spark: SparkSession = s
-    import spark.implicits._
-    val dir = initSnapshotDir(d)
-    val fixture = ensurePipelineReplay(s, d)
-    streamReplayLock.synchronized {
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-        val rows = timedEvents(s.read
-          .parquet((sliceFiles(1) ++ sliceFiles(2)).map(n => s"$fixture/$n"): _*))
-          .groupByKey(_.invoiceNo)
-          .mapGroups(foldInitialState _)
-          .map { case (inv, st) =>
-            InitSnapshotRow(inv, st.lines, st.errorReason, st.maxEventMs,
-              graft.streaming.SessionizerTws.packInit(st))
-          }
-        Extensions.writeSingleParquet(rows.toDF(), dir, "snapshot.parquet")
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(dir, "_SUCCESS"), "")
-      }
+  private def ensureInitSnapshot(s: SparkSession, d: String): String =
+    Fixtures.once(s, "graft-pipe-initsnap", d, "lineitem", "fold12v2") { dir =>
+      implicit val spark: SparkSession = s
+      import spark.implicits._
+      val fixture = ensurePipelineReplay(s, d)
+      val rows = timedEvents(s.read
+        .parquet((sliceFiles(1) ++ sliceFiles(2)).map(n => s"$fixture/$n"): _*))
+        .groupByKey(_.invoiceNo)
+        .mapGroups(foldInitialState _)
+        .map { case (inv, st) =>
+          InitSnapshotRow(inv, st.lines, st.errorReason, st.maxEventMs,
+            graft.streaming.SessionizerTws.packInit(st))
+        }
+      Extensions.writeSingleParquet(rows.toDF(), dir, "snapshot.parquet")
     }
-    dir
-  }
 
   /** q224: WARM-START (state bootstrap) of the streaming sessionizer —
     * the migration pattern production streams need when a stateful job is
@@ -778,7 +754,7 @@ object PipelineReplay {
   def stateMigrationReverseGate(s: SparkSession, d: String): DataFrame = {
     implicit val spark: SparkSession = s
     import spark.implicits._
-    val dir = pipelineReplayDir(d)
+    val dir = ensurePipelineReplay(s, d)
     val ck = ensureTwsStateCheckpoint(s, d) // live TWS checkpoint, slices 1–3 open
     def readVar(name: String) = s.read.format("statestore")
       .option("path", ck).option("stateVarName", name).load()
@@ -838,7 +814,7 @@ object PipelineReplay {
 
   private def stateMigrationAt(s: SparkSession, d: String,
                                partitions: Int): DataFrame = {
-    val dir = pipelineReplayDir(d)
+    val dir = ensurePipelineReplay(s, d)
     // live fMGWS checkpoint, slices 1–3 open
     val init = migratedInit(s, ensureStateCheckpoint(s, d))
     val expectedStreamed = postMigrationRows(s, dir)
@@ -893,7 +869,7 @@ object PipelineReplay {
   private val migrationCrashRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
   def stateMigrationCrashGate(s: SparkSession, d: String): DataFrame = {
-    val dir = pipelineReplayDir(d)
+    val dir = ensurePipelineReplay(s, d)
     // live fMGWS checkpoint, slices 1–3 open
     val init = migratedInit(s, ensureStateCheckpoint(s, d))
     val work = java.nio.file.Files

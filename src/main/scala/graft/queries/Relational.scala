@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{QueryDef, Tables}
+import graft.{Fixtures, QueryDef, Tables}
 import graft.batch.InvoiceOps
 import graft.functions.Exact._
 
@@ -219,8 +219,6 @@ object Relational {
     * VERBATIM; a lossy or schema-mangling round-trip would break the
     * hash, which is exactly what the row gates. Column pruning and the
     * aggregate pushdown shape carry over to the ORC scan unchanged. */
-  private val orcBuildLock = new Object
-
   private def q09AggOn(li: DataFrame): DataFrame =
     li.groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
@@ -234,11 +232,8 @@ object Relational {
         count(lit(1)).as("count_order"))
 
   def pricingSummaryOrc(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.queries.Extensions.indexCacheDir(
-      "graft-orc-cache", d, "lineitem", "orc1")
-    orcBuildLock.synchronized {
-      if (!new java.io.File(s"$dir/_SUCCESS").exists())
-        Tables.lineitem(s, d).write.mode("overwrite").orc(dir)
+    val dir = Fixtures.once(s, "graft-orc-cache", d, "lineitem", "orc1") { dir =>
+      Tables.lineitem(s, d).write.orc(dir)
     }
     q09AggOn(s.read.orc(dir))
   }
@@ -252,11 +247,8 @@ object Relational {
     * the difference between ingesting a field and paying for a line). The
     * aggregation hash-matches q09's parquet oracle verbatim. */
   def pricingSummaryJson(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.queries.Extensions.indexCacheDir(
-      "graft-json-cache", d, "lineitem", "jsonl1")
-    orcBuildLock.synchronized {
-      if (!new java.io.File(s"$dir/_SUCCESS").exists())
-        Tables.lineitem(s, d).write.mode("overwrite").json(dir)
+    val dir = Fixtures.once(s, "graft-json-cache", d, "lineitem", "jsonl1") { dir =>
+      Tables.lineitem(s, d).write.json(dir)
     }
     val subset = org.apache.spark.sql.types.StructType(
       Tables.lineitem(s, d).schema.fields.filter(f => Set(
@@ -1020,8 +1012,6 @@ object Relational {
     ORDER BY numwait DESC, l_suppkey
     LIMIT 100"""
 
-  private val partWriteLock = new Object
-
   /** q190: hive-partitioned storage layout — orders written
     * `partitionBy(o_orderpriority)` once per dataset fingerprint, then the
     * urgent slice's monthly order counts and exact-cents revenue served
@@ -1033,12 +1023,8 @@ object Relational {
     * justification is identical: the oracle is the plain-parquet q190
     * aggregate, so a layout that loses or mangles rows breaks the hash. */
   def priorityLayoutRevenue(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.queries.Extensions.indexCacheDir(
-      "graft-part-cache", d, "orders", "prio1")
-    partWriteLock.synchronized {
-      if (!new java.io.File(s"$dir/_SUCCESS").exists())
-        Tables.orders(s, d).write.mode("overwrite")
-          .partitionBy("o_orderpriority").parquet(dir)
+    val dir = Fixtures.once(s, "graft-part-cache", d, "orders", "prio1") { dir =>
+      Tables.orders(s, d).write.partitionBy("o_orderpriority").parquet(dir)
     }
     s.read.parquet(dir)
       .filter(col("o_orderpriority") === "1-URGENT")
@@ -1097,8 +1083,6 @@ object Relational {
                 AS BIGINT) AS covered_ms
     FROM sweep GROUP BY 1"""
 
-  private val evoWriteLock = new Object
-
   /** q213: SCHEMA EVOLUTION read — the storage-family row for the drift
     * every long-lived 100 TB dataset accumulates: generation 1 files
     * (even order keys) carry three columns, generation 2 (odd keys) adds
@@ -1112,23 +1096,17 @@ object Relational {
     * the two writes land as files in the same directory (the q210
     * move-the-part-file mechanics). */
   def schemaEvolutionRead(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val dir = graft.queries.Extensions.indexCacheDir(
-      "graft-evo-cache", d, "orders", "gen2v1")
-    evoWriteLock.synchronized {
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-        val o = Tables.orders(s, d)
-        Seq(
-          o.filter(col("o_orderkey") % 2 === 0)
-            .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
-          o.filter(col("o_orderkey") % 2 === 1)
-            .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-              col("o_orderpriority")))
-          .zipWithIndex.foreach { case (gen, i) =>
-            graft.queries.Extensions.writeSingleParquet(gen, dir, s"gen$i.parquet")
-          }
-        Files.writeString(Paths.get(dir, "_SUCCESS"), "")
-      }
+    val dir = Fixtures.once(s, "graft-evo-cache", d, "orders", "gen2v1") { dir =>
+      val o = Tables.orders(s, d)
+      Seq(
+        o.filter(col("o_orderkey") % 2 === 0)
+          .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
+        o.filter(col("o_orderkey") % 2 === 1)
+          .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
+            col("o_orderpriority")))
+        .zipWithIndex.foreach { case (gen, i) =>
+          graft.queries.Extensions.writeSingleParquet(gen, dir, s"gen$i.parquet")
+        }
     }
     s.read.option("mergeSchema", "true").parquet(dir)
       .groupBy(coalesce(col("o_orderpriority"), lit("unknown")).as("pri"))

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{QueryDef, Tables}
+import graft.{Fixtures, QueryDef, Tables}
 import graft.functions.Exact.{dsum, dsumSql}
 import graft.operators.{EditJoin, Ranges, Skew}
 
@@ -171,8 +171,6 @@ object ScaleJoins {
 
   // --- q113: incremental entity resolution (segment-index roll-forward) ----
 
-  private val segBuildLock = new Object
-
   /** q113: q105's fuzzy resolution served from a PERSISTED, incrementally
     * grown segment index — the dirty registry lands in two batches (even
     * dirty_ids day 1, odd day 2), day 2 is APPENDED without rewriting
@@ -186,19 +184,13 @@ object ScaleJoins {
     implicit val sp: SparkSession = s
     val clean = titled(Tables.documents(s, d))
     val dirty = dirtied(Tables.documents(s, d))
-    val dir = Extensions.indexCacheDir("graft-seg-cache", d, "documents", "tau1")
-    segBuildLock.synchronized {
-      // two-step build under one marker, written LAST (the q99 rule): a
-      // crash between overwrite and append leaves no marker, so the
-      // half-built index is rebuilt, never probed — _SUCCESS alone would
-      // look complete after step one.
-      if (!new java.io.File(s"$dir/_GRAFT_INDEX_READY").exists()) {
-        EditJoin.writeSegmentIndex(
-          dirty.filter(col("dirty_id") % 2 === 0), "dirty_title", dir, tau = 1)
-        EditJoin.appendToSegmentIndex(
-          dirty.filter(col("dirty_id") % 2 === 1), "dirty_title", dir, tau = 1)
-        new java.io.File(s"$dir/_GRAFT_INDEX_READY").createNewFile()
-      }
+    // two-step build under one marker, written last: a crash between
+    // write and append leaves no marker, so the index is rebuilt
+    val dir = Fixtures.once(s, "graft-seg-cache", d, "documents", "tau1") { dir =>
+      EditJoin.writeSegmentIndex(
+        dirty.filter(col("dirty_id") % 2 === 0), "dirty_title", dir, tau = 1)
+      EditJoin.appendToSegmentIndex(
+        dirty.filter(col("dirty_id") % 2 === 1), "dirty_title", dir, tau = 1)
     }
     val pairs = EditJoin.probeSegmentIndex(clean, "title", dir, tau = 1)
     clean.join(pairs, col("title") === col("s_key"))

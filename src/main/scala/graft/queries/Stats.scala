@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{QueryDef, Tables}
+import graft.{Fixtures, QueryDef, Tables}
 import graft.functions.Exact
 
 /** Exact distributed statistics — the profiling pass a training-data
@@ -510,8 +510,6 @@ object Stats {
 
   // --- q118: incremental HLL maintenance over persisted state ---------------
 
-  private val hllMaintLock = new Object
-
   /** q118: the q93 sketch served from PERSISTED, incrementally maintained
     * register state — the sketch-family twin of the index roll-forward
     * doctrine (q52 signatures, q99 IVF cells, q113 segments): day-1
@@ -526,28 +524,21 @@ object Stats {
   def hllIncremental(s: SparkSession, d: String): DataFrame = {
     import graft.operators.Hll
     val ev = Tables.events(s, d)
-    val dir = Extensions.indexCacheDir("graft-hll-cache", d, "events", "p12")
-    hllMaintLock.synchronized {
-      // marker written LAST (the q99 rule): a crash mid-maintenance
-      // leaves no marker and the state is rebuilt, never probed
-      if (!new java.io.File(s"$dir/_GRAFT_INDEX_READY").exists()) {
-        Hll.registers(ev.filter(col("event_id") % 2 === 0),
-            Seq("event_type"), col("user_id"))
-          .write.mode("overwrite").parquet(s"$dir/base")
-        val delta = Hll.registers(ev.filter(col("event_id") % 2 === 1),
+    // a crash mid-maintenance leaves no marker: the state is rebuilt
+    val dir = Fixtures.once(s, "graft-hll-cache", d, "events", "p12") { dir =>
+      Hll.registers(ev.filter(col("event_id") % 2 === 0),
           Seq("event_type"), col("user_id"))
-        s.read.parquet(s"$dir/base").union(delta)
-          .groupBy("event_type", "bucket").agg(max("r").as("r"))
-          .write.mode("overwrite").parquet(s"$dir/merged")
-        new java.io.File(s"$dir/_GRAFT_INDEX_READY").createNewFile()
-      }
+        .write.parquet(s"$dir/base")
+      val delta = Hll.registers(ev.filter(col("event_id") % 2 === 1),
+        Seq("event_type"), col("user_id"))
+      s.read.parquet(s"$dir/base").union(delta)
+        .groupBy("event_type", "bucket").agg(max("r").as("r"))
+        .write.parquet(s"$dir/merged")
     }
     Hll.sketch(s.read.parquet(s"$dir/merged"), Seq("event_type"))
   }
 
   // --- q122: incremental CMS maintenance over persisted state ---------------
-
-  private val cmsMaintLock = new Object
 
   /** q122: the CMS twin of q118 — frequency-sketch state rolled forward
     * at delta cost, exercising the OTHER merge law (cell-wise SUM, where
@@ -559,24 +550,18 @@ object Stats {
   def cmsIncremental(s: SparkSession, d: String): DataFrame = {
     import graft.operators.Cms
     val ev = Tables.events(s, d)
-    val dir = Extensions.indexCacheDir("graft-cms-cache", d, "events", "d4w2048")
-    cmsMaintLock.synchronized {
-      if (!new java.io.File(s"$dir/_GRAFT_INDEX_READY").exists()) {
-        Cms.sketch(ev.filter(col("event_id") % 2 === 0), col("user_id"))
-          .write.mode("overwrite").parquet(s"$dir/base")
-        s.read.parquet(s"$dir/base")
-          .union(Cms.sketch(ev.filter(col("event_id") % 2 === 1), col("user_id")))
-          .groupBy("row", "bucket").agg(sum("cnt").as("cnt"))
-          .write.mode("overwrite").parquet(s"$dir/merged")
-        new java.io.File(s"$dir/_GRAFT_INDEX_READY").createNewFile()
-      }
+    val dir = Fixtures.once(s, "graft-cms-cache", d, "events", "d4w2048") { dir =>
+      Cms.sketch(ev.filter(col("event_id") % 2 === 0), col("user_id"))
+        .write.parquet(s"$dir/base")
+      s.read.parquet(s"$dir/base")
+        .union(Cms.sketch(ev.filter(col("event_id") % 2 === 1), col("user_id")))
+        .groupBy("row", "bucket").agg(sum("cnt").as("cnt"))
+        .write.parquet(s"$dir/merged")
     }
     s.read.parquet(s"$dir/merged")
   }
 
   // --- q124: incremental Bloom maintenance over persisted state -------------
-
-  private val bloomMaintLock = new Object
 
   /** q124: the Bloom member of the roll-forward trio — the q114 filter
     * served from persisted, incrementally maintained word state,
@@ -592,19 +577,15 @@ object Stats {
   def bloomIncremental(s: SparkSession, d: String): DataFrame = {
     import graft.operators.Bloom
     val cust = Tables.customer(s, d)
-    val dir = Extensions.indexCacheDir("graft-bloom-cache", d, "customer", "seg")
-    bloomMaintLock.synchronized {
-      if (!new java.io.File(s"$dir/_GRAFT_INDEX_READY").exists()) {
-        Bloom.state(cust.filter(col("c_custkey") % 2 === 0),
-            col("c_custkey"), Seq("c_mktsegment"))
-          .write.mode("overwrite").parquet(s"$dir/base")
-        val delta = Bloom.state(cust.filter(col("c_custkey") % 2 === 1),
+    val dir = Fixtures.once(s, "graft-bloom-cache", d, "customer", "seg") { dir =>
+      Bloom.state(cust.filter(col("c_custkey") % 2 === 0),
           col("c_custkey"), Seq("c_mktsegment"))
-        s.read.parquet(s"$dir/base").union(delta)
-          .groupBy("c_mktsegment", "word").agg(bit_or(col("bits32")).as("bits32"))
-          .write.mode("overwrite").parquet(s"$dir/merged")
-        new java.io.File(s"$dir/_GRAFT_INDEX_READY").createNewFile()
-      }
+        .write.parquet(s"$dir/base")
+      val delta = Bloom.state(cust.filter(col("c_custkey") % 2 === 1),
+        col("c_custkey"), Seq("c_mktsegment"))
+      s.read.parquet(s"$dir/base").union(delta)
+        .groupBy("c_mktsegment", "word").agg(bit_or(col("bits32")).as("bits32"))
+        .write.parquet(s"$dir/merged")
     }
     s.read.parquet(s"$dir/merged")
   }
@@ -1147,18 +1128,10 @@ object Stats {
   // the sums schema or the daily frame's semantics change
   private[queries] val trendCacheVersion = "t1"
 
-  private def trendStateDir(d: String): String =
-    Extensions.indexCacheDir("graft-trend-state", d, "lineitem",
-      s"xlt$trendSplitDay$trendCacheVersion")
-
-  private val trendStateLock = new Object
-
   def trendIncremental(s: SparkSession, d: String): DataFrame = {
-    val dir = trendStateDir(d)
-    trendStateLock.synchronized {
-      if (!new java.io.File(s"$dir/_SUCCESS").exists())
-        trendSums(trendDaily(s, d).filter(col("x") < trendSplitDay))
-          .write.mode("overwrite").parquet(dir)
+    val dir = Fixtures.once(s, "graft-trend-state", d, "lineitem",
+        s"xlt$trendSplitDay$trendCacheVersion") { dir =>
+      trendSums(trendDaily(s, d).filter(col("x") < trendSplitDay)).write.parquet(dir)
     }
     val oldState = s.read.parquet(dir)
     val delta = trendSums(trendDaily(s, d).filter(col("x") >= trendSplitDay))

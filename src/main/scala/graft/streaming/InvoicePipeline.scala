@@ -31,24 +31,6 @@ object InvoicePipeline {
       kmeansCenters: Seq[Seq[Double]], kmeansThreshold: Double,
       bisectingCenters: Seq[Seq[Double]], bisectingThreshold: Double)
 
-  /** S2: Kafka source wrapper (connector jar required at runtime). */
-  def kafkaLines(spark: SparkSession, brokers: String, topic: String): Dataset[String] = {
-    import spark.implicits._
-    spark.readStream.format("kafka")
-      .option("kafka.bootstrap.servers", brokers)
-      .option("subscribe", topic)
-      .load()
-      .selectExpr("CAST(value AS STRING)").as[String]
-  }
-
-  /** K1: Kafka sink for a single-column value batch. */
-  def toKafka(batch: DataFrame, brokers: String, topic: String): Unit =
-    batch.selectExpr("CAST(NULL AS STRING) AS key", "value")
-      .write.format("kafka")
-      .option("kafka.bootstrap.servers", brokers)
-      .option("topic", topic)
-      .save()
-
   /** Classify + score one micro-batch of finished invoices and fan out. */
   def routeBatch(models: Models, sinks: InvoiceSinks)(batch: Dataset[InvoiceResult], batchId: Long): Unit = {
     val df = batch.toDF().persist()
@@ -158,12 +140,10 @@ object InvoicePipeline {
 
   /** Unified-sink variant of run: one (topic, value) DataFrame per trigger.
     *
-    * `relationalParse` swaps the typed univocity route for the codegen
-    * from_csv route — identical on well-formed and numeric-failure lines
-    * (parity-tested). On the MemoryStream throughput rig the TYPED route
-    * measured faster (37.5k vs 23.9k lines/s: from_csv plus the regex
-    * field-count guard outweigh the codegen win at this row width), so
-    * typed is the default; the relational path serves SQL-only deployments.
+    * Lines are parsed by the typed univocity route ([[PurchaseCsv.route]]):
+    * on the MemoryStream throughput rig it measured faster than a
+    * relational `from_csv` route (37.5k vs 23.9k lines/s: from_csv plus a
+    * regex field-count guard outweigh the codegen win at this row width).
     *
     * Sessions expire on [[Sessionizer.expiresAt]], rounded to the grid of
     * `trigger` when it is a processing-time trigger. */
@@ -174,7 +154,6 @@ object InvoicePipeline {
       checkpointDir: String,
       sessionTimeout: String = Sessionizer.DefaultTimeout,
       trigger: Trigger = Trigger.ProcessingTime("20 seconds"),
-      relationalParse: Boolean = false,
       // swap the sessionizer onto the transformWithState state machine
       // (SessionizerTws.ProcTimeSessionProcessor — ListState appends per
       // batch instead of GroupState blob rewrites); same semantics, used
@@ -182,9 +161,7 @@ object InvoicePipeline {
       tws: Boolean = false)
       (implicit spark: SparkSession): StreamingQuery = {
     import spark.implicits._
-    val events =
-      if (relationalParse) PurchaseCsv.routeRelational(lines)
-      else lines.flatMap(PurchaseCsv.route _)
+    val events = lines.flatMap(PurchaseCsv.route _)
     val expiryMs = Sessionizer.durationMs(sessionTimeout)
     val triggerMs = trigger match {
       case p: ProcessingTimeTrigger => p.intervalMs

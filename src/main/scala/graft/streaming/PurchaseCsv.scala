@@ -82,60 +82,6 @@ object PurchaseCsv {
     case Bad(_, _, false)         => None
   }
 
-  /** Fully-relational parse + route via the Catalyst `from_csv` expression
-    * (CsvToStructs) — the whole stage codegens, no typed closure.
-    *
-    * Trade-off vs `route`: univocity exposes the raw field COUNT, which
-    * quirk Q4 needs to distinguish "<8 fields" (silent drop) from "8 fields
-    * with empty trailing values"; from_csv pads missing trailing fields with
-    * nulls, so this path treats rows with a missing mandatory tail position
-    * as drops too. For well-formed 8-field lines (including quoted commas)
-    * and numeric-failure lines the two paths agree exactly — property-tested
-    * in ParserProperties. Use this one for throughput, `route` for
-    * quirk-exact parity.
-    */
-  def routeRelational(lines: org.apache.spark.sql.Dataset[String])
-                     (implicit spark: org.apache.spark.sql.SparkSession)
-      : org.apache.spark.sql.Dataset[LineEvent] = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val raw = lines.toDF("value")
-    val schema = "f0 STRING, f1 STRING, f2 STRING, f3 STRING, f4 STRING, f5 STRING, f6 STRING, f7 STRING"
-    raw
-      .filter(length(trim(col("value"))) > 0)
-      .withColumn("p", from_csv(col("value"), org.apache.spark.sql.types.StructType.fromDDL(schema),
-        Map("mode" -> "PERMISSIVE")))
-      // all-8-positions-present analog of univocity's field COUNT: strip
-      // quoted segments (commas inside quotes are not separators, and `""`
-      // empty-quoted fields vanish cleanly), then require >= 7 top-level
-      // commas. This accepts 8-field lines whatever their trailing field
-      // looks like (empty, `""`, quoted-with-commas) and drops shorter ones
-      // — from_csv alone can't distinguish "8th field empty" from "8th
-      // field missing" because it null-pads trailing positions.
-      // f7 non-null already implies 8 fields, and codegen short-circuits
-      // the OR, so the regex count only runs on the rare empty-tail lines.
-      .filter(col("p.f0").isNotNull &&
-        (col("p.f7").isNotNull ||
-          size(split(regexp_replace(col("value"), "\"[^\"]*\"", ""), ",", -1)) >= 8))
-      .withColumn("qty", expr("try_cast(p.f3 AS INT)"))
-      .withColumn("price", expr("try_cast(p.f5 AS DOUBLE)"))
-      .select(
-        col("p.f0").as("invoiceNo"),
-        when(col("qty").isNotNull && col("price").isNotNull,
-          struct(
-            col("p.f0").as("invoiceNo"),
-            col("qty").as("quantity"),
-            col("p.f4").as("invoiceDate"),
-            col("price").as("unitPrice"),
-            col("p.f6").as("customerID"),
-            col("p.f7").as("country"))).as("purchase"),
-        when(col("qty").isNull || col("price").isNull,
-          concat(lit("parse error: "),
-            when(col("qty").isNull, concat(lit("For input string: \""), coalesce(col("p.f3"), lit("")), lit("\"")))
-              .otherwise(concat(lit("For input string: \""), coalesce(col("p.f5"), lit("")), lit("\""))))).as("errorReason"))
-      .as[LineEvent]
-  }
-
   /** F2: hour of "M/d/yyyy H:mm", -1.0 when unparsable
     * (InvoicePipeline.scala:495-498). */
   def extractHour(invoiceDate: String): Double = {

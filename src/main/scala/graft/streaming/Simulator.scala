@@ -9,7 +9,9 @@ import scala.util.Random
   * broker in the test environment, this replays to a directory consumed by
   * Spark's file streaming source (`spark.readStream.text(dir)`), which
   * preserves the essential property — lines arrive in timed micro-batches
-  * keyed by arrival file. A Kafka variant is a `toKafka` swap away.
+  * keyed by arrival file. For a Kafka topic, write each line as a
+  * record value; [[InvoicePipeline.runUnified]]'s (topic, value) output is
+  * already in the shape a Kafka sink writes.
   */
 object Simulator {
 

@@ -57,7 +57,7 @@ object StateScaleMain {
     val q = InvoicePipeline.runUnified(input.toDS(), models, sink, ckpt,
       sessionTimeout = "10 minutes",
       trigger = Trigger.ProcessingTime("1 second"),
-      relationalParse = false, tws = useTws)
+      tws = useTws)
 
     // NB: processAllAvailable() hangs under ProcessingTimeTimeout (every
     // trigger forces a batch, the no-new-data latch never sticks) — poll

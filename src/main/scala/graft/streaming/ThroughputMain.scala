@@ -57,14 +57,10 @@ object ThroughputMain {
       val emitted = new java.util.concurrent.atomic.AtomicLong()
       val sink: (org.apache.spark.sql.DataFrame, Long) => Unit =
         (b, _) => emitted.addAndGet(b.count())
-      // typed univocity route: measured FASTER than the from_csv relational
-      // parse on this stream (37.5k vs 23.9k lines/s same-load A/B) — the
-      // relational path pays from_csv + the regex field-count guard per
-      // line, while the typed flatMap is one tight parser call.
       val q = InvoicePipeline.runUnified(input.toDS(), models, sink, ckpt,
         sessionTimeout = "2 seconds",
         trigger = Trigger.ProcessingTime("1 second"),
-        relationalParse = false, tws = useTws)
+        tws = useTws)
 
       val lines = (0 until nLines).map { i =>
         val inv = i % nInvoices
@@ -99,7 +95,7 @@ object ThroughputMain {
       val q = InvoicePipeline.runUnified(input.toDS(), models, sink, ckpt,
         sessionTimeout = "2 seconds",
         trigger = Trigger.ProcessingTime("1 second"),
-        relationalParse = false, tws = useTws)
+        tws = useTws)
 
       // contiguous invoices: invoice i owns lines [i*lpi, (i+1)*lpi)
       def line(i: Int): String = {

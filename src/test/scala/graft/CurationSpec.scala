@@ -623,7 +623,7 @@ class CurationSpec extends AnyFunSuite {
 
   test("q85: the day-1 base index is built once and reused") {
     Curation.incrementalVocab(spark, sf).count() // ensure built
-    val success = new java.io.File(s"${Curation.vocabIndexDir(sf)}/_SUCCESS")
+    val success = new java.io.File(Curation.vocabIndex(spark, sf), Fixtures.Marker)
     assert(success.exists(), "persisted base index must exist after a run")
     val mtime = success.lastModified()
     Curation.incrementalVocab(spark, sf).count()
@@ -681,13 +681,11 @@ class CurationSpec extends AnyFunSuite {
     assert(rebuild.exceptAll(append).isEmpty && append.exceptAll(rebuild).isEmpty,
       "append path must reproduce the full-corpus rebuild exactly")
     // second call reuses the persisted day-1 pack + carry, not a rebuild
-    val dirRoot = new java.io.File("/root/repo/target/graft-pack-state")
-    val packedSuccess = dirRoot.listFiles()
-      .filter(_.getName.contains("sf0.001")).map(f => new java.io.File(f, "packed/_SUCCESS"))
-      .find(_.exists()).get
-    val mtime = packedSuccess.lastModified()
+    val marker = new java.io.File(Curation.packState(spark, sf), Fixtures.Marker)
+    assert(marker.exists(), "persisted day-1 state must exist after a run")
+    val mtime = marker.lastModified()
     Curation.sequencePackIncremental(spark, sf).count()
-    assert(packedSuccess.lastModified() === mtime,
+    assert(marker.lastModified() === mtime,
       "a second run must reuse the persisted day-1 state, not rebuild it")
   }
 

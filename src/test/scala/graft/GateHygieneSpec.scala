@@ -97,7 +97,7 @@ class GateHygieneSpec extends AnyFunSuite {
     val expected =
       f"Registry: $n queries (q01..q$maxQ%02d), $nOracle with DuckDB oracles."
     val readme = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/repo/README.md")), "UTF-8")
+      java.nio.file.Paths.get("README.md")), "UTF-8")
     assert(readme.contains(expected),
       s"README.md must contain the generated inventory line:\n  $expected")
   }
@@ -109,7 +109,7 @@ class GateHygieneSpec extends AnyFunSuite {
     val expected = s"Correctness: **${SparkEntry.oracleSql.size}/" +
       s"${SparkEntry.registry.size}** DuckDB-oracle hash-exact"
     val readme = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/repo/README.md")), "UTF-8")
+      java.nio.file.Paths.get("README.md")), "UTF-8")
     assert(readme.contains(expected),
       s"README.md correctness counter must read:\n  $expected")
   }
@@ -120,7 +120,7 @@ class GateHygieneSpec extends AnyFunSuite {
     // "driver-measured (round N, `BENCH_rNN.json`): **X s" must now match
     // the value inside that very file — a lying or stale number is red.
     val readme = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/repo/README.md")), "UTF-8")
+      java.nio.file.Paths.get("README.md")), "UTF-8")
     val claim =
       """driver-measured \(round (\d+), `BENCH_r(\d+)\.json`\): \*\*([\d.]+) s""".r
     val claims = claim.findAllMatchIn(readme).toSeq
@@ -131,7 +131,7 @@ class GateHygieneSpec extends AnyFunSuite {
       val (round, file, stated) = (m.group(1), m.group(2), m.group(3).toDouble)
       assert(round.toInt === file.toInt, s"round $round cites BENCH_r$file")
       val json = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"/root/repo/BENCH_r$file.json")), "UTF-8")
+        java.nio.file.Paths.get(s"BENCH_r$file.json")), "UTF-8")
       val v = """"parsed"\s*:\s*\{[^}]*"value"\s*:\s*([\d.]+)""".r
         .findFirstMatchIn(json).map(_.group(1).toDouble)
       assert(v.isDefined, s"BENCH_r$file.json has no parsed.value")

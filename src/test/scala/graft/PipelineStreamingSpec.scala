@@ -65,10 +65,7 @@ class PipelineStreamingSpec extends AnyFunSuite {
     // gate ran in the first test → fixture exists; read each SLICE (its
     // part files together — batches take whole slices: parts share their
     // slice's mtime and maxFilesPerTrigger scales by SliceParts)
-    val dirField = PipelineReplay.getClass.getDeclaredMethods
-      .find(_.getName.contains("pipelineReplayDir")).get
-    dirField.setAccessible(true)
-    val dir = dirField.invoke(PipelineReplay, sf).asInstanceOf[String]
+    val dir = PipelineReplay.ensurePipelineReplay(spark, sf)
     def sliceParts(i: Int) = new java.io.File(dir).listFiles()
       .filter(_.getName.matches(f"slice0$i%d_p[0-9]+\\.parquet"))
       .map(_.getAbsolutePath)

@@ -82,13 +82,12 @@ class PqSpec extends AnyFunSuite {
     val queries = emb.filter(col("vec_id") < 10)
     val served = graft.queries.Extensions.ivfPqTopKQ(spark, sf01)
     // the index the gate row just (re)used: codes + cell, no raw vectors
-    val dir = new java.io.File("/root/repo/target/graft-ivfpq-cache")
-      .listFiles().filter(_.getName.contains("sf0.01")).maxBy(_.lastModified)
-    val idx = spark.read.parquet(dir.toString)
+    val dir = graft.queries.Extensions.ivfPqIndex(spark, sf01)
+    val idx = spark.read.parquet(dir)
     assert(idx.columns.sorted.toSeq === Seq("cell", "codes", "vec_id"),
       s"index must store codes only, got ${idx.columns.mkString(",")}")
     // partition pruning: the probe's scan carries a cell PartitionFilter
-    val plan = graft.operators.Pq.ivfPqTopK(dir.toString, emb, queries,
+    val plan = graft.operators.Pq.ivfPqTopK(dir, emb, queries,
       graft.ml.PinnedIvfCenters.values, books, k = 5, nProbe = 4,
       shortlist = graft.operators.Pq.rerankShortlist)(spark)
       .queryExecution.executedPlan.toString

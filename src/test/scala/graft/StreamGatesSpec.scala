@@ -68,7 +68,7 @@ class StreamGatesSpec extends AnyFunSuite {
       // the sharp edge: invoices wholly inside the bootstrap window
       // (slices 1-2) have NO streamed events — they emit only because the
       // engine invokes the update fn once for initial-state-only keys
-      val dir = PipelineReplay.pipelineReplayDir(sf)
+      val dir = PipelineReplay.ensurePipelineReplay(spark, sf)
       def invoices(names: Seq[String]) = spark.read
         .parquet(names.map(n => s"$dir/$n"): _*)
         .select(split(col("value"), ",").getItem(0).as("invoice_no"))
@@ -237,7 +237,7 @@ class StreamGatesSpec extends AnyFunSuite {
         sessionTimeout = "2 seconds",
         trigger = org.apache.spark.sql.streaming.Trigger
           .ProcessingTime("500 milliseconds"),
-        relationalParse = false, tws = tws)
+        tws = tws)
       val q = if (tws) Gates.start(spark, tws = true)(start()) else start()
       try {
         input.addData(lines)
