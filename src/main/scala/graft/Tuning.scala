@@ -122,8 +122,7 @@ object Tuning {
     *  1. fileChecksum (new in 4.1, default on) writes and reads a paired
     *     checksum object for every checkpoint file, doubling file count and
     *     round-trips at any scale. State-file integrity is already covered
-    *     by RocksDB's block checksums. Re-enable with
-    *     SPARK_GRAFT_CHECKPOINT_CHECKSUM=1.
+    *     by RocksDB's block checksums.
     *  2. The default FileContext-based manager on a file: scheme forks a
     *     subprocess per atomic rename. The FileSystem-based manager renames
     *     in the JVM; its caveat (rename is not atomic on some object
@@ -131,11 +130,10 @@ object Tuning {
     *     checkpointing to an object store keeps Spark's default.
     * At session level this also covers the `statestore`-source reads that
     * run outside a gate (q229-q241 introspection, TWS snapshot reads). */
-  private[graft] val checkpointIoConf: Seq[(String, String)] =
-    (if (sys.env.get("SPARK_GRAFT_CHECKPOINT_CHECKSUM").contains("1")) Nil
-     else Seq("spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")) :+
-      ("spark.sql.streaming.checkpointFileManagerClass" ->
-        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
+  private[graft] val checkpointIoConf: Seq[(String, String)] = Seq(
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
 
   def applyCheckpointIoDefaults(s: org.apache.spark.sql.SparkSession): Unit =
     checkpointIoConf.foreach { case (k, v) => s.conf.set(k, v) }

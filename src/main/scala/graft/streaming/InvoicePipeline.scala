@@ -6,8 +6,9 @@ import org.apache.spark.sql.execution.streaming.ProcessingTimeTrigger
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.ml.Anomaly
 
-/** Where each of the four result streams goes (ST10/K1). In production each
-  * is a Kafka topic; tests inject in-memory collectors. */
+/** Where each of the four result streams goes (ST10/K1), one sink per
+  * reference Kafka topic: the sinks of [[InvoicePipeline.routeBatch]], the
+  * reference formulation the single-pass router is tested against. */
 trait InvoiceSinks extends Serializable {
   def erroneous(batch: DataFrame, batchId: Long): Unit
   def cancellations(batch: DataFrame, batchId: Long): Unit
@@ -19,8 +20,8 @@ trait InvoiceSinks extends Serializable {
   *
   * One stateful query, one `foreachBatch` router — NOT four independent
   * queries, which would each run their own copy of the session state store
-  * (SURVEY.md §7 hard parts). The batch DataFrame is persisted across the
-  * 4-way fan-out so the sessionizer output is computed once per trigger.
+  * (SURVEY.md §7 hard parts). The router tags each result row with its
+  * topic, so one write per trigger serves all four result streams.
   */
 object InvoicePipeline {
 
@@ -31,7 +32,10 @@ object InvoicePipeline {
       kmeansCenters: Seq[Seq[Double]], kmeansThreshold: Double,
       bisectingCenters: Seq[Seq[Double]], bisectingThreshold: Double)
 
-  /** Classify + score one micro-batch of finished invoices and fan out. */
+  /** Classify + score one micro-batch of finished invoices and fan out to
+    * four sinks: the reference formulation (persist, then per sink an
+    * isEmpty and a write). UnifiedRouterSpec checks [[routeBatchUnified]]
+    * against it. */
   def routeBatch(models: Models, sinks: InvoiceSinks)(batch: Dataset[InvoiceResult], batchId: Long): Unit = {
     val df = batch.toDF().persist()
     try {
@@ -104,41 +108,8 @@ object InvoicePipeline {
         .otherwise(col("invoiceNo")).as("value"))
   }
 
-  /** Compatibility adapter: split a unified (topic, value) batch back into
-    * the 4-sink API. Classification + scoring ran ONCE upstream in the
-    * single-pass router; this only pays one persist + four cheap topic
-    * filters over the already-tagged output. */
-  def adaptUnified(sinks: InvoiceSinks)(batch: DataFrame, batchId: Long): Unit = {
-    val df = batch.persist()
-    try {
-      def emit(topic: String, f: (DataFrame, Long) => Unit): Unit = {
-        val sub = df.filter(col("topic") === topic).select(col("value"))
-        if (!sub.isEmpty) f(sub, batchId)
-      }
-      emit("facturas_erroneas", sinks.erroneous)
-      emit("cancelaciones", sinks.cancellations)
-      emit("anomalias_kmeans", sinks.anomaliesKMeans)
-      emit("anomalias_bisect_kmeans", sinks.anomaliesBisecting)
-    } finally df.unpersist()
-  }
-
-  /** ST1/ST2: run the full pipeline over a raw-line stream. The DEFAULT
-    * path is the unified single-pass router (one tagged projection per
-    * trigger); the 4-sink API is served through adaptUnified. `routeBatch`
-    * remains only as the classic per-sink formulation, equivalence-tested
-    * in UnifiedRouterSpec. */
-  def run(
-      lines: Dataset[String],
-      models: Models,
-      sinks: InvoiceSinks,
-      checkpointDir: String,
-      sessionTimeout: String = Sessionizer.DefaultTimeout,
-      trigger: Trigger = Trigger.ProcessingTime("20 seconds"))
-      (implicit spark: SparkSession): StreamingQuery =
-    runUnified(lines, models, adaptUnified(sinks), checkpointDir,
-      sessionTimeout, trigger)
-
-  /** Unified-sink variant of run: one (topic, value) DataFrame per trigger.
+  /** ST1/ST2: run the full pipeline over a raw-line stream, handing `sink`
+    * one (topic, value) DataFrame per trigger ([[routeBatchUnified]]).
     *
     * Lines are parsed by the typed univocity route ([[PurchaseCsv.route]]):
     * on the MemoryStream throughput rig it measured faster than a
@@ -157,7 +128,7 @@ object InvoicePipeline {
       // swap the sessionizer onto the transformWithState state machine
       // (SessionizerTws.ProcTimeSessionProcessor — ListState appends per
       // batch instead of GroupState blob rewrites); same semantics, used
-      // by the throughput/state-scale rigs for the fMGWS-vs-TWS pair
+      // by RigMain for the fMGWS-vs-TWS pair
       tws: Boolean = false)
       (implicit spark: SparkSession): StreamingQuery = {
     import spark.implicits._

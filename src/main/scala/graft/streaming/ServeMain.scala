@@ -1,26 +1,26 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, when}
 import org.apache.spark.sql.streaming.Trigger
 
 /** Serving demo — the reference's start_pipeline.sh + simulator analog
   * (SURVEY.md §7 step 4): load a model, run the streaming pipeline over a
-  * file source, replay purchase lines into it and fan results out to four
-  * parquet sink directories.
+  * file source, replay purchase lines into it and write each micro-batch's
+  * (topic, value) rows once, partitioned by topic: one `topic=<name>`
+  * directory per reference Kafka topic.
   *
   * With `modelDir` it scores against the artifacts of graft.ml.TrainingMain
   * (`model/` and `threshold`); without, against the reference's pinned
   * KMeans model ([[graft.ml.PinnedKmeansModel]]). It stops the query
-  * between two triggers once every sink holds the rows that a batch replay
+  * between two triggers once every topic holds the rows that a batch replay
   * of the same lines routes to it (or after 120 s, saying so).
   *
   * Usage: runMain graft.streaming.ServeMain <workDir> [modelDir]
   */
 object ServeMain {
-  private val topicSink = scala.collection.immutable.ListMap(
-    "facturas_erroneas" -> "erroneous", "cancelaciones" -> "cancellations",
-    "anomalias_kmeans" -> "anomalies_kmeans",
-    "anomalias_bisect_kmeans" -> "anomalies_bisect")
+  private val Topics = Seq("facturas_erroneas", "cancelaciones",
+    "anomalias_kmeans", "anomalias_bisect_kmeans")
 
   def main(args: Array[String]): Unit = {
     val workDir = args.headOption.getOrElse("/tmp/graft-serve")
@@ -45,21 +45,18 @@ object ServeMain {
     val inDir = s"$workDir/in"
     val outDir = s"$workDir/out"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
-    // rows each sink has written, counted on the driver after each write
+    // rows written per topic, observed in the write's own job
     val written = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-    def sink(name: String): (DataFrame, Long) => Unit = (b, _) => {
-      b.write.mode("append").parquet(s"$outDir/$name")
-      written.merge(name, b.count(), (x, y) => x + y)
-    }
-    val sinks = new InvoiceSinks {
-      def erroneous(b: DataFrame, id: Long): Unit = sink("erroneous")(b, id)
-      def cancellations(b: DataFrame, id: Long): Unit = sink("cancellations")(b, id)
-      def anomaliesKMeans(b: DataFrame, id: Long): Unit = sink("anomalies_kmeans")(b, id)
-      def anomaliesBisecting(b: DataFrame, id: Long): Unit = sink("anomalies_bisect")(b, id)
+    val sink: (DataFrame, Long) => Unit = (batch, _) => {
+      val seen = Observation()
+      val counts = Topics.map(t => count(when(col("topic") === t, 1)).as(t))
+      batch.observe(seen, counts.head, counts.tail: _*)
+        .write.mode("append").partitionBy("topic").parquet(outDir)
+      seen.get.foreach { case (t, n: Long) => written.merge(t, n, (x, y) => x + y) }
     }
 
-    val query = InvoicePipeline.run(
-      spark.readStream.textFile(inDir), models, sinks, s"$workDir/ckpt",
+    val query = InvoicePipeline.runUnified(
+      spark.readStream.textFile(inDir), models, sink, s"$workDir/ckpt",
       sessionTimeout = "2 seconds",
       trigger = Trigger.ProcessingTime("500 milliseconds"))
 
@@ -78,16 +75,16 @@ object ServeMain {
       "560902,S1,NOCUST,2,7/19/2011 12:19,5.0,,Spain")
     Simulator.replayToDir(lines.iterator, inDir, linesPerFile = 50)
 
-    // the batch twin routes the same lines: the row count each sink must
+    // the batch twin routes the same lines: the row count each topic must
     // reach once every replayed invoice has expired
     val expected = {
       import spark.implicits._
       InvoicePipeline.routeBatchUnified(models)(
           Sessionizer.sessionizeBatch(lines.toDS().flatMap(PurchaseCsv.route _)))
         .groupBy("topic").count().collect()
-        .map(r => topicSink(r.getString(0)) -> r.getLong(1)).toMap
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
     }
-    def complete = expected.forall { case (name, n) => written.getOrDefault(name, 0L) >= n }
+    def complete = expected.forall { case (t, n) => written.getOrDefault(t, 0L) >= n }
     val deadline = System.currentTimeMillis() + 120000L
     while (!complete && query.isActive && System.currentTimeMillis() < deadline)
       Thread.sleep(100)
@@ -95,10 +92,10 @@ object ServeMain {
     // stop between triggers, so no batch is cut off mid-way
     while (query.isActive && query.status.isTriggerActive) Thread.sleep(5)
     query.stop()
-    topicSink.values.foreach { s0 =>
-      val n = try spark.read.parquet(s"$outDir/$s0").count() catch { case _: Exception => 0L }
-      println(s"SERVE SINK $s0: $n rows")
-    }
+    val rows = try spark.read.parquet(outDir).groupBy("topic").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      catch { case _: Exception => Map.empty[String, Long] }
+    Topics.foreach(t => println(s"SERVE SINK topic=$t: ${rows.getOrElse(t, 0L)} rows"))
     spark.stop()
   }
 }

@@ -192,8 +192,8 @@ object SessionizerTws {
   /** The PROCESSING-TIME twin of [[SessionProcessor]] — the same state
     * machine as [[Sessionizer.updateSession]] (Q3 batch-scoped error
     * latch, inactivity expiry, classify at emit) on the TWS API, for the
-    * live-pipeline rigs (ThroughputMain/StateScaleMain) where the expiry
-    * clock is wall time. The 100 TB separation this exists to measure:
+    * live pipeline ([[InvoicePipeline.runUnified]], [[RigMain]]) where the
+    * expiry clock is wall time. The 100 TB separation this exists to measure:
     * per batch, the ListState pays O(new lines) appendList merges while
     * GroupState REWRITES the whole accumulated session blob — for long
     * sessions (hundreds of lines) the per-trigger write volume diverges.

@@ -169,26 +169,22 @@ class StreamingIntegrationSpec extends AnyFunSuite {
 
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[String]
+    // the router's (topic, value) rows: values per topic, in arrival order
     val collected = scala.collection.mutable.Map[String, List[String]]()
-    val sinks = new InvoiceSinks {
-      private def grab(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(_.getString(0)).toList
-      def erroneous(b: org.apache.spark.sql.DataFrame, id: Long): Unit =
-        collected.synchronized { collected("err") = collected.getOrElse("err", Nil) ++ grab(b) }
-      def cancellations(b: org.apache.spark.sql.DataFrame, id: Long): Unit =
-        collected.synchronized { collected("cancel") = collected.getOrElse("cancel", Nil) ++ grab(b) }
-      def anomaliesKMeans(b: org.apache.spark.sql.DataFrame, id: Long): Unit =
-        collected.synchronized { collected("km") = collected.getOrElse("km", Nil) ++ grab(b) }
-      def anomaliesBisecting(b: org.apache.spark.sql.DataFrame, id: Long): Unit =
-        collected.synchronized { collected("bk") = collected.getOrElse("bk", Nil) ++ grab(b) }
+    val sink: (org.apache.spark.sql.DataFrame, Long) => Unit = (b, _) => {
+      val rows = b.collect().map(r => (r.getString(0), r.getString(1)))
+      collected.synchronized {
+        rows.foreach { case (t, v) => collected(t) = collected.getOrElse(t, Nil) :+ v }
+      }
     }
+    def got(topic: String): List[String] = collected.synchronized(collected.getOrElse(topic, Nil))
     val models = InvoicePipeline.Models(
       kmeansCenters = Seq(Seq(0.0, 0.0, 0.0, 0.0, 0.0)), kmeansThreshold = 1.0,
       bisectingCenters = Seq(Seq(0.0, 0.0, 0.0, 0.0, 0.0)), bisectingThreshold = 1e12)
 
     val ckpt = java.nio.file.Files.createTempDirectory("ckpt").toString
-    val q = InvoicePipeline.run(
-      input.toDS(), models, sinks, ckpt,
+    val q = InvoicePipeline.runUnified(
+      input.toDS(), models, sink, ckpt,
       sessionTimeout = "1 second",
       trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
 
@@ -209,16 +205,11 @@ class StreamingIntegrationSpec extends AnyFunSuite {
         "I100,S2,THING,1,7/19/2011 12:20,19.99,cust7,Spain",
         "E200,S1,THING,nope,7/19/2011 12:19,1.0,cust8,Spain",
         "C300,S1,THING,-4,7/19/2011 12:19,5.0,cust9,Spain")
-      val ok = await {
-        collected.synchronized {
-          collected.getOrElse("err", Nil).nonEmpty &&
-          collected.getOrElse("cancel", Nil).nonEmpty &&
-          collected.getOrElse("km", Nil).nonEmpty
-        }
-      }
+      val ok = await(
+        Seq("facturas_erroneas", "cancelaciones", "anomalias_kmeans").forall(got(_).nonEmpty))
       val (err, cancel, km, bk) = collected.synchronized {
-        (collected.getOrElse("err", Nil), collected.getOrElse("cancel", Nil),
-         collected.getOrElse("km", Nil), collected.getOrElse("bk", Nil))
+        (got("facturas_erroneas"), got("cancelaciones"), got("anomalias_kmeans"),
+         got("anomalias_bisect_kmeans"))
       }
       assert(ok, s"sessions never emitted: collected=$collected")
       assert(err.exists(_.startsWith("E200,parse error:")), s"err=$err")
@@ -230,12 +221,8 @@ class StreamingIntegrationSpec extends AnyFunSuite {
       // same invoice — the reference removes expired state, so a duplicate
       // partial invoice is emitted (InvoicePipeline.scala:208, 243-245)
       input.addData("I100,S9,LATE LINE,2,7/19/2011 12:30,5.0,cust7,Spain")
-      val dup = await {
-        collected.synchronized {
-          collected.getOrElse("km", Nil).count(_ == "I100") >= 2
-        }
-      }
-      assert(dup, s"late line did not re-open session: km=${collected.synchronized(collected.get("km"))}")
+      val dup = await(got("anomalias_kmeans").count(_ == "I100") >= 2)
+      assert(dup, s"late line did not re-open session: km=${got("anomalias_kmeans")}")
     } finally q.stop()
   }
 }
